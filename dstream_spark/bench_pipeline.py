@@ -34,6 +34,7 @@ from dstream_spark.fixtures.transcripts import transcripts_from_events
 from dstream_spark.operators.dedup import dedup_stream
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def build_feed(
@@ -171,13 +172,10 @@ def run_dedup_sink(
     deduped = transform_stage(dedup_stream(src, watermark="30 minutes"))
     n_input = spark.read.parquet(feed_dir).count()
     t0 = time.time()
-    q = (
-        deduped.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        deduped, "append", foreach_batch=sink.process_batch,
+        checkpoint=os.path.join(work_dir, "ckpt"),
     )
-    q.awaitTermination()
     dt = time.time() - t0
     out_rows = sink.read_table(spark).count()
     return {
@@ -219,14 +217,10 @@ def run_window_sink(
     )
     n_input = spark.read.parquet(feed_dir).count()
     t0 = time.time()
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        agg, "update", foreach_batch=sink.process_batch,
+        checkpoint=os.path.join(work_dir, "ckpt"),
     )
-    q.awaitTermination()
     dt = time.time() - t0
     out_rows = sink.read_table(spark).count()
     return {

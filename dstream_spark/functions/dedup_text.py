@@ -44,21 +44,22 @@ def _shingles_py(text: str, k: int) -> list[str]:
 
 def word_shingles(text_col: str = "text", k: int = 3) -> Column:
     """Distinct word k-grams as an array<string>; EMPTY array for
-    documents shorter than k tokens and for NULL text (both match the
-    expression form below).
+    documents shorter than k tokens and for NULL text.
 
     Arrow-vectorized (guide §4.2): the original expression form
-    (split -> transform(sequence, concat_ws(slice)) -> array_distinct)
-    runs entirely in INTERPRETED higher-order-function eval — no
-    codegen — and measured 1.9 s for 50k docs at the 10x proxy where
-    the Python str.join + dict.fromkeys loop (C-speed string ops, one
-    Arrow crossing of the text column) does the same work in a
-    fraction of that. Output strings/order are bit-identical
+    (split -> when(size >= k, array_distinct(transform(sequence,
+    concat_ws(slice)))); the guard is needed because Spark's
+    sequence(1, n <= 0) is descending, not empty) runs entirely in
+    INTERPRETED higher-order-function eval — no codegen — and
+    measured 1.9 s for 50k docs at the 10x proxy where the Python
+    str.join + dict.fromkeys loop (C-speed string ops, one Arrow
+    crossing of the text column) does the same work in a fraction of
+    that. Output strings/order are bit-identical
     (first-occurrence distinct; single-space split keeps empty tokens
     on both paths; NULL text falls into the when()'s otherwise branch
     — size(NULL) is NULL, a NULL condition takes otherwise — so BOTH
-    forms yield []). The expression form is kept below as
-    word_shingles_expr — the equivalence reference for tests."""
+    forms yield []). tests/test_functions.py checks the kernel against
+    a pure-Python reference of the expression's semantics."""
     key = ("shingles", k)
     if key not in _UDF_CACHE:
 
@@ -126,33 +127,6 @@ def word_chunks(text_col: str | Column = "text", w: int = 40) -> Column:
     return _UDF_CACHE[key](F.col(text_col) if isinstance(text_col, str) else text_col)
 
 
-def word_shingles_expr(text_col: str = "text", k: int = 3) -> Column:
-    """The original expression form (equivalence reference). The
-    short-doc branch matters: sequence(1, n) with n <= 0 yields the
-    DESCENDING array [1, 0] in Spark (and slice(toks, 0, k) then
-    throws), while DuckDB's generate_series(1, 0) is empty — so both
-    the crash and the oracle divergence are avoided by guarding on
-    token count."""
-    toks = F.split(F.col(text_col) if isinstance(text_col, str) else text_col, " ")
-    n = F.size(toks) - F.lit(k - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.when(F.size(toks) >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _seeded_md5(seed: int):
-    # single-arg closure: a default-arg lambda would change the arity
-    # PySpark inspects and make transform() pass the element INDEX here
-    def fn(s: Column) -> Column:
-        return F.md5(F.concat(F.lit(f"{seed}|"), s))
-
-    return fn
-
-
 def minhash_signature(shingles: Column, num_perm: int = NUM_PERM) -> list[Column]:
     """num_perm minhash values: min over md5('<seed>|' || shingle).
 
@@ -163,10 +137,10 @@ def minhash_signature(shingles: Column, num_perm: int = NUM_PERM) -> list[Column
     Lowercase-hex lexicographic order == digest-byte lexicographic
     order ('0'..'9' < 'a'..'f' is monotone in the nibble value), so
     min(hex strings) == hex(min(digests)) and results are identical
-    to the expression form (kept as minhash_signature_expr; equality
-    enforced in tests). Empty/NULL shingle arrays yield NULL minhashes
-    on both paths (array_min of an empty transform is NULL;
-    element_at on a NULL array is NULL)."""
+    to the expression form array_min(transform(shingles, g ->
+    md5('<seed>|' || g))), which tests/test_functions.py checks
+    against a pure-Python reference. Empty/NULL shingle arrays yield
+    NULL minhashes, as array_min of an empty transform does."""
     arr = _minhash_arr(shingles, num_perm)
     return [F.element_at(arr, seed + 1).alias(f"mh_{seed}") for seed in range(num_perm)]
 
@@ -202,14 +176,6 @@ def _minhash_arr(shingles: Column, num_perm: int) -> Column:
     return _UDF_CACHE[key](shingles)
 
 
-def minhash_signature_expr(shingles: Column, num_perm: int = NUM_PERM) -> list[Column]:
-    """The original expression form (equivalence reference)."""
-    return [
-        F.array_min(F.transform(shingles, _seeded_md5(seed))).alias(f"mh_{seed}")
-        for seed in range(num_perm)
-    ]
-
-
 def lsh_bands(df: DataFrame, num_perm: int = NUM_PERM, bands: int = BANDS) -> DataFrame:
     """Explode a signature table (id + mh_0..mh_{n-1}) into
     (id, band, band_hash) rows; equal band_hash ⇒ candidate pair."""
@@ -234,18 +200,11 @@ def simhash_expr(text_col: str | Column = "text", bits: int = 32) -> Column:
     bit b of token t = (nibble(md5(t), b // 4) >> (b % 4)) & 1
     simhash bit b    = 1 iff sum(2*bit - 1) > 0 over tokens
 
-    Callers should materialize the token-hash array in a prior
-    projection and pass it as ``precomputed_hexes`` when building many
-    derived columns (see q_docs_simhash).
+    The registry uses the Arrow kernel ``simhash_table``; this
+    expression form is its reference in tests/test_functions.py.
     """
     toks = F.split(F.col(text_col) if isinstance(text_col, str) else text_col, " ")
     return simhash_from_hexes(F.transform(toks, F.md5), bits)
-
-
-def token_hexes(text_col: str = "text") -> Column:
-    """md5 hex per whitespace token — materialize this once, then feed
-    simhash_from_hexes (avoids re-hashing per derived column)."""
-    return F.transform(F.split(F.col(text_col), " "), F.md5)
 
 
 def simhash_from_hexes(hexes: Column, bits: int = 32) -> Column:
@@ -254,7 +213,9 @@ def simhash_from_hexes(hexes: Column, bits: int = 32) -> Column:
         return F.instr(F.lit("0123456789abcdef"), F.substring(h, i + 1, 1)) - 1
 
     def bit_merger(b: int):
-        # two-arg closure (see _seeded_md5 note on PySpark arity)
+        # two-arg closure: PySpark reads a lambda's arity, so a
+        # default-arg lambda (s, h, b=b) would count as three arguments
+        # where aggregate()'s merge takes exactly two
         def merge(s: Column, h: Column) -> Column:
             return s + F.shiftright(nibble(h, b // 4), b % 4).bitwiseAND(F.lit(1)) * 2 - 1
 
@@ -327,40 +288,6 @@ def simhash_table(
     return df.where(F.col(text_col).isNotNull()).select(
         id_col, _UDF_CACHE[key](F.col(text_col)).alias("simhash")
     )
-
-
-def simhash_table_agg(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-) -> DataFrame:
-    """The r5 explode + partially-aggregated groupBy form (equivalence
-    reference for tests): codegen'd conditional sums, one 32/48-vote
-    row per doc through the exchange."""
-    toks = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-    toks = toks.withColumn("h", F.md5("tok")).select(
-        id_col,
-        *[
-            (F.instr(F.lit("0123456789abcdef"), F.substring("h", i + 1, 1)) - 1).alias(
-                f"nib_{i}"
-            )
-            for i in range(bits // 4)
-        ],
-    )
-
-    def bit(b: int) -> Column:
-        return F.shiftright(F.col(f"nib_{b // 4}"), b % 4).bitwiseAND(F.lit(1))
-
-    votes = toks.groupBy(id_col).agg(
-        *[F.sum(bit(b) * 2 - 1).alias(f"v_{b}") for b in range(bits)]
-    )
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        acc = acc + F.when(F.col(f"v_{b}") > 0, F.lit(2**b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return votes.select(id_col, acc.alias("simhash"))
 
 
 def _popcount64(x):

@@ -4,9 +4,8 @@ over mapInPandas.
 
 The Spark-side machinery (schema, partitioning, UDF signature, batch
 shape) is real and tested; the codec step is a deterministic fake
-gated behind ``DecodeUnavailable`` because the image/audio libraries
-are not in this container — swap ``_fake_decode`` for PIL/librosa
-decode on a real cluster.
+because no image/audio codec library is a dependency — swap
+``_fake_decode`` for PIL/librosa decode on a real cluster.
 """
 
 from __future__ import annotations
@@ -37,14 +36,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised where a real codec (PIL/librosa/ffmpeg) would be used."""
-
-
-def real_decode(payload: bytes, kind: str):  # pragma: no cover - stub
-    raise DecodeUnavailable(f"no codec for {kind} in this container; install PIL/librosa")
 
 
 def _fake_decode(payload: bytes, dim: int = 8) -> np.ndarray:

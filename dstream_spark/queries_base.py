@@ -9,8 +9,13 @@ queries_ext imports only this module — either import order works.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,8 +108,6 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, table: str, cap_bytes: int = 128
     limits; anything larger keeps the planner's shuffle strategy.
     Scale-adaptive by construction — at 100 TB these tables blow past
     the cap and the hint vanishes."""
-    import os
-
     p = os.path.join(sf_dir, f"{table}.parquet")
     try:
         size = (
@@ -147,6 +150,16 @@ def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     return df.repartition(target)
 
 
+def _scratch(tag: str) -> str:
+    """A fresh ``dstream_<tag>_*`` dir under the temp root, removed at
+    interpreter exit — not before, because DataFrames returned from it
+    read lazily (repeated harness/bench runs would otherwise grow /tmp
+    without bound)."""
+    path = tempfile.mkdtemp(prefix=f"dstream_{tag}_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def _materialize(df: DataFrame, tag: str) -> DataFrame:
     """Land a derived table in scratch parquet and read it back.
 
@@ -156,15 +169,8 @@ def _materialize(df: DataFrame, tag: str) -> DataFrame:
     tables are where that bites: they're expensive to derive and tiny
     to store. At 100 TB they are standalone pipeline artifacts anyway
     (derive once, self-join many times); this helper is the small-scale
-    form of exactly that. Scratch dirs are removed at interpreter exit
-    (repeated harness/bench invocations would otherwise grow /tmp
-    without bound)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=f"dstream_mat_{tag}_")
-    atexit.register(shutil.rmtree, path, True)
+    form of exactly that."""
+    path = _scratch(f"mat_{tag}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
 
@@ -175,14 +181,14 @@ def _scan_bytes(df: DataFrame) -> int | None:
     files. Lets broadcast decisions on DERIVED tables read REAL sizes
     the way ``maybe_broadcast`` does for source tables — size
     ESTIMATES after aggregations are unusable for this, which is why
-    the planner alone gets those joins wrong (guide §3.1)."""
-    import os
-
+    the planner alone gets those joins wrong (guide §3.1). Input files
+    come back as URIs: the path is the URI's path component,
+    percent-decoded."""
     files = df.inputFiles()
     if not files:
         return None
     try:
-        return sum(os.path.getsize(f.replace("file:", "")) for f in files)
+        return sum(os.path.getsize(unquote(urlparse(f).path)) for f in files)
     except OSError:
         return None
 

@@ -17,6 +17,7 @@ from dstream_spark.queries_base import (
     _transcripts,
     fan_out,
 )
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def q_asof_join_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,38 +358,36 @@ def q_pandas_udf_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", norm_text(F.col("text")).alias("norm_text"))
 
 
-def q_stream_tool_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream stateful interval join as a REAL streaming run
-    (both sides watermarked, ±10 min bound on conv_id), checked
-    against the batch join oracle."""
-    import uuid
-
+def _stream_agent_tool_join(spark: SparkSession, sf_dir: str, tag: str, how: str) -> DataFrame:
+    """Agent turns interval-joined (``how``) to tool turns within ±10
+    min on conv_id, both sides streamed from one time-split feed and
+    watermarked 2 hours."""
     from dstream_spark.operators.joins import interval_join
     from dstream_spark.sources.registry import changefeed
     from dstream_spark.streaming_queries import _scratch, _write_feed
 
-    feed = _scratch("sjoin")
+    feed = _scratch(tag)
     _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
     a = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     t = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     agents = a.filter(F.col("role") == "agent").select("conv_id", "turn_idx", "ts")
     tools = t.filter(F.col("tool").isNotNull()).select("conv_id", "turn_idx", "tool", "ts")
-    j = interval_join(agents, tools, lower_s=600, upper_s=600, watermark="2 hours").select(
+    return interval_join(
+        agents, tools, lower_s=600, upper_s=600, watermark="2 hours", how=how
+    )
+
+
+def q_stream_tool_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream stateful interval join as a REAL streaming run
+    (both sides watermarked, ±10 min bound on conv_id), checked
+    against the batch join oracle."""
+    j = _stream_agent_tool_join(spark, sf_dir, "sjoin", "inner").select(
         F.col("conv_id"),
         F.col("turn_idx").alias("agent_turn"),
         F.col("turn_idx_r").alias("tool_turn"),
         F.col("tool_r").alias("tool"),
     )
-    name = f"sjoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(j, "append")
 
 
 def q_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,8 +411,6 @@ def q_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: dstream correlates change events across tables
     only by relaying to a queue (docs/design/design.md:87-101); this
     is the in-engine form."""
-    import uuid
-
     from dstream_spark.operators.event_time import with_event_time
     from dstream_spark.sources.registry import changefeed
     from dstream_spark.streaming_queries import _scratch, _write_feed
@@ -446,16 +443,7 @@ def q_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.tool_r").alias("tool"),
         )
     )
-    name = f"sasof_{uuid.uuid4().hex[:8]}"
-    q = (
-        picked.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(picked, "append")
 
 
 def q_conv_gap_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -545,36 +533,13 @@ def q_stream_tool_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boundary). At 10^12 turns this is the 'conversations the agent
     answered unaided' stream — computable only with bounded state
     because the watermark caps how long each turn waits for a tool."""
-    import uuid
-
-    from dstream_spark.operators.joins import interval_join
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
-
-    feed = _scratch("lojoin")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
-    a = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    t = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    agents = a.filter(F.col("role") == "agent").select("conv_id", "turn_idx", "ts")
-    tools = t.filter(F.col("tool").isNotNull()).select("conv_id", "turn_idx", "tool", "ts")
-    j = interval_join(
-        agents, tools, lower_s=600, upper_s=600, watermark="2 hours", how="leftOuter"
-    ).select(
+    j = _stream_agent_tool_join(spark, sf_dir, "lojoin", "leftOuter").select(
         F.col("conv_id"),
         F.col("turn_idx").alias("agent_turn"),
         F.col("turn_idx_r").alias("tool_turn"),
         F.col("tool_r").alias("tool"),
     )
-    name = f"lojoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(j, "append")
 
 
 def q_stream_tool_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,36 +557,13 @@ def q_stream_tool_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides; that two-sided delta is what the oracle proves. State
     is bounded by the interval exactly as in the inner form — full
     outer adds no retention, only the evicted-unmatched emissions."""
-    import uuid
-
-    from dstream_spark.operators.joins import interval_join
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
-
-    feed = _scratch("fojoin")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
-    a = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    t = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    agents = a.filter(F.col("role") == "agent").select("conv_id", "turn_idx", "ts")
-    tools = t.filter(F.col("tool").isNotNull()).select("conv_id", "turn_idx", "tool", "ts")
-    j = interval_join(
-        agents, tools, lower_s=600, upper_s=600, watermark="2 hours", how="fullOuter"
-    ).select(
+    j = _stream_agent_tool_join(spark, sf_dir, "fojoin", "fullOuter").select(
         F.coalesce(F.col("conv_id"), F.col("conv_id_r")).alias("conv_id"),
         F.col("turn_idx").alias("agent_turn"),
         F.col("turn_idx_r").alias("tool_turn"),
         F.col("tool_r").alias("tool"),
     )
-    name = f"fojoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(j, "append")
 
 
 def q_stream_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,28 +574,14 @@ def q_stream_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the replayed batch 0 is rejected by the cursor so every match
     emits exactly once). Oracle: the batch lead()-window CEP SQL —
     the streaming engine and a window scan must agree row-for-row."""
-    import uuid
-
     from dstream_spark.operators.cep import cep_pattern_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cep")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cep", split_by_turn=True, replay_batch0=True)
     # the generalized operator emits first_turn; this entry's oracle
     # predates the parameterization and names it user_turn
     out = cep_pattern_stream(src).withColumnRenamed("first_turn", "user_turn")
-    name = f"cep_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,26 +851,12 @@ def q_stream_cep_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery as stream_cep_pattern, different Step predicates, so a
     pattern really is configuration. Oracle: the batch lead()-window
     twin (q_cep_tool_retry's SQL)."""
-    import uuid
-
     from dstream_spark.operators.cep import TOOL_AGENT_TOOL, cep_pattern_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepretry")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepretry", split_by_turn=True, replay_batch0=True)
     out = cep_pattern_stream(src, pattern=TOOL_AGENT_TOOL)
-    name = f"cepretry_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,26 +897,12 @@ def q_stream_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Step.role_in rides the unchanged state machinery (every pattern
     form tests predicates through Step.matches), so alternation in
     streaming is pure configuration too. Oracle: the batch IN-scan."""
-    import uuid
-
     from dstream_spark.operators.cep import USER_ALT_TOOL, cep_pattern_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepalt")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepalt", split_by_turn=True, replay_batch0=True)
     out = cep_pattern_stream(src, pattern=USER_ALT_TOOL)
-    name = f"cepalt_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def _tool_version_dim(spark: SparkSession, sf_dir: str):
@@ -1084,15 +984,10 @@ def q_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     and arrival order cannot change the answer because each fact row's
     version is a function of its own event time. == the batch
     point-in-time join row-for-row."""
-    import uuid
+    from dstream_spark.streaming_queries import _feed_source
 
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
-
-    feed = _scratch("temporal")
-    _write_feed(spark, sf_dir, feed, n_batches=4)
+    src = _feed_source(spark, sf_dir, "temporal")
     dim = _tool_version_dim(spark, sf_dir)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     facts = src.filter(F.col("tool").isNotNull()).select(
         "conv_id", "turn_idx", "tool",
         F.col("ts").cast("timestamp").cast("long").alias("e"),
@@ -1105,16 +1000,7 @@ def q_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "conv_id", "turn_idx", facts.tool.alias("tool"), "version", "cum_uses"
     )
-    name = f"temporal_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(j, "append")
 
 
 FOLLOWED_BY_N_TURNS = 6  # 'A followed by B' search window (turns)
@@ -1182,31 +1068,17 @@ def q_stream_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundaries (state O(n_turns) per conversation), replays are
     cursor-rejected, and the output must equal the batch windowed-scan
     twin row-for-row."""
-    import uuid
-
     from dstream_spark.operators.cep import Step, followed_by_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepfb")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepfb", split_by_turn=True, replay_batch0=True)
     out = followed_by_stream(
         src,
         a=Step(role="user"),
         b=Step(role="tool", tool_required=True),
         n_turns=FOLLOWED_BY_N_TURNS,
     )
-    name = f"cepfb_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1262,17 +1134,10 @@ def q_stream_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, same treatment as the LEFT OUTER join's null rows. The
     replayed batch lands below the final watermark and is absorbed by
     the late filter, so it cannot re-emit flushed A-turns."""
-    import uuid
-
     from dstream_spark.operators.cep import Step, not_followed_by_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepnfb")
-    _write_feed(
-        spark, sf_dir, feed, n_batches=4, split_by_time=True, replay_batch0=True
-    )
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepnfb", split_by_time=True, replay_batch0=True)
     out = not_followed_by_stream(
         src,
         a=Step(role="user"),
@@ -1280,16 +1145,7 @@ def q_stream_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_turns=FOLLOWED_BY_N_TURNS,
         wm_delay_s=600,
     )
-    name = f"cepnfb_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,31 +1207,17 @@ def q_stream_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout (a match completes on its C-turn's arrival; a run left
     open at the stream's tail has no C row in the batch twin either),
     so the oracle is the batch scan with NO confirmability clause."""
-    import uuid
-
     from dstream_spark.operators.cep import Step, one_or_more_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepoom")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepoom", split_by_turn=True, replay_batch0=True)
     out = one_or_more_stream(
         src,
         a=Step(role="user"),
         b=Step(role="agent"),
         c=Step(tool_required=True),
     )
-    name = f"cepoom_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1432,31 +1274,17 @@ def q_stream_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate state, cursor exactly-once across a replayed batch,
     purely-in-data emission (no timeout dependence), so the oracle is
     the batch star scan with NO confirmability clause."""
-    import uuid
-
     from dstream_spark.operators.cep import Step, zero_or_more_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepzom")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepzom", split_by_turn=True, replay_batch0=True)
     out = zero_or_more_stream(
         src,
         a=Step(role="user"),
         b=Step(role="agent"),
         c=Step(tool_required=True),
     )
-    name = f"cepzom_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_cep_optional_step(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1517,28 +1345,12 @@ def q_stream_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conversation; long matches and in-data-resolved shorts are
     unconditional. The replayed batch lands below the final watermark
     and is absorbed by the late filter."""
-    import uuid
-
     from dstream_spark.operators.cep import cep_optional_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("cepopt")
-    _write_feed(
-        spark, sf_dir, feed, n_batches=4, split_by_time=True, replay_batch0=True
-    )
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "cepopt", split_by_time=True, replay_batch0=True)
     out = cep_optional_stream(src, wm_delay_s=600)
-    name = f"cepopt_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 NEAR_DUP_MAX_ROWS = 100_000  # O(n²) verifier refuses full corpora
@@ -2029,28 +1841,14 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed first batch: duplicates are eliminated (in-watermark) or
     dropped as late (behind it) — either way the output is each turn
     exactly once, matching the identity oracle."""
-    import uuid
-
     from dstream_spark.operators.dedup import dedup_stream
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source
 
-    feed = _scratch("wmdedup")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "wmdedup", split_by_time=True, replay_batch0=True)
     out = dedup_stream(src, watermark="10 minutes").select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
-    name = f"wmdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(out, "append")
 
 
 def q_docs_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

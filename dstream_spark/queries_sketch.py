@@ -35,6 +35,7 @@ from dstream_spark.functions.sketches import (
 )
 from dstream_spark.functions.sketches import rho_expr as _rho
 from dstream_spark.queries_base import Query, _t_sql, _transcripts
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def q_conv_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,20 +74,12 @@ def q_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-apply could not corrupt the sketch because max-merge is
     idempotent (the property that makes HLL safe under at-least-once
     delivery generally)."""
-    import os
-    import uuid
-
     from dstream_spark.sinks.merge import MergeSink
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source, _scratch
 
-    feed = _scratch("hllm_feed")
-    table = _scratch("hllm_table")
-    ckpt = _scratch("hllm_ckpt")
-    _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "hllm_feed", replay_batch0=True)
     sink = MergeSink(
-        table,
+        _scratch("hllm_table"),
         keys=("role", "bucket", "epoch"),
         partition_key="role",
         order_cols=("role", "bucket"),
@@ -99,13 +92,7 @@ def q_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink.process_batch(regs, batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(deposit)
-        .option("checkpointLocation", os.path.join(ckpt, f"q_{uuid.uuid4().hex[:8]}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, "append", foreach_batch=deposit, checkpoint=_scratch("hllm_ckpt"))
 
     merged = (
         sink.read_table(spark)
@@ -139,19 +126,16 @@ def q_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants (lo=0, span=32 chars) as production would pin them — a
     data-dependent scalar agg is unavailable mid-stream."""
     import os
-    import uuid
 
     from dstream_spark.sinks.merge import MergeSink
     from dstream_spark.sources.registry import changefeed
     from dstream_spark.streaming_queries import _scratch, _write_feed
 
     feed = _scratch("histm_feed")
-    table = _scratch("histm_table")
-    ckpt = _scratch("histm_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     sink = MergeSink(
-        table,
+        _scratch("histm_table"),
         keys=("role", "bin", "epoch"),
         partition_key="role",
         order_cols=("role", "bin"),
@@ -167,13 +151,7 @@ def q_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def deposit(batch_df: DataFrame, batch_id: int) -> None:
         sink.process_batch(partial(batch_df, batch_id), batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(deposit)
-        .option("checkpointLocation", os.path.join(ckpt, f"q_{uuid.uuid4().hex[:8]}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, "append", foreach_batch=deposit, checkpoint=_scratch("histm_ckpt"))
 
     # crash-replay epoch 0 at its ORIGINAL id: the marker skip must
     # reject the whole deposit — with SUM partials a double-apply
@@ -381,20 +359,12 @@ def q_stream_window_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     need the protocol. Register state is ≤256 rows per hour — at
     10^12 turns the per-window sketch is constant-size where exact
     distinct state is O(conversations)."""
-    import os
-    import uuid
-
     from dstream_spark.sinks.merge import MergeSink
-    from dstream_spark.sources.registry import changefeed
-    from dstream_spark.streaming_queries import _scratch, _write_feed
+    from dstream_spark.streaming_queries import _feed_source, _scratch
 
-    feed = _scratch("whll_feed")
-    table = _scratch("whll_table")
-    ckpt = _scratch("whll_ckpt")
-    _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "whll_feed", replay_batch0=True)
     sink = MergeSink(
-        table,
+        _scratch("whll_table"),
         keys=("w_start", "bucket", "epoch"),
         partition_key="bucket",
         order_cols=("w_start", "bucket"),
@@ -408,13 +378,7 @@ def q_stream_window_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink.process_batch(regs, batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(deposit)
-        .option("checkpointLocation", os.path.join(ckpt, f"q_{uuid.uuid4().hex[:8]}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, "append", foreach_batch=deposit, checkpoint=_scratch("whll_ckpt"))
 
     merged = (
         sink.read_table(spark)
@@ -459,19 +423,16 @@ def q_stream_window_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the commit-marker skip (not the algebra) absorbs it. State per
     hour is ≤HIST_BINS rows whatever the traffic."""
     import os
-    import uuid
 
     from dstream_spark.sinks.merge import MergeSink
     from dstream_spark.sources.registry import changefeed
     from dstream_spark.streaming_queries import _scratch, _write_feed
 
     feed = _scratch("whist_feed")
-    table = _scratch("whist_table")
-    ckpt = _scratch("whist_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     sink = MergeSink(
-        table,
+        _scratch("whist_table"),
         keys=("w_start", "bin", "epoch"),
         partition_key="bin",
         order_cols=("w_start", "bin"),
@@ -489,13 +450,7 @@ def q_stream_window_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     def deposit(batch_df: DataFrame, batch_id: int) -> None:
         sink.process_batch(partial(batch_df, batch_id), batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(deposit)
-        .option("checkpointLocation", os.path.join(ckpt, f"q_{uuid.uuid4().hex[:8]}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, "append", foreach_batch=deposit, checkpoint=_scratch("whist_ckpt"))
 
     committed_before = sink.committed_batches()
     sink.process_batch(

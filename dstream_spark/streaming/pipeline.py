@@ -34,6 +34,8 @@ import json
 import os
 import threading
 import time
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -46,6 +48,32 @@ LOCK_STALE_S = 120.0  # the reference's 2-minute stale-lease TTL
 
 class LockHeldError(RuntimeError):
     pass
+
+
+def run_stream(
+    df: DataFrame,
+    mode: str,
+    *,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """Drain ``df`` once: start an ``availableNow`` query in output
+    ``mode`` and wait for it; a failed query raises here.
+
+    With no ``foreach_batch`` the rows land in a memory sink under a
+    fresh query name and come back as ``spark.table(name)``. With one,
+    every micro-batch goes to that body and nothing is returned.
+    ``checkpoint`` is the query's checkpointLocation (Spark picks a
+    temporary one when it is None)."""
+    writer = df.writeStream.outputMode(mode).trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if foreach_batch is not None:
+        writer.foreachBatch(foreach_batch).start().awaitTermination()
+        return None
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    writer.format("memory").queryName(name).start().awaitTermination()
+    return df.sparkSession.table(name)
 
 
 class Lock:

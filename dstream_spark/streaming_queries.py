@@ -9,14 +9,17 @@ evidence that the streaming path reproduces the reference's semantics
 (ordered delivery, dedup, windowed state, exactly-once sink) for the
 same input stream.
 
-Each run uses a fresh scratch dir under /tmp (left in place: returned
-DataFrames read lazily from it).
+Each run uses fresh scratch dirs under the temp root, removed at
+interpreter exit (returned DataFrames read lazily from them). A bare
+query drains through ``run_stream``, a locked changefeed → sink
+Pipeline through ``_pipeline_drain``; the monitor and adaptive entries
+drive ``Monitor`` and ``Pipeline.run_adaptive`` themselves.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,13 +27,27 @@ from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import transcripts_from_events
 from dstream_spark.operators.cdc import cursor_dedup_stream
+from dstream_spark.queries_base import _scratch
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
-from dstream_spark.streaming.pipeline import Pipeline
+from dstream_spark.streaming.pipeline import Pipeline, run_stream
+
+CDC_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
-def _scratch(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"dstream_{tag}_")
+def _land_file(part: DataFrame, out_dir: str, b: int) -> None:
+    """Write the single-partition ``part`` as the one file
+    ``batch_<b>.parquet``, with strictly increasing mtimes: the file
+    source processes files oldest-first, giving deterministic
+    micro-batch order."""
+    tmp = os.path.join(out_dir, f".tmp_{uuid.uuid4().hex[:8]}")
+    part.write.mode("overwrite").parquet(tmp)
+    src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    dst = os.path.join(out_dir, f"batch_{b:05d}.parquet")
+    os.rename(os.path.join(tmp, src), dst)
+    shutil.rmtree(tmp)
+    mtime = 1_700_000_000 + b * 10
+    os.utime(dst, (mtime, mtime))
 
 
 def _write_feed(
@@ -101,7 +118,6 @@ def _write_feed(
     try:
         os.makedirs(out_dir, exist_ok=True)
         order = list(range(n_batches)) + ([0] if replay_batch0 else [])
-        t0 = 1_700_000_000
         for b, s in enumerate(order):
             part = (
                 sliced.filter(F.col("_slice") == s)
@@ -112,28 +128,45 @@ def _write_feed(
             part = part.coalesce(1)
             if split_by_turn:  # deterministic in-file order (single partition)
                 part = part.sortWithinPartitions("conv_id", "turn_idx")
-            tmp = os.path.join(out_dir, f".tmp_{uuid.uuid4().hex[:8]}")
-            part.write.mode("overwrite").parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(out_dir, f"batch_{b:05d}.parquet")
-            os.rename(os.path.join(tmp, src), dst)
-            import shutil
-
-            shutil.rmtree(tmp)
-            # strictly increasing mtimes: the file source processes files
-            # oldest-first, giving deterministic micro-batch order
-            os.utime(dst, (t0 + b * 10, t0 + b * 10))
+            _land_file(part, out_dir, b)
     finally:
         sliced.unpersist()
+
+
+def _feed_source(spark: SparkSession, sf_dir: str, tag: str, **split) -> DataFrame:
+    """The 4-batch transcript feed (``split`` as in ``_write_feed``)
+    landed in a scratch dir and streamed one file per micro-batch."""
+    feed = _scratch(tag)
+    _write_feed(spark, sf_dir, feed, n_batches=4, **split)
+    return changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+
+
+def _pipeline_drain(spark: SparkSession, tag: str, feed: str, ckpt: str, sink: dict) -> None:
+    """Drain ``feed`` one file per micro-batch into ``sink`` (a Pipeline
+    sink conf) through a locked ``availableNow`` Pipeline whose offsets
+    live in ``ckpt``. The pipeline is stopped, releasing its lock, even
+    when the drain fails."""
+    pipe = Pipeline(
+        spark,
+        {
+            "name": f"{tag}_{uuid.uuid4().hex[:8]}",
+            "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
+            "sink": sink,
+            "checkpoint_dir": ckpt,
+        },
+    )
+    pipe.init()
+    try:
+        pipe.run(await_termination=True)
+    finally:
+        pipe.stop()
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows per conversation computed BY THE
     STREAMING ENGINE (complete output mode), equal to the batch
     tumbling_counts oracle."""
-    feed = _scratch("tumble")
-    _write_feed(spark, sf_dir, feed, n_batches=4)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "tumble")
     agg = (
         src.groupBy(F.window("ts", "1 hour").alias("w"), "conv_id")
         .agg(
@@ -145,16 +178,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "conv_id", "n_turns", "n_agent",
         )
     )
-    name = f"stream_tumble_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(agg, "complete")
 
 
 def stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,26 +188,10 @@ def stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference documents but cannot guarantee alone
     (docs/plugins/mssql-ingester.md:84-87)."""
     feed = _scratch("eo_feed")
-    table = _scratch("eo_table")
-    ckpt = _scratch("eo_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True)
-    sink = MergeSink(table, n_partitions=8)
-    pipe = Pipeline(
-        spark,
-        {
-            "name": f"eo_{uuid.uuid4().hex[:8]}",
-            "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
-            "transforms": [],
-            "sink": {"type": "merge", "sink": sink},
-            "checkpoint_dir": os.path.join(ckpt, "q"),
-            "trigger": {"availableNow": True},
-        },
-    )
-    pipe.init()
-    q = pipe.run()
-    q.awaitTermination()
-    pipe.stop()
-    return sink.read_table(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    sink = MergeSink(_scratch("eo_table"), n_partitions=8)
+    _pipeline_drain(spark, "eo", feed, _scratch("eo_ckpt"), {"type": "merge", "sink": sink})
+    return sink.read_table(spark).select(*CDC_COLS)
 
 
 def stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,9 +218,7 @@ def stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.readStream.format("dstream_feed").option("path", feed).load()
 
     def land(df: DataFrame, batch_id: int) -> None:
-        sink.process_batch(
-            df.select("conv_id", "turn_idx", "role", "text", "tool", "ts"), batch_id
-        )
+        sink.process_batch(df.select(*CDC_COLS), batch_id)
 
     # Spark's PythonMicroBatchStream does not support AvailableNow
     # (falls back to one batch per start()), so incremental offset
@@ -229,22 +235,11 @@ def stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in held:
         os.rename(os.path.join(feed, f), os.path.join(hold_dir, f))
 
-    def run_once() -> None:
-        q = (
-            src.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(ckpt, "q"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    wave1_rows = sum(
-        spark.read.parquet(p).count() for p in wave1
-    )
+    run_stream(src, "append", foreach_batch=land, checkpoint=ckpt)
+    wave1_rows = sum(spark.read.parquet(p).count() for p in wave1)
     for f in held:
         os.rename(os.path.join(hold_dir, f), os.path.join(feed, f))
-    run_once()
+    run_stream(src, "append", foreach_batch=land, checkpoint=ckpt)
     raw = sink.protocol.data_read(spark, sink.committed_batches())
     st = raw.agg(
         F.sum(F.when(F.col("batch_id") == 0, 1).otherwise(0)).alias("b0"),
@@ -260,9 +255,7 @@ def stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"unexpected epoch layout {dict(b0=st['b0'], b1=st['b1'], total=st['total'])}"
             " — wave 1 re-read"
         )
-    return sink.read_table(spark).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
+    return sink.read_table(spark).select(*CDC_COLS)
 
 
 def _landed_turn_sliced_sink(spark: SparkSession, sf_dir: str, tag: str) -> MergeSink:
@@ -273,25 +266,9 @@ def _landed_turn_sliced_sink(spark: SparkSession, sf_dir: str, tag: str) -> Merg
     slice b — a commit history with a closed-form per-epoch content,
     which is what lets DuckDB oracle a time-travel read."""
     feed = _scratch(f"{tag}_feed")
-    table = _scratch(f"{tag}_table")
-    ckpt = _scratch(f"{tag}_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4, split_by_turn=True)
-    sink = MergeSink(table, n_partitions=8)
-    pipe = Pipeline(
-        spark,
-        {
-            "name": f"{tag}_{uuid.uuid4().hex[:8]}",
-            "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
-            "transforms": [],
-            "sink": {"type": "merge", "sink": sink},
-            "checkpoint_dir": os.path.join(ckpt, "q"),
-            "trigger": {"availableNow": True},
-        },
-    )
-    pipe.init()
-    q = pipe.run()
-    q.awaitTermination()
-    pipe.stop()
+    sink = MergeSink(_scratch(f"{tag}_table"), n_partitions=8)
+    _pipeline_drain(spark, tag, feed, _scratch(f"{tag}_ckpt"), {"type": "merge", "sink": sink})
     return sink
 
 
@@ -305,9 +282,7 @@ def stream_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the audit/debug story: 'what did the table look like when
     commit 1 published' answered from the live commit history."""
     sink = _landed_turn_sliced_sink(spark, sf_dir, "tt")
-    return sink.read_table(spark, as_of_batch=1).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
+    return sink.read_table(spark, as_of_batch=1).select(*CDC_COLS)
 
 
 def stream_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,9 +293,7 @@ def stream_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     of re-scanning the table. Complement of stream_time_travel's
     snapshot under the same closed-form slice rule (turn_idx >= 2L)."""
     sink = _landed_turn_sliced_sink(spark, sf_dir, "incr")
-    return sink.read_changes(spark, since_batch=1).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
+    return sink.read_changes(spark, since_batch=1).select(*CDC_COLS)
 
 
 def stream_resume_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,42 +308,24 @@ def stream_resume_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the restart (nothing re-applied). This is the reference's
     resume-from-cdc_offsets contract (docs/capability-inventory.md:
     179-187) driven end-to-end at the entry surface."""
-    import shutil
-
     staging = _scratch("resume_staging")
     feed = _scratch("resume_feed")
-    table = _scratch("resume_table")
-    ckpt = _scratch("resume_ckpt")
+    ckpt = _scratch("resume_ckpt")  # SAME for both waves
     _write_feed(spark, sf_dir, staging, n_batches=4)
-    os.makedirs(feed, exist_ok=True)
-    sink = MergeSink(table, n_partitions=8)
+    sink = MergeSink(_scratch("resume_table"), n_partitions=8)
 
     def run_wave(batches: list[int]) -> None:
         for b in batches:
             name = f"batch_{b:05d}.parquet"
             shutil.copy2(os.path.join(staging, name), os.path.join(feed, name))
-        pipe = Pipeline(
-            spark,
-            {
-                "name": f"resume_{uuid.uuid4().hex[:8]}",
-                "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
-                "transforms": [],
-                "sink": {"type": "merge", "sink": sink},
-                "checkpoint_dir": os.path.join(ckpt, "q"),  # SAME for both waves
-                "trigger": {"availableNow": True},
-            },
-        )
-        pipe.init()
-        q = pipe.run()
-        q.awaitTermination()
-        pipe.stop()
+        _pipeline_drain(spark, "resume", feed, ckpt, {"type": "merge", "sink": sink})
 
     run_wave([0, 1])
     committed_mid = sink.committed_batches()
     run_wave([2, 3])
     if len(sink.committed_batches()) <= len(committed_mid):
         raise RuntimeError("resume processed no new batches")
-    return sink.read_table(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    return sink.read_table(spark).select(*CDC_COLS)
 
 
 def stream_monitor_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,9 +386,8 @@ def stream_monitor_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     mon.await_all()
     for p in mon.pipelines.values():
         p.stop()
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    a = sink_a.read_table(spark).select(*cols).withColumn("src_table", F.lit("turns"))
-    b = sink_b.read_table(spark).select(*cols).withColumn("src_table", F.lit("toolcalls"))
+    a = sink_a.read_table(spark).select(*CDC_COLS).withColumn("src_table", F.lit("turns"))
+    b = sink_b.read_table(spark).select(*CDC_COLS).withColumn("src_table", F.lit("toolcalls"))
     return a.unionByName(b)
 
 
@@ -450,8 +404,6 @@ def stream_adaptive_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     it's chunked. The entry raises if the controller failed to resize
     (the adaptive half) or the second wave processed nothing (the
     resume half)."""
-    import shutil
-
     from dstream_spark.streaming.adaptive import BatchSizeController
 
     staging = _scratch("adap_staging")
@@ -489,7 +441,7 @@ def stream_adaptive_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipe.run_adaptive(controller, segments=1)
     if len(sink.committed_batches()) <= len(committed_mid):
         raise RuntimeError("resized segment processed no new batches")
-    return sink.read_table(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    return sink.read_table(spark).select(*CDC_COLS)
 
 
 def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,37 +472,10 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_commit_version", F.lit(3).cast("long"))
     )
     feed = _scratch("cdcdel_feed")
-    os.makedirs(feed, exist_ok=True)
-    t0 = 1_700_000_000
     for i, part in enumerate((v1, v2, v3)):
-        tmp = os.path.join(feed, f".tmp_{uuid.uuid4().hex[:8]}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src_file = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(feed, f"batch_{i:05d}.parquet")
-        os.rename(os.path.join(tmp, src_file), dst)
-        import shutil
-
-        shutil.rmtree(tmp)
-        os.utime(dst, (t0 + i * 10, t0 + i * 10))
-
-    table = _scratch("cdcdel_table")
-    ckpt = _scratch("cdcdel_ckpt")
-    sink = MergeSink(table, version_col="_commit_version", n_partitions=8)
-    pipe = Pipeline(
-        spark,
-        {
-            "name": f"cdcdel_{uuid.uuid4().hex[:8]}",
-            "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
-            "transforms": [],
-            "sink": {"type": "merge", "sink": sink},
-            "checkpoint_dir": os.path.join(ckpt, "q"),
-            "trigger": {"availableNow": True},
-        },
-    )
-    pipe.init()
-    q = pipe.run()
-    q.awaitTermination()
-    pipe.stop()
+        _land_file(part.coalesce(1), feed, i)
+    sink = MergeSink(_scratch("cdcdel_table"), version_col="_commit_version", n_partitions=8)
+    _pipeline_drain(spark, "cdcdel", feed, _scratch("cdcdel_ckpt"), {"type": "merge", "sink": sink})
     # crash-replay of commit 1 at its ORIGINAL epoch id: batch_id 0 is
     # already committed, so the sink's marker skip (merge.py
     # process_batch) must absorb it without touching the table
@@ -558,7 +483,7 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink.process_batch(v1, 0)
     if sink.committed_batches() != committed_before:  # survives python -O
         raise RuntimeError("same-epoch replay re-committed")
-    return sink.read_table(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    return sink.read_table(spark).select(*CDC_COLS)
 
 
 def stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,14 +497,10 @@ def stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible THROUGH the whole chain, not just through one operator.
     Session emission uses the same closure predicate as
     stream_session_windows (w_end <= final watermark)."""
-    import uuid
-
     from dstream_spark.operators.event_time import with_event_time
     from dstream_spark.operators.windows import _flatten_window
 
-    feed = _scratch("dsess")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True, replay_batch0=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "dsess", split_by_time=True, replay_batch0=True)
     deduped = (
         with_event_time(src, "ts")
         .withWatermark("ts", "30 minutes")
@@ -590,16 +511,7 @@ def stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_turns")
         )
     )
-    name = f"dsess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(agg, "append")
 
 
 def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,14 +524,10 @@ def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-reads raw turns. Emission: a daily window is final once
     its end <= final watermark; the oracle applies the same closure
     to the batch double-aggregation."""
-    import uuid
-
     from dstream_spark.operators.event_time import with_event_time
     from dstream_spark.operators.windows import _flatten_window
 
-    feed = _scratch("rollup")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    src = _feed_source(spark, sf_dir, "rollup", split_by_time=True)
     hourly = (
         with_event_time(src, "ts")
         .withWatermark("ts", "30 minutes")
@@ -633,16 +541,7 @@ def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("active_hours"),
         )
     )
-    name = f"rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        daily.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(daily, "append")
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -652,42 +551,19 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     once its window end (last event + gap) <= final watermark
     (max event time - delay); the oracle applies the same predicate to
     the gaps-and-islands batch sessions."""
-    feed = _scratch("sessw")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     from dstream_spark.operators.windows import session_stream
 
+    src = _feed_source(spark, sf_dir, "sessw", split_by_time=True)
     agg = session_stream(src, "30 minutes", keys=("conv_id",), watermark="30 minutes")
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(agg, "append")
 
 
 def stream_cursor_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The applyInPandasWithState per-conversation cursor over an
     in-order feed with a replayed batch: emits each turn exactly once
     (dstream's (LSN, Seq) cursor loop as a streaming operator)."""
-    feed = _scratch("cursor")
-    _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_turn=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    out = cursor_dedup_stream(src)
-    name = f"stream_cursor_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    src = _feed_source(spark, sf_dir, "cursor", replay_batch0=True, split_by_turn=True)
+    return run_stream(cursor_dedup_stream(src), "append")
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,23 +572,11 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from dstream_spark.operators.windows import sliding
 
-    feed = _scratch("slide")
-    _write_feed(spark, sf_dir, feed, n_batches=4)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     agg = sliding(
-        src, "1 hour", "30 minutes", keys=("role",),
+        _feed_source(spark, sf_dir, "slide"), "1 hour", "30 minutes", keys=("role",),
         aggs=[F.count(F.lit(1)).alias("n_turns")],
     )
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(agg, "complete")
 
 
 def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,13 +589,8 @@ def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingester→publisher contract for aggregated state, not just rows."""
     from dstream_spark.operators.windows import tumbling
 
-    feed = _scratch("wsink_feed")
-    table = _scratch("wsink_table")
-    ckpt = _scratch("wsink_ckpt")
-    _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     agg = tumbling(
-        src,
+        _feed_source(spark, sf_dir, "wsink_feed", split_by_time=True),
         "1 hour",
         keys=("conv_id",),
         aggs=[
@@ -741,21 +600,14 @@ def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
     )
     sink = MergeSink(
-        table,
+        _scratch("wsink_table"),
         keys=("w_start", "conv_id"),
         partition_key="conv_id",
         order_cols=("conv_id", "w_start"),
         version_col="_v",
         n_partitions=8,
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(ckpt, "q"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(agg, "update", foreach_batch=sink.process_batch, checkpoint=_scratch("wsink_ckpt"))
     return sink.read_table(spark).select("w_start", "w_end", "conv_id", "n_turns", "n_agent")
 
 
@@ -767,30 +619,19 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the same join done fully in batch — the dimension-enrichment
     pattern (CDC rows -> lookup table) the reference leaves to the
     downstream consumer."""
-    feed = _scratch("senrich")
-    _write_feed(spark, sf_dir, feed, n_batches=4)
+    src = _feed_source(spark, sf_dir, "senrich")
     dim = (
         transcripts_from_events(spark, sf_dir)
         .filter(F.col("tool").isNotNull())
         .groupBy("tool")
         .agg(F.count(F.lit(1)).alias("tool_total"))
     )
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     enriched = (
         src.filter(F.col("tool").isNotNull())
         .join(F.broadcast(dim), "tool")
         .select("conv_id", "turn_idx", "tool", "tool_total")
     )
-    name = f"senrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_stream(enriched, "append")
 
 
 def stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,27 +641,13 @@ def stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither lost nor duplicated rows for a non-primary destination —
     per-destination exactly-once, not just per-query."""
     feed = _scratch("msink_feed")
-    t_a = _scratch("msink_a")
-    t_b = _scratch("msink_b")
-    ckpt = _scratch("msink_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True)
-    sink_a = MergeSink(t_a, n_partitions=4)
-    sink_b = MergeSink(t_b, n_partitions=4)
-    pipe = Pipeline(
-        spark,
-        {
-            "name": f"msink_{uuid.uuid4().hex[:8]}",
-            "source": {"type": "changefeed", "path": feed, "max_files_per_trigger": 1},
-            "sink": {"type": "multi", "sinks": [sink_a, sink_b]},
-            "checkpoint_dir": os.path.join(ckpt, "q"),
-            "trigger": {"availableNow": True},
-        },
+    sink_a = MergeSink(_scratch("msink_a"), n_partitions=4)
+    sink_b = MergeSink(_scratch("msink_b"), n_partitions=4)
+    _pipeline_drain(
+        spark, "msink", feed, _scratch("msink_ckpt"), {"type": "multi", "sinks": [sink_a, sink_b]}
     )
-    pipe.init()
-    q = pipe.run()
-    q.awaitTermination()
-    pipe.stop()
-    return sink_b.read_table(spark).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    return sink_b.read_table(spark).select(*CDC_COLS)
 
 
 def stream_inc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,20 +701,8 @@ def stream_cursor_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-equal to the NoTimeout form's oracle."""
     from dstream_spark.operators.cdc import cursor_dedup_stream as _cds
 
-    feed = _scratch("cursor_ttl")
-    _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_time=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    out = _cds(src, ttl_s=1800, wm_delay_s=600)
-    name = f"cursor_ttl_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    src = _feed_source(spark, sf_dir, "cursor_ttl", replay_batch0=True, split_by_time=True)
+    return run_stream(_cds(src, ttl_s=1800, wm_delay_s=600), "append")
 
 
 def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,28 +723,17 @@ def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     every is_current flag and every valid_to, closed or open."""
     from dstream_spark.operators.scd import changes_of, scd2_stream
 
-    feed = _scratch("scd2_feed")
-    table = _scratch("scd2_table")
-    ckpt = _scratch("scd2_ckpt")
-    _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_time=True)
-    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
-    out = scd2_stream(changes_of(src.select("conv_id", "turn_idx", "role", "text", "tool", "ts")))
+    src = _feed_source(spark, sf_dir, "scd2_feed", replay_batch0=True, split_by_time=True)
+    out = scd2_stream(changes_of(src.select(*CDC_COLS)))
     sink = MergeSink(
-        table,
+        _scratch("scd2_table"),
         keys=("tool", "conv_id", "turn_idx"),
         partition_key="tool",
         order_cols=("tool", "conv_id", "turn_idx"),
         version_col="_v",
         n_partitions=4,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(ckpt, "q"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(out, "append", foreach_batch=sink.process_batch, checkpoint=_scratch("scd2_ckpt"))
     return sink.read_table(spark).select(
         "tool", "conv_id", "turn_idx", "valid_from", "valid_to", "attr", "is_current"
     )

@@ -4,13 +4,17 @@ no-per-row-Python discipline check (SURVEY.md hard-part #4)."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import re
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
+from dstream_spark.functions import dedup_text
 from dstream_spark.functions.dedup_text import (
+    NUM_PERM,
     jaccard_pairs,
     simhash_expr,
     word_shingles,
@@ -88,6 +92,57 @@ def test_shingles_short_docs_empty(spark):
     assert sh[3] == ["a b c", "b c d"]
     # pair ops tolerate the short docs end-to-end
     assert jaccard_pairs(df, threshold=0.1).collect() == []
+
+
+# None text, empty text, shorter than k, double spaces (split(' ') keeps
+# the empty token), a repeated shingle, and an ordinary doc
+KERNEL_DOCS = [None, "", "one two", "a  b c", "x y x y x y", "the quick brown fox jumps"]
+
+
+def _ref_shingles(text, k):
+    """Spark's when(size(split(text, ' ')) >= k, array_distinct(k-grams))
+    .otherwise([]): NULL text takes the otherwise branch."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    grams = []
+    for i in range(len(toks) - k + 1):
+        g = " ".join(toks[i : i + k])
+        if g not in grams:
+            grams.append(g)
+    return grams
+
+
+def _ref_minhash(shingles):
+    """Per seed, array_min(transform(shingles, g -> md5('<seed>|' || g)));
+    NULL for a NULL or empty array."""
+    if not shingles:
+        return None
+    return [
+        min(hashlib.md5(f"{seed}|{g}".encode()).hexdigest() for g in shingles)
+        for seed in range(NUM_PERM)
+    ]
+
+
+def test_word_shingles_kernel_matches_reference(spark):
+    """The cached Arrow kernel's Python body, run on a local Series (no
+    Spark job), equals the expression-semantics reference."""
+    word_shingles("text", 3)  # builds the k=3 kernel; plans nothing
+    kernel = dedup_text._UDF_CACHE[("shingles", 3)].func
+    got = kernel(pd.Series(KERNEL_DOCS, dtype=object))
+    assert [list(x) for x in got] == [_ref_shingles(d, 3) for d in KERNEL_DOCS]
+    assert got[3] == ["a  b", " b c"] and got[4] == ["x y x", "y x y"]
+
+
+def test_minhash_kernel_matches_reference(spark):
+    """_minhash_arr's kernel (behind minhash_signature) on local shingle
+    arrays, including NULL and empty ones, equals per-seed min md5."""
+    dedup_text._minhash_arr(F.col("s"), NUM_PERM)
+    kernel = dedup_text._UDF_CACHE[("minhash", NUM_PERM)].func
+    arrays = [None, []] + [_ref_shingles(d, 3) for d in KERNEL_DOCS] + [["b", "a", "b"]]
+    got = kernel(pd.Series(arrays, dtype=object))
+    assert list(got) == [_ref_minhash(a) for a in arrays]
+    assert got[0] is None and got[1] is None and len(got[5]) == NUM_PERM
 
 
 def test_simhash_banded_dups_equal_brute_force(spark):
@@ -196,8 +251,8 @@ def test_jaccard_max_df_cap(spark):
 
 
 def test_simhash_table_equals_expression_form(spark):
-    """simhash_table (explode + partial aggregate) must equal
-    simhash_expr (per-row bit folds) on identical input."""
+    """simhash_table (Arrow vote kernel) must equal simhash_expr
+    (per-row bit folds) on identical input."""
     from dstream_spark.functions.dedup_text import simhash_table
 
     df = spark.createDataFrame(

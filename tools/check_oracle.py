@@ -48,7 +48,7 @@ def hash_rows(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(QUERIES)
-    spark = get_spark(cores=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in ALL_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
