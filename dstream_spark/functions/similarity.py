@@ -47,10 +47,12 @@ def _dot_impl(a: pd.Series, b: pd.Series) -> pd.Series:
     if av is not None and bv is not None and av.shape == bv.shape:
         return pd.Series(_fold_sum(av * bv))
     # slow path (nulls / ragged): mirror zip_with+aggregate — any null
-    # side or length mismatch (zip_with pads with NULL) folds to NULL
+    # side or length mismatch (zip_with pads with NULL) folds to NULL.
+    # Arrow hands a NULL array over as None (pd.isna of an ndarray is
+    # elementwise, so it cannot test a whole vector)
     out = np.empty(len(a), dtype=object)
     for i, (x, y) in enumerate(zip(a.to_numpy(), b.to_numpy())):
-        if pd.isna(x) or pd.isna(y) or len(x) != len(y):
+        if x is None or y is None or len(x) != len(y):
             out[i] = None
         else:
             acc = 0.0
@@ -66,7 +68,7 @@ def _l2_impl(a: pd.Series) -> pd.Series:
         return pd.Series(np.sqrt(_fold_sum(av * av)))
     out = np.empty(len(a), dtype=object)
     for i, x in enumerate(a.to_numpy()):
-        if pd.isna(x):
+        if x is None:
             out[i] = None
         else:
             acc = 0.0

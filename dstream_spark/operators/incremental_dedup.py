@@ -52,9 +52,8 @@ def document_bands(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     'b' + two hex chars, NOT the bare hex: Spark type-infers hive
     partition values per directory tree, so an index whose dirs happen
     to be all digit-hex ('07', '12') would read bucket back as INT
-    (07→7) — crashing the marker protocol's cross-root union against
-    string roots and silently breaking the isin() pruning after a
-    compact rewrote the dirs unpadded. A non-numeric prefix pins the
+    (07→7), silently breaking the isin() pruning after a compact
+    rewrote the dirs unpadded. A non-numeric prefix pins the
     inferred type to string everywhere."""
     sh = docs.select(
         F.col(id_col).alias("doc_id"), word_shingles(text_col, 3).alias("sh")
@@ -91,7 +90,7 @@ class IncrementalLshDedup:
     a foreachBatch body, or drive it directly)."""
 
     def __init__(self, index_dir: str, dups_dir: str, n_partitions: int = 8,
-                 protocol: str = "rename", prune: bool = True):
+                 prune: bool = True):
         # prune=False disables bucket partition pruning (full-index
         # read per batch) — kept ONLY as the A/B baseline for
         # tools/inc_dedup_bench.py; results are identical either way
@@ -102,7 +101,6 @@ class IncrementalLshDedup:
             partition_key="bucket",  # co-locate buckets
             order_cols=("band_hash", "doc_id"),
             n_partitions=n_partitions,
-            protocol=protocol,
             # hive bucket directories: each epoch lands under
             # bucket=XX/ subdirs, so the collision join's index read
             # PRUNES to the buckets the batch actually touches
@@ -114,7 +112,6 @@ class IncrementalLshDedup:
             partition_key="doc_id",
             order_cols=("doc_id",),
             n_partitions=n_partitions,
-            protocol=protocol,
         )
 
     def init(self) -> None:

@@ -21,19 +21,15 @@ plus a commit-marker protocol:
    markers, so a crash between data write and marker leaves invisible
    orphans, not dups.
 
-HOW a finished batch becomes visible is a pluggable CommitProtocol:
-
-- ``rename`` (default, local FS): data+lineage staged to tmp dirs and
-  atomically renamed into place; the lineage-dir rename is the commit
-  point. Depends on atomic directory rename — POSIX only.
-- ``marker`` (object-store-safe): every attempt writes to a UNIQUE
-  attempt directory that is never renamed; the commit point is a
-  put-if-absent of a small JSON marker naming the committed attempt.
-  No operation relies on atomic rename of multi-file directories —
-  only single-object put-if-absent (S3/GCS: If-None-Match PUT) and,
-  for compaction's pointer swap, single-object replace (conditional
-  PUT If-Match). This is the same pointer-swap design as an Iceberg
-  snapshot commit.
+HOW a finished batch becomes visible is ``RenameCommitProtocol``:
+data and lineage are staged to tmp dirs and atomically renamed into
+place; the lineage-dir rename is the commit point. A second publish of
+an already-committed epoch (a split-brain replay past the
+committed_batches() check) discards its staged dirs and leaves the
+committed epoch untouched. It depends on atomic directory rename and
+local ``os`` calls, so it is POSIX-only: an object store would need a
+put-if-absent commit marker instead (the Iceberg snapshot-pointer
+design).
 
 This is merge-on-read: appends + read-side latest-version resolution
 (apply_changes), the same strategy as Iceberg MoR MERGE. On a real
@@ -45,7 +41,6 @@ sort-within-partition, lineage in the same transaction) is unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -62,28 +57,10 @@ from dstream_spark.operators.dedup import dedup_latest
 LINEAGE_TS0 = 1_700_000_000
 
 
-def _put_if_absent(path: str, payload: dict) -> bool:
-    """Atomic create-if-absent of a fully-written small file (os.link
-    of a complete tmp file; object-store analog: If-None-Match PUT).
-    False = an object already exists at ``path``."""
-    tmp = f"{path}.put-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    try:
-        os.link(tmp, path)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
 class RenameCommitProtocol:
     """Local-FS commit: stage to tmp dirs, atomic directory rename into
     place; the lineage dir's rename is the commit marker (it lands
     LAST). Correct only where directory rename is atomic."""
-
-    name = "rename"
 
     def __init__(self, table_dir: str):
         self.data_dir = os.path.join(table_dir, "data")
@@ -109,6 +86,11 @@ class RenameCommitProtocol:
         tmp_lin = lineage_path + f".tmp-{uuid.uuid4().hex[:8]}"
         write_data(tmp_data)
         write_lineage(tmp_lin)
+        if os.path.exists(lineage_path):
+            # another writer committed this epoch first: keep its data
+            shutil.rmtree(tmp_data, ignore_errors=True)
+            shutil.rmtree(tmp_lin, ignore_errors=True)
+            return
         # two renames; marker (lineage) rename LAST = the commit point
         if os.path.exists(data_path):
             shutil.rmtree(data_path)
@@ -170,113 +152,8 @@ class RenameCommitProtocol:
         shutil.rmtree(old_marker_aside, ignore_errors=True)
 
 
-class MarkerCommitProtocol:
-    """Object-store-safe commit: attempts write to unique directories
-    that are NEVER renamed or mutated; visibility = a small JSON marker
-    in ``_commits/`` naming the committed attempt, created with
-    put-if-absent. Crash before the marker ⇒ an unreferenced attempt
-    dir (invisible garbage); a racing duplicate commit loses the
-    put-if-absent and deletes its own attempt. Compaction re-points the
-    base marker via single-object replace (conditional PUT analog) —
-    the Iceberg snapshot-pointer swap."""
-
-    name = "marker"
-
-    def __init__(self, table_dir: str):
-        self.data_dir = os.path.join(table_dir, "data")
-        self.lineage_dir = os.path.join(table_dir, "_lineage")
-        self.commits_dir = os.path.join(table_dir, "_commits")
-
-    def init(self) -> None:
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        os.makedirs(self.commits_dir, exist_ok=True)
-
-    def _marker_path(self, batch_id: int) -> str:
-        return os.path.join(self.commits_dir, f"batch_id={batch_id}.json")
-
-    def committed_batches(self) -> set[int]:
-        if not os.path.isdir(self.commits_dir):
-            return set()
-        out = set()
-        for f in os.listdir(self.commits_dir):
-            if f.startswith("batch_id=") and f.endswith(".json"):
-                mid = f[len("batch_id="):-len(".json")]
-                if mid.isdigit():
-                    out.add(int(mid))
-        return out
-
-    def _attempt_paths(self, batch_id: int) -> tuple[str, str]:
-        att = uuid.uuid4().hex[:8]
-        return (
-            os.path.join(self.data_dir, f"batch_id={batch_id}", f"attempt-{att}"),
-            os.path.join(self.lineage_dir, f"batch_id={batch_id}", f"attempt-{att}"),
-        )
-
-    def _marker(self, batch_id: int) -> dict:
-        return json.load(open(self._marker_path(batch_id)))
-
-    def publish(self, batch_id: int, write_data, write_lineage) -> None:
-        data_path, lin_path = self._attempt_paths(batch_id)
-        write_data(data_path)
-        write_lineage(lin_path)
-        committed = _put_if_absent(
-            self._marker_path(batch_id),
-            {"batch_id": batch_id, "data": data_path, "lineage": lin_path},
-        )
-        if not committed:
-            # another writer (or an earlier replay) committed this
-            # epoch first — our attempt is unreferenced garbage
-            shutil.rmtree(data_path, ignore_errors=True)
-            shutil.rmtree(lin_path, ignore_errors=True)
-
-    def data_read(self, spark: SparkSession, batch_ids: set[int]) -> DataFrame:
-        # one read per attempt root, each with ITSELF as basePath, then
-        # union: a single multi-root read cannot infer hive partition
-        # subdirs (bucket=XX under hive_partition_by sinks) because the
-        # attempt-<id> segment between the roots is not key=value
-        # (CONFLICTING_DIRECTORY_STRUCTURES). Root count = committed
-        # batches, bounded by compact().
-        paths = [self._marker(b)["data"] for b in sorted(batch_ids)]
-        dfs = [spark.read.option("basePath", p).parquet(p) for p in paths]
-        out = dfs[0]
-        for df in dfs[1:]:
-            # allowMissingColumns = the same merge-on-read schema
-            # evolution as the rename protocol's mergeSchema: an
-            # epoch that adds (or drops) a column unions with
-            # NULL-fill instead of throwing
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
-
-    def lineage_read(self, spark: SparkSession) -> DataFrame:
-        paths = [self._marker(b)["lineage"] for b in sorted(self.committed_batches())]
-        return spark.read.parquet(*paths)
-
-    def swap_base(self, base_id: int, retire_ids, write_data, write_lineage) -> None:
-        data_path, lin_path = self._attempt_paths(base_id)
-        write_data(data_path)
-        write_lineage(lin_path, data_path)
-        old = self._marker(base_id)
-        # pointer swap: single-object atomic replace (If-Match PUT)
-        tmp = self._marker_path(base_id) + f".swap-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": base_id, "data": data_path, "lineage": lin_path}, f)
-        os.replace(tmp, self._marker_path(base_id))
-        # retire superseded markers FIRST (readers stop resolving them),
-        # then the now-unreferenced data
-        for b in retire_ids:
-            try:
-                os.unlink(self._marker_path(b))
-            except FileNotFoundError:
-                pass
-        for b in retire_ids:
-            shutil.rmtree(os.path.join(self.data_dir, f"batch_id={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(self.lineage_dir, f"batch_id={b}"), ignore_errors=True)
-        shutil.rmtree(old["data"], ignore_errors=True)
-        shutil.rmtree(old["lineage"], ignore_errors=True)
-
-
-PROTOCOLS = {"rename": RenameCommitProtocol, "marker": MarkerCommitProtocol}
+# perfbench/layers.py wraps each entry's ``publish`` for traced runs
+PROTOCOLS = {"rename": RenameCommitProtocol}
 
 
 class MergeSink:
@@ -290,11 +167,10 @@ class MergeSink:
         order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
         version_col: str | None = None,
         n_partitions: int = 8,
-        protocol: str = "rename",
         hive_partition_by: str | None = None,
     ):
         self.table_dir = table_dir
-        self.protocol = PROTOCOLS[protocol](table_dir)
+        self.protocol = RenameCommitProtocol(table_dir)
         self.data_dir = self.protocol.data_dir
         self.lineage_dir = self.protocol.lineage_dir
         self.keys = keys
@@ -309,10 +185,10 @@ class MergeSink:
         # bucket-keyed indexes (incremental dedup): a micro-batch's
         # lookup reads the buckets it hashes into, not the full index.
         # CONTRACT: values must not be type-inference-ambiguous — an
-        # all-numeric directory tree is inferred as INT per root (hex
-        # '07' reads back as 7), which breaks cross-root unions and
-        # zero-padded equality after a compact rewrite. Prefix a
-        # letter (incremental_dedup uses 'b' + hex).
+        # all-numeric directory tree is inferred as INT (hex '07' reads
+        # back as 7), which breaks zero-padded equality after a
+        # compact rewrite. Prefix a letter (incremental_dedup uses
+        # 'b' + hex).
         self.hive_partition_by = hive_partition_by
         self.protocol.init()
 
@@ -533,7 +409,6 @@ class MergeSink:
         committed = self.committed_batches()
         return {
             "table_dir": self.table_dir,
-            "protocol": self.protocol.name,
             "committed_batches": len(committed),
             "max_batch_id": max(committed) if committed else None,
         }

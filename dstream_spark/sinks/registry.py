@@ -32,7 +32,6 @@ def _merge(df: DataFrame, conf: dict) -> DataStreamWriter:
         keys=tuple(conf.get("keys", ("conv_id", "turn_idx"))),
         version_col=conf.get("version_col"),
         n_partitions=int(conf.get("n_partitions", 8)),
-        protocol=conf.get("protocol", "rename"),
     )
     every = int(conf.get("compact_every", 0))
     if every > 0:

@@ -10,6 +10,7 @@ import re
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from dstream_spark.functions import dedup_text
@@ -17,10 +18,13 @@ from dstream_spark.functions.dedup_text import (
     NUM_PERM,
     jaccard_pairs,
     simhash_expr,
+    word_chunks,
     word_shingles,
+    word_windows,
 )
 from dstream_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
-from dstream_spark.functions.similarity import cosine, cosine_topk
+from dstream_spark.functions import similarity
+from dstream_spark.functions.similarity import cosine, cosine_topk, dot
 from dstream_spark.functions.text import predicted_lang, quality_score, token_count
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -144,6 +148,78 @@ def test_minhash_kernel_matches_reference(spark):
     assert list(got) == [_ref_minhash(a) for a in arrays]
     assert got[0] is None and got[1] is None and len(got[5]) == NUM_PERM
 
+
+
+def _ref_windows(text, w):
+    """when(size(toks) >= w, transform(sequence(1, n-w+1), i ->
+    concat_ws(' ', slice(toks, i, w)))).otherwise([]), duplicates kept."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    if len(toks) < w:
+        return []
+    return [" ".join(toks[i - 1 : i - 1 + w]) for i in range(1, len(toks) - w + 2)]
+
+
+def _ref_chunks(text, w):
+    """transform(sequence(0, ceil(n/w)-1), i -> concat_ws(' ',
+    slice(toks, i*w+1, w))); [] for NULL text."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    return [" ".join(toks[i * w : i * w + w]) for i in range(-(-len(toks) // w))]
+
+
+@pytest.mark.parametrize(
+    "build, key, ref, repeated",
+    [
+        # "x y x y x y" is 6 tokens, an exact multiple of w=3
+        (word_windows, "windows", _ref_windows, ["x y x", "y x y", "x y x", "y x y"]),
+        (word_chunks, "chunks", _ref_chunks, ["x y x", "y x y"]),
+    ],
+)
+def test_word_window_kernels_match_reference(spark, build, key, ref, repeated):
+    """word_windows / word_chunks kernels on a local Series (no Spark
+    job) equal the expression-semantics references."""
+    build("text", 3)  # builds the w=3 kernel; plans nothing
+    kernel = dedup_text._UDF_CACHE[(key, 3)].func
+    got = kernel(pd.Series(KERNEL_DOCS, dtype=object))
+    assert [list(x) for x in got] == [ref(d, 3) for d in KERNEL_DOCS]
+    assert list(got[0]) == [] and list(got[4]) == repeated
+
+
+def _ref_dot(x, y):
+    """aggregate(zip_with(x, y, (a, b) -> a*b), 0.0, (acc, p) -> acc + p):
+    NULL for a NULL side or a length mismatch (zip_with pads NULL)."""
+    if x is None or y is None or len(x) != len(y):
+        return None
+    acc = 0.0
+    for a, b in zip(x, y):
+        acc = acc + float(a) * float(b)
+    return acc
+
+
+def _vecs(*rows):
+    return pd.Series([None if r is None else np.array(r, dtype=np.float64) for r in rows],
+                     dtype=object)
+
+
+@pytest.mark.parametrize(
+    "a, b",
+    [
+        # equal lengths, no NULL: the vectorized cumsum path; the
+        # 1e16 row pins strict left-to-right accumulation (-> 0.0)
+        (_vecs([1.0, 2.0, 3.0], [0.1, 0.2, 0.3], [1e16, 1.0, -1e16]),
+         _vecs([4.0, 5.0, 6.0], [0.3, 0.2, 0.1], [1.0, 1.0, 1.0])),
+        # a NULL vector, a ragged pair and empty vectors: the row loop
+        (_vecs([1.0, 2.0], None, [1.0, 2.0, 3.0], [], [0.1, 0.7]),
+         _vecs([3.0, 4.0], [1.0, 2.0], [1.0, 2.0], [], None)),
+    ],
+)
+def test_dot_kernel_matches_reference(spark, a, b):
+    dot(F.col("a"), F.col("b"))  # builds the kernel; plans nothing
+    got = similarity._UDF_CACHE["dot"].func(a, b)
+    assert list(got) == [_ref_dot(x, y) for x, y in zip(a, b)]
 
 def test_simhash_banded_dups_equal_brute_force(spark):
     """simhash_near_dups (pigeonhole segment join) must return exactly

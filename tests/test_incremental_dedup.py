@@ -234,32 +234,3 @@ def test_index_bucket_pruning_reads_only_touched_buckets(spark, tmp_path):
     d.process_batch(_df(spark, [(100, many[3][1])]), 1)
     dups = {r["doc_id"]: r["dup_of"] for r in d.read_dups(spark).collect()}
     assert dups == {100: 3}
-
-
-def test_bucket_layout_under_marker_protocol(spark, tmp_path):
-    """The object-store-safe commit protocol composes with the hive
-    bucket layout: attempt dirs contain bucket=XX subdirs, and
-    data_read (no basePath, multiple attempt roots) must still infer
-    the bucket partition column, prune on it, and detect dups — plus
-    compaction's pointer swap preserves both."""
-    d = IncrementalLshDedup(
-        str(tmp_path / "idx"), str(tmp_path / "dups"), n_partitions=2,
-        protocol="marker",
-    )
-    d.init()
-    d.process_batch(_df(spark, DOCS0), 0)
-    d.process_batch(_df(spark, DOCS1), 1)
-    dups = {r["doc_id"]: r["dup_of"] for r in d.read_dups(spark).collect()}
-    assert dups == {12: 3, 13: 11}
-    # pruned read path works against marker-resolved attempt dirs
-    from dstream_spark.operators.incremental_dedup import document_bands
-
-    bands = document_bands(_df(spark, [(20, DOCS0[3][1])]))
-    touched = bands.agg(F.collect_set("bucket")).first()[0]
-    assert d._index_raw(spark, buckets=touched).count() > 0
-    # compact (marker pointer swap) then detect against the folded index
-    d.index.compact(spark)
-    d.dups.compact(spark)
-    d.process_batch(_df(spark, [(20, DOCS0[3][1])]), 2)
-    dups2 = {r["doc_id"]: r["dup_of"] for r in d.read_dups(spark).collect()}
-    assert dups2 == {12: 3, 13: 11, 20: 3}
