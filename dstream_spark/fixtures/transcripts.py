@@ -18,14 +18,17 @@ BASELINE.json input_hint:
    tests: zipf-skewed hot conversations, out-of-order/late events, and
    duplicated (conv_id, turn_idx) rows across micro-batches (the
    reference's replay-after-crash scenario,
-   docs/plugins/mssql-ingester.md:84-87). Written as numbered parquet
-   files so a file-source readStream consumes them as micro-batches —
-   the sandbox stand-in for an Iceberg change feed.
+   docs/plugins/mssql-ingester.md:84-87). ``write_changefeed_batches``
+   lands them through ``land_file``, the one feed writer: one numbered
+   parquet file per micro-batch, which a file-source readStream
+   replays in order — the sandbox stand-in for an Iceberg change feed.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -182,37 +185,35 @@ def generate_transcripts(
     return df
 
 
+def land_file(df: DataFrame, out_dir: str, b: int) -> None:
+    """Land ``df`` as the one change-feed file ``batch_<b>.parquet``
+    (b zero-padded to 5 digits) with mtime ``1_700_000_000 + 10*b``.
+    The file source replays files oldest-mtime-first, so batch order is
+    replay order whatever order the files were written in. The write
+    goes to a hidden tmp dir (the file source skips ``.``-prefixed
+    names) and the finished file is renamed in with its mtime already
+    set; a zero-row ``df`` still lands as one file."""
+    tmp = os.path.join(out_dir, f".tmp_{uuid.uuid4().hex[:8]}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    src = os.path.join(tmp, next(f for f in os.listdir(tmp) if f.endswith(".parquet")))
+    mtime = 1_700_000_000 + 10 * b
+    os.utime(src, (mtime, mtime))
+    os.rename(src, os.path.join(out_dir, f"batch_{b:05d}.parquet"))
+    shutil.rmtree(tmp)
+
+
 def write_changefeed_batches(
     spark: SparkSession,
     pdf: pd.DataFrame,
     out_dir: str,
     n_batches: int = 4,
-) -> list[str]:
-    """Land the transcript rows as numbered parquet files (one per
-    micro-batch) so ``readStream.parquet(out_dir)`` replays them as a
-    change feed. Adds the CDC metadata columns (_change_type insert,
+    start: int = 0,
+) -> None:
+    """Land the transcript rows in ``n_batches`` contiguous chunks as
+    change-feed batches ``start, start+1, ...`` through ``land_file``,
+    so ``readStream.parquet(out_dir)`` replays them in that order.
+    Adds the CDC metadata columns (_change_type insert,
     _commit_version = batch number — the LSN analog)."""
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    chunks = np.array_split(np.arange(len(pdf)), n_batches)
-    for b, chunk in enumerate(chunks):
-        part = pdf.iloc[chunk].copy()
-        part["_change_type"] = "insert"
-        part["_commit_version"] = np.int64(b)
-        sdf = spark.createDataFrame(part, schema=CHANGEFEED_SCHEMA)
-        path = os.path.join(out_dir, f"batch_{b:05d}.parquet")
-        # one file per commit: deterministic micro-batch replay
-        sdf.coalesce(1).write.mode("overwrite").parquet(path + ".tmp")
-        os.rename(
-            next(
-                os.path.join(path + ".tmp", f)
-                for f in os.listdir(path + ".tmp")
-                if f.endswith(".parquet")
-            ),
-            path,
-        )
-        import shutil
-
-        shutil.rmtree(path + ".tmp")
-        paths.append(path)
-    return paths
+    for b, idx in enumerate(np.array_split(np.arange(len(pdf)), n_batches), start):
+        part = pdf.iloc[idx].assign(_change_type="insert", _commit_version=np.int64(b))
+        land_file(spark.createDataFrame(part, schema=CHANGEFEED_SCHEMA), out_dir, b)

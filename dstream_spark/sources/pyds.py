@@ -10,8 +10,8 @@ partition planning, and per-partition reader — so a provider can be
 written in pure Python and still get distributed, partitioned scans.
 
 `FeedDataSource` reads the engine's ordered change-feed directory
-(the `batch_*.parquet` commit files `_write_feed` lands,
-streaming_queries.py): one InputPartition PER COMMIT FILE — partition
+(the `batch_*.parquet` commit files `land_file` lands,
+fixtures/transcripts.py): one InputPartition PER COMMIT FILE — partition
 planning mirrors the feed's commit structure, so a 10^5-file feed
 fans out to 10^5 tasks with no driver-side row handling — and each
 task yields pyarrow RecordBatches (the Arrow fast path; never

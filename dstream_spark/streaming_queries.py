@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dstream_spark.fixtures.transcripts import transcripts_from_events
+from dstream_spark.fixtures.transcripts import land_file, transcripts_from_events
 from dstream_spark.operators.cdc import cursor_dedup_stream
 from dstream_spark.queries_base import _scratch
 from dstream_spark.sinks.merge import MergeSink
@@ -33,21 +33,6 @@ from dstream_spark.sources.registry import changefeed
 from dstream_spark.streaming.pipeline import Pipeline, run_stream
 
 CDC_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
-
-def _land_file(part: DataFrame, out_dir: str, b: int) -> None:
-    """Write the single-partition ``part`` as the one file
-    ``batch_<b>.parquet``, with strictly increasing mtimes: the file
-    source processes files oldest-first, giving deterministic
-    micro-batch order."""
-    tmp = os.path.join(out_dir, f".tmp_{uuid.uuid4().hex[:8]}")
-    part.write.mode("overwrite").parquet(tmp)
-    src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = os.path.join(out_dir, f"batch_{b:05d}.parquet")
-    os.rename(os.path.join(tmp, src), dst)
-    shutil.rmtree(tmp)
-    mtime = 1_700_000_000 + b * 10
-    os.utime(dst, (mtime, mtime))
 
 
 def _write_feed(
@@ -74,9 +59,10 @@ def _write_feed(
     All slicing is JVM-side (no toPandas: collecting the transcript
     table to the driver caps the feed at driver memory — the
     bench_pipeline.build_feed lesson). Only the scalar split bound is
-    fetched. Each slice lands as ONE parquet file (coalesce(1)) so a
-    max_files_per_trigger=1 stream replays it as one micro-batch, and
-    rows within split_by_turn slices stay in turn order.
+    fetched. Each slice lands through ``land_file`` as ONE parquet file
+    ``batch_<b>.parquet``, so a max_files_per_trigger=1 stream replays
+    it as one micro-batch, in batch order; rows within split_by_turn
+    slices stay in turn order.
     """
     t = transcripts_from_events(spark, sf_dir)
     if split_by_turn:
@@ -116,7 +102,6 @@ def _write_feed(
         )
     sliced = sliced.persist()
     try:
-        os.makedirs(out_dir, exist_ok=True)
         order = list(range(n_batches)) + ([0] if replay_batch0 else [])
         for b, s in enumerate(order):
             part = (
@@ -125,10 +110,9 @@ def _write_feed(
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_version", F.lit(b).cast("long"))
             )
-            part = part.coalesce(1)
             if split_by_turn:  # deterministic in-file order (single partition)
-                part = part.sortWithinPartitions("conv_id", "turn_idx")
-            _land_file(part, out_dir, b)
+                part = part.coalesce(1).sortWithinPartitions("conv_id", "turn_idx")
+            land_file(part, out_dir, b)
     finally:
         sliced.unpersist()
 
@@ -473,7 +457,7 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = _scratch("cdcdel_feed")
     for i, part in enumerate((v1, v2, v3)):
-        _land_file(part.coalesce(1), feed, i)
+        land_file(part, feed, i)
     sink = MergeSink(_scratch("cdcdel_table"), version_col="_commit_version", n_partitions=8)
     _pipeline_drain(spark, "cdcdel", feed, _scratch("cdcdel_ckpt"), {"type": "merge", "sink": sink})
     # crash-replay of commit 1 at its ORIGINAL epoch id: batch_id 0 is

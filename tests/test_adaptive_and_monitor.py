@@ -111,11 +111,7 @@ def test_adaptive_resize_across_segments(spark, tmp_path):
     assert resized > 1  # ~20 rows/file, target 40 → 2+
 
     # more files arrive; segment 2 consumes them at the new setting
-    pdf2 = pdf.iloc[len(pdf) // 2 :]
-    tmp2 = str(tmp_path / "feed2")
-    write_changefeed_batches(spark, pdf2, tmp2, n_batches=4)
-    for i, f in enumerate(sorted(os.listdir(tmp2))):
-        os.rename(os.path.join(tmp2, f), os.path.join(feed, f"late_{i:05d}.parquet"))
+    write_changefeed_batches(spark, pdf.iloc[len(pdf) // 2 :], feed, n_batches=4, start=4)
     h2 = pipe.run_adaptive(ctrl, segments=1)
     assert h2[0]["files_per_trigger"] == resized
     assert h2[0]["batches"] < 4  # fewer, bigger micro-batches

@@ -11,8 +11,10 @@ from __future__ import annotations
 import glob
 import os
 
-from dstream_spark.fixtures.transcripts import generate_transcripts
+from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.sinks.merge import MergeSink
+from dstream_spark.sources.registry import changefeed
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def _sdf(spark, pdf):
@@ -42,38 +44,15 @@ def test_duplicate_publish_keeps_first_writer_and_cleans_up(spark, tmp_path):
 def test_commit_protocol_streaming_end_to_end(spark, tmp_path):
     """The commit protocol behind a REAL Structured Streaming
     foreachBatch run: replayed feed file + restart ⇒ no loss, no dup."""
-    import numpy as np
-
-    from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA
-    from dstream_spark.sources.registry import changefeed
-
     pdf = generate_transcripts(n_convs=5, turns_per_conv=8)
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
-    half = len(pdf) // 2
-    for i, sl in enumerate((pdf.iloc[:half], pdf.iloc[half:], pdf.iloc[:half])):
-        part = sl.copy()
-        part["_change_type"] = "insert"
-        part["_commit_version"] = np.int64(i)
-        sdf = spark.createDataFrame(part, schema=CHANGEFEED_SCHEMA)
-        tmp = f"{feed}/b{i}.tmp"
-        sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), f"{feed}/b{i}.parquet")
-        import shutil
-
-        shutil.rmtree(tmp)
-        os.utime(f"{feed}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
+    write_changefeed_batches(spark, pdf, feed, n_batches=2)  # halves 0, 1
+    # batch 2 replays the first half
+    write_changefeed_batches(spark, pdf.iloc[: len(pdf) // 2], feed, n_batches=1, start=2)
 
     sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
-    q = (
-        changefeed(spark, {"path": feed})
-        .writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = changefeed(spark, {"path": feed})
+    run_stream(src, "append", foreach_batch=sink.process_batch, checkpoint=str(tmp_path / "ckpt"))
     out = sink.read_table(spark)
     assert out.count() == len(pdf)  # replayed slice deduped
     assert out.select("conv_id", "turn_idx").distinct().count() == len(pdf)

@@ -2,15 +2,23 @@
 (test/e2e/e2e_test.go:224-259: insert 3 Persons + 3 Cars, expect
 exactly 6 CDC events): two conversations x three turns streamed
 through the full pipeline land EXACTLY 6 rows in the sink, 3 per
-conversation, in turn order."""
+conversation, in turn order. Also the contract of the feed writer
+those runs stand on (``land_file``)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
-from dstream_spark.fixtures.transcripts import write_changefeed_batches
+from dstream_spark.fixtures.transcripts import (
+    CHANGEFEED_SCHEMA,
+    generate_transcripts,
+    land_file,
+    write_changefeed_batches,
+)
 from dstream_spark.sinks.merge import MergeSink
-from dstream_spark.streaming.pipeline import Pipeline
+from dstream_spark.sources.registry import changefeed
+from dstream_spark.streaming.pipeline import Pipeline, run_stream
 
 
 def test_e2e_golden_six_rows(spark, tmp_path):
@@ -58,3 +66,24 @@ def test_e2e_golden_six_rows(spark, tmp_path):
     }
     for conv_id, turn_idx, _role, text, _tool, _ts in rows:
         assert got[(conv_id, turn_idx)] == text
+
+
+def test_land_file_replays_in_batch_order(spark, tmp_path):
+    """One file per batch, replayed in batch order whatever order the
+    files were landed in; ``start`` numbers both the file and its
+    _commit_version; a zero-row batch is still one file and one
+    micro-batch."""
+    pdf = generate_transcripts(n_convs=2, turns_per_conv=5)
+    feed = str(tmp_path / "feed")
+    write_changefeed_batches(spark, pdf, feed, n_batches=2, start=1)  # batches 1, 2
+    land_file(spark.createDataFrame([], CHANGEFEED_SCHEMA), feed, 0)  # zero rows, landed last
+    assert sorted(os.listdir(feed)) == [f"batch_{b:05d}.parquet" for b in range(3)]
+
+    seen = []  # the _commit_version of every row, per micro-batch
+
+    def record(df, batch_id):
+        seen.append([r[0] for r in df.select("_commit_version").collect()])
+
+    src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
+    run_stream(src, "append", foreach_batch=record)
+    assert seen == [[], [1] * 5, [2] * 5]

@@ -7,46 +7,17 @@ equality under (conv_id, turn_idx) ordering (BASELINE.json invariant).
 
 from __future__ import annotations
 
-import pandas as pd
-
-from dstream_spark.fixtures.transcripts import (
-    CHANGEFEED_SCHEMA,
-    generate_transcripts,
-)
+from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
-from dstream_spark.streaming.pipeline import Pipeline
-
-
-def _feed_files(spark, pdf: pd.DataFrame, out_dir: str, n_batches: int = 3) -> None:
-    import os
-
-    import numpy as np
-
-    os.makedirs(out_dir, exist_ok=True)
-    idx = np.arange(len(pdf))
-    for b in range(n_batches):
-        part = pdf[idx % n_batches == b].copy()
-        part["_change_type"] = "insert"
-        part["_commit_version"] = np.int64(b)
-        sdf = spark.createDataFrame(part, schema=CHANGEFEED_SCHEMA)
-        tmp = os.path.join(out_dir, f".tmp{b}")
-        sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), os.path.join(out_dir, f"b{b:04d}.parquet"))
-        import shutil
-
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"b{b:04d}.parquet"),
-            (1_700_000_000 + 10 * b, 1_700_000_000 + 10 * b),
-        )
+from dstream_spark.streaming.pipeline import Pipeline, run_stream
 
 
 def test_echo_identity_and_order(spark, tmp_path):
     pdf = generate_transcripts(n_convs=8, turns_per_conv=12)
     feed = str(tmp_path / "feed")
-    _feed_files(spark, pdf, feed)
+    for b in range(3):  # batch b holds every 3rd row from row b
+        write_changefeed_batches(spark, pdf.iloc[b::3], feed, n_batches=1, start=b)
     sink = MergeSink(str(tmp_path / "table"), n_partitions=4)
     pipe = Pipeline(
         spark,
@@ -81,16 +52,10 @@ def test_sink_files_sorted_within_partition(spark, tmp_path):
 
     pdf = generate_transcripts(n_convs=5, turns_per_conv=10)
     feed = str(tmp_path / "feed")
-    _feed_files(spark, pdf, feed, n_batches=1)
+    write_changefeed_batches(spark, pdf, feed, n_batches=1)
     sink = MergeSink(str(tmp_path / "table"), n_partitions=2)
     src = changefeed(spark, {"path": feed})
-    q = (
-        src.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(src, "append", foreach_batch=sink.process_batch, checkpoint=str(tmp_path / "ckpt"))
     for f in glob.glob(f"{sink.data_dir}/**/*.parquet", recursive=True):
         t = pq.read_table(f).to_pandas()
         if len(t) > 1:

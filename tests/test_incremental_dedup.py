@@ -7,7 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dstream_spark.fixtures.transcripts import land_file
 from dstream_spark.operators.incremental_dedup import IncrementalLshDedup
+from dstream_spark.streaming.pipeline import run_stream
 
 # genuinely distinct word sets per doc (near-identical token sequences
 # would legitimately minhash-collide — that's the operator working)
@@ -103,29 +105,18 @@ def test_crash_between_dup_and_index_commit_is_deterministic(spark, tmp_path):
 def test_incremental_dedup_as_streaming_sink(spark, tmp_path):
     """The operator as a real foreachBatch body: a two-file document
     change feed streamed with availableNow, same detections."""
-    import os
-
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
     for i, rows in enumerate((DOCS0, DOCS1)):
-        tmp = str(tmp_path / f"w{i}")
-        _df(spark, rows).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), os.path.join(feed, f"batch_{i:05d}.parquet"))
-        os.utime(os.path.join(feed, f"batch_{i:05d}.parquet"), (1_700_000_000 + i * 10,) * 2)
+        land_file(_df(spark, rows), feed, i)
 
     d = IncrementalLshDedup(str(tmp_path / "idx"), str(tmp_path / "dups"), n_partitions=2)
     d.init()
-    q = (
+    docs = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
-        .writeStream.foreachBatch(d.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    run_stream(docs, "append", foreach_batch=d.process_batch, checkpoint=str(tmp_path / "ckpt"))
     dups = {r["doc_id"]: r["dup_of"] for r in d.read_dups(spark).collect()}
     assert dups == {12: 3, 13: 11}
 

@@ -4,31 +4,17 @@ join on the same data (SURVEY.md §5.5 item 7)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import numpy as np
-
-from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA, generate_transcripts
+from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.operators.joins import interval_join
 from dstream_spark.sources.registry import changefeed
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def test_stream_stream_join_matches_batch(spark, tmp_path):
     pdf = generate_transcripts(n_convs=6, turns_per_conv=15, seed=7)
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
-    for b in range(3):
-        part = pdf.iloc[b::3].copy()
-        part["_change_type"] = "insert"
-        part["_commit_version"] = np.int64(b)
-        sdf = spark.createDataFrame(part, schema=CHANGEFEED_SCHEMA)
-        tmp = f"{feed}/.t{b}"
-        sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), f"{feed}/b{b}.parquet")
-        shutil.rmtree(tmp)
-        os.utime(f"{feed}/b{b}.parquet", (1_700_000_000 + 10 * b,) * 2)
+    for b in range(3):  # batch b holds every 3rd row from row b
+        write_changefeed_batches(spark, pdf.iloc[b::3], feed, n_batches=1, start=b)
 
     def split(df):
         agents = df.filter(df.role == "agent").select("conv_id", "turn_idx", "ts")
@@ -47,7 +33,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     )
 
     # streaming: same feed consumed twice (two independent source scans)
-    sa, st = split(changefeed(spark, {"path": feed})), None
     agents_s = changefeed(spark, {"path": feed})
     tools_s = changefeed(spark, {"path": feed})
     a, _ = split(agents_s)
@@ -55,17 +40,8 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     joined = interval_join(a, t, lower_s=300, upper_s=300, watermark="1 hour").select(
         "conv_id", "turn_idx", "turn_idx_r", "tool_r"
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("join_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     stream = (
-        spark.table("join_test")
+        run_stream(joined, "append", checkpoint=str(tmp_path / "ckpt"))
         .toPandas()
         .sort_values(["conv_id", "turn_idx", "turn_idx_r"])
         .reset_index(drop=True)

@@ -4,16 +4,16 @@ stream, N destinations, independent lineage/idempotency per sink
 
 from __future__ import annotations
 
-from dstream_spark.fixtures.transcripts import generate_transcripts
+from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.streaming.pipeline import Pipeline
-from tests.test_echo_ordering import _feed_files
 
 
 def test_multi_sink_fanout_and_isolation(spark, tmp_path):
     pdf = generate_transcripts(n_convs=4, turns_per_conv=8)
     feed = str(tmp_path / "feed")
-    _feed_files(spark, pdf, feed, n_batches=2)
+    for b in range(2):  # batch b holds every 2nd row from row b
+        write_changefeed_batches(spark, pdf.iloc[b::2], feed, n_batches=1, start=b)
     sinks = [MergeSink(str(tmp_path / f"tbl{i}"), n_partitions=2) for i in range(3)]
     pipe = Pipeline(
         spark,

@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from dstream_spark.operators.scd import changes_of, scd2_build, scd2_fn, scd2_stream
+from dstream_spark.streaming.pipeline import run_stream
 
 
 class FakeState:
@@ -99,14 +100,7 @@ def test_stream_scd2_retroactive_close_supersedes_in_sink(spark, sf_dir, tmp_pat
         version_col="_v",
         n_partitions=2,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(out, "append", foreach_batch=sink.process_batch, checkpoint=str(tmp_path / "ckpt"))
     raw = sink.protocol.data_read(spark, sink.committed_batches())
     multi = (
         raw.groupBy("tool", "conv_id", "turn_idx")
@@ -159,14 +153,7 @@ def test_stream_scd2_resume_closes_across_restart(spark, sf_dir, tmp_path):
         out = scd2_stream(
             changes_of(src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
         )
-        q = (
-            out.writeStream.outputMode("append")
-            .foreachBatch(sink.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_stream(out, "append", foreach_batch=sink.process_batch, checkpoint=ckpt)
 
     for f in files[:2]:
         shutil.copy2(os.path.join(staging, f), os.path.join(feed, f))

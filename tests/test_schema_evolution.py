@@ -13,39 +13,20 @@ this file pins down what happens when a later commit file drifts:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
-from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA, generate_transcripts
+from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA, generate_transcripts, land_file
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
-
-
-def _land(spark, pdf, feed: str, i: int, schema=None) -> None:
-    import shutil
-
-    sdf = spark.createDataFrame(pdf, schema=schema) if schema else spark.createDataFrame(pdf)
-    tmp = f"{feed}/b{i}.tmp"
-    sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-    src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.rename(os.path.join(tmp, src), f"{feed}/b{i}.parquet")
-    shutil.rmtree(tmp)
-    os.utime(f"{feed}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
+from dstream_spark.streaming.pipeline import run_stream
 
 
 def _run(spark, feed: str, sink: MergeSink, ckpt: str) -> None:
-    q = (
-        changefeed(spark, {"path": feed})
-        .writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = changefeed(spark, {"path": feed})
+    run_stream(src, "append", foreach_batch=sink.process_batch, checkpoint=ckpt)
 
 
 def _base(n_convs: int, seed: int):
@@ -71,13 +52,12 @@ def test_added_column_is_projected_away(spark, tmp_path):
     projects it away — the stream keeps running and downstream rows
     keep the contracted shape."""
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
     pdf = _base(4, seed=41)
     half = len(pdf) // 2
-    _land(spark, pdf.iloc[:half], feed, 0, schema=CHANGEFEED_SCHEMA)
+    land_file(spark.createDataFrame(pdf.iloc[:half], schema=CHANGEFEED_SCHEMA), feed, 0)
     widened = pdf.iloc[half:].copy()
     widened["new_upstream_col"] = "surprise"  # column added mid-stream
-    _land(spark, widened, feed, 1, schema=_schema_with(extra="new_upstream_col"))
+    land_file(spark.createDataFrame(widened, schema=_schema_with(extra="new_upstream_col")), feed, 1)
 
     sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     _run(spark, feed, sink, str(tmp_path / "ckpt"))
@@ -90,12 +70,11 @@ def test_dropped_column_null_fills(spark, tmp_path):
     """A column DROPPED upstream mid-stream: rows from the narrow file
     read as NULL for that column (no failure, no skipped commit)."""
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
     pdf = _base(4, seed=42)
     half = len(pdf) // 2
-    _land(spark, pdf.iloc[:half], feed, 0, schema=CHANGEFEED_SCHEMA)
+    land_file(spark.createDataFrame(pdf.iloc[:half], schema=CHANGEFEED_SCHEMA), feed, 0)
     narrowed = pdf.iloc[half:].drop(columns=["tool"])  # column dropped mid-stream
-    _land(spark, narrowed, feed, 1, schema=_schema_with(drop="tool"))
+    land_file(spark.createDataFrame(narrowed, schema=_schema_with(drop="tool")), feed, 1)
 
     sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     _run(spark, feed, sink, str(tmp_path / "ckpt"))
@@ -116,10 +95,9 @@ def test_incompatible_type_change_fails_loudly(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
     pdf = _base(2, seed=43)
     half = len(pdf) // 2
-    _land(spark, pdf.iloc[:half], feed, 0, schema=CHANGEFEED_SCHEMA)
+    land_file(spark.createDataFrame(pdf.iloc[:half], schema=CHANGEFEED_SCHEMA), feed, 0)
     from pyspark.sql import types as T
 
     mutated = pdf.iloc[half:].copy()
@@ -130,7 +108,7 @@ def test_incompatible_type_change_fails_loudly(spark, tmp_path):
             for f in CHANGEFEED_SCHEMA.fields
         ]
     )
-    _land(spark, mutated, feed, 1, schema=drifted)
+    land_file(spark.createDataFrame(mutated, schema=drifted), feed, 1)
 
     sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     with pytest.raises(StreamingQueryException):

@@ -7,13 +7,9 @@ conversations keep matching/deduping exactly as before."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import numpy as np
 import pandas as pd
 
-from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA
+from dstream_spark.fixtures.transcripts import write_changefeed_batches
 from dstream_spark.operators.cdc import cursor_dedup_stream
 from dstream_spark.operators.cep import cep_pattern_stream
 from dstream_spark.sources.registry import changefeed
@@ -32,18 +28,8 @@ def _rows(specs):
 
 
 def _write_feed(spark, feed, batches):
-    os.makedirs(feed, exist_ok=True)
-    for b, pdf in enumerate(batches):
-        pdf = pdf.copy()
-        pdf["_change_type"] = "insert"
-        pdf["_commit_version"] = np.int64(b)
-        sdf = spark.createDataFrame(pdf, schema=CHANGEFEED_SCHEMA)
-        tmp = f"{feed}/.t{b}"
-        sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), f"{feed}/b{b:03d}.parquet")
-        shutil.rmtree(tmp)
-        os.utime(f"{feed}/b{b:03d}.parquet", (1_700_000_000 + 10 * b,) * 2)
+    for b, pdf in enumerate(batches):  # one change-feed file per batch
+        write_changefeed_batches(spark, pdf, feed, n_batches=1, start=b)
 
 
 # conv A goes idle after batch 0; conv B keeps streaming, advancing the

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from dstream_spark.fixtures.transcripts import generate_transcripts
+from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.operators.windows import session_stream, sessionize_batch, tumbling
 
 
@@ -50,11 +50,8 @@ def test_late_rows_dropped_behind_watermark(spark, tmp_path):
     """Append-mode windowed agg: once the watermark passes, a late row
     must not resurrect a closed window (north-rule late-data contract;
     the reference never faces this — its pipe delivery is ordered)."""
-    import os
-
     import numpy as np
 
-    from dstream_spark.fixtures.transcripts import CHANGEFEED_SCHEMA
     from dstream_spark.sources.registry import changefeed
 
     base = pd.Timestamp("2024-03-01 00:00:00")
@@ -77,20 +74,8 @@ def test_late_rows_dropped_behind_watermark(spark, tmp_path):
     # (batch 1) is accepted and the second (batch 2) must be dropped.
     batches = [mk([0, 1, 120, 121], 0), mk([2], 1), mk([3], 2)]
     feed = str(tmp_path / "feed")
-    os.makedirs(feed)
     for i, part in enumerate(batches):
-        p = part.copy()
-        p["_change_type"] = "insert"
-        p["_commit_version"] = np.int64(i)
-        sdf = spark.createDataFrame(p, schema=CHANGEFEED_SCHEMA)
-        tmp = f"{feed}/.t{i}"
-        sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, src), f"{feed}/b{i}.parquet")
-        import shutil
-
-        shutil.rmtree(tmp)
-        os.utime(f"{feed}/b{i}.parquet", (1_700_000_000 + 10 * i,) * 2)
+        write_changefeed_batches(spark, part, feed, n_batches=1, start=i)
 
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     agg = tumbling(src, "1 hour", keys=("conv_id",), watermark="10 minutes")
