@@ -13,9 +13,14 @@ key is (conv_id, turn_idx); the engine provides:
   operators/cdc.py reproducing dstream's checkpoint-cursor semantics
   exactly (emit only unseen turn_idx, in order).
 
-Scale note: both paths shuffle once on the key. dropDuplicates uses a
-hash aggregate with partial (map-side) dedup before the exchange, so
-duplicate-heavy streams shrink before they shuffle.
+Scale note: both paths shuffle once on the key. With string payload
+columns, dropDuplicates plans a SORT aggregate (its first() buffers
+are not fixed-width, so no hash aggregate), partial (map-side) before
+the exchange and final after it: duplicate-heavy streams shrink before
+they shuffle, at the price of a sort on each side. Where the input is
+already clustered on a key subset (MergeSink repartitions on
+partition_key first) the aggregate adds no exchange and its one sort
+also serves a later sort on the keys.
 """
 
 from __future__ import annotations

@@ -3,23 +3,26 @@
 Upgrades the reference's at-least-once publish-then-advance contract
 (docs/plugins/mssql-ingester.md:72,84-87 — "exactly-once requires
 downstream idempotency") to exactly-once, using Spark's epoch model
-plus a commit-marker protocol:
+plus one rename commit protocol:
 
 1. foreachBatch gives (batch_df, batch_id); batch_id is stable across
    replays of the same epoch.
-2. If this batch_id already has a commit marker → replay → skip
-   entirely (idempotent).
-3. Batch rows are deduped on (conv_id, turn_idx), hash-partitioned on
-   conv_id and sorted within partitions by (conv_id, turn_idx) — the
-   ordered-delivery contract (reference relay order,
+2. If this batch_id already has a committed ``_lineage/batch_id=N``
+   dir → replay → skip entirely (idempotent).
+3. Batch rows are hash-partitioned on conv_id, deduped on
+   (conv_id, turn_idx) and sorted within partitions by
+   (conv_id, turn_idx) — one exchange, one Spark job per epoch. This
+   is the ordered-delivery contract (reference relay order,
    pkg/executor/providers.go:234-261) restated for a parallel engine:
    stable order WITHIN each conversation.
-4. Data files land first; the per-partition lineage (partition_id,
-   batch_id, max_conv_id, max_turn_idx, updated_at — the cdc_offsets
-   shape, docs/capability-inventory.md:179-183) is committed LAST.
-   The commit marker IS the transaction: readers only see batches with
-   markers, so a crash between data write and marker leaves invisible
-   orphans, not dups.
+4. Data files are staged first. The per-partition lineage
+   (partition_id, max_conv_id, max_turn_idx, n_rows, updated_at,
+   batch_id — the cdc_offsets shape,
+   docs/capability-inventory.md:179-183) is then built on the driver
+   from the staged files' names, footers and key columns, and is
+   committed LAST: readers only see batches whose lineage dir is in
+   place, so a crash before that rename leaves invisible orphans, not
+   dups.
 
 HOW a finished batch becomes visible is ``RenameCommitProtocol``:
 data and lineage are staged to tmp dirs and atomically renamed into
@@ -42,11 +45,18 @@ sort-within-partition, lineage in the same transaction) is unchanged.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
+from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from dstream_spark.operators.cdc import apply_changes
 from dstream_spark.operators.dedup import dedup_latest
@@ -55,6 +65,10 @@ from dstream_spark.operators.dedup import dedup_latest
 # replayed epoch produces byte-identical lineage (current_timestamp
 # would differ across replays of the same batch)
 LINEAGE_TS0 = 1_700_000_000
+# Spark names a written file part-<task id>-<job uuid>…; the task id
+# is the partition id of the frame being written
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 class RenameCommitProtocol:
@@ -206,55 +220,41 @@ class MergeSink:
             batch_df = batch_df.withColumn(
                 self.version_col, F.lit(int(batch_id)).cast("long")
             )
-        # Version-keyed sinks: ONE exchange per batch (guide §2.4).
-        # dedup_latest's window requires clustering on the FULL key
-        # set, which the upstream micro-batch plan never provides
-        # (e.g. a windowed agg partitions on the window STRUCT, not
-        # w_start), so the r5 order (dedup, then repartition on
-        # partition_key) shuffled every batch row twice. Repartition
-        # on partition_key FIRST: HashPartitioning(partition_key) is a
-        # subset of the keys' required clustering (partition_key ∈
-        # keys), so the window runs in the same partitions — measured
-        # 395k -> 460k events/s on the windowed update-mode sink at
-        # sf0.1/32 cores. Row-identical: version picks are
-        # deterministic (monotonic version contract).
-        #
-        # dropDuplicates sinks keep dedup-first: their upstream
-        # (dropDuplicatesWithinWatermark) already clusters on the full
-        # key set, so the dedup is exchange-FREE there and reordering
-        # only moves the one repartition earlier (measured slightly
-        # worse). Same for partition_key ∉ keys (the bucket-laid-out
-        # incremental-dedup index), where repartition-first would
-        # re-shuffle on the keys and lose the bucket co-location.
-        if (
-            self.version_col
-            and self.version_col in batch_df.columns
-            and self.partition_key in self.keys
-        ):
-            bdf = dedup_latest(
-                batch_df.repartition(self.n_partitions, self.partition_key),
-                self.keys,
-                self.version_col,
-            )
+        # ONE exchange per epoch: when partition_key ∈ keys, repartition
+        # on it FIRST. HashPartitioning(partition_key) satisfies the
+        # dedup's clustering on the full key set, so the dedup
+        # (dropDuplicates' sort aggregate, dedup_latest's window) adds
+        # no exchange, and its sort on the keys also serves
+        # sortWithinPartitions(*order_cols) when order_cols is a key
+        # prefix. The micro-batch arrives as a ``Scan ExistingRDD``
+        # with no known partitioning, so dedup-first planned partial
+        # aggregate → exchange on the keys → final aggregate → a second
+        # exchange on partition_key → sort: every surviving row, text
+        # included, shuffled twice. partition_key ∉ keys (the
+        # bucket-laid-out incremental-dedup index) keeps dedup-first:
+        # repartition-first would re-shuffle on the keys and lose the
+        # bucket co-location.
+        def dedup(df: DataFrame) -> DataFrame:
+            if self.version_col:
+                return dedup_latest(df, self.keys, self.version_col)
+            return df.dropDuplicates(list(self.keys))
+
+        if self.partition_key in self.keys:
+            bdf = dedup(batch_df.repartition(self.n_partitions, self.partition_key))
         else:
-            if self.version_col and self.version_col in batch_df.columns:
-                bdf = dedup_latest(batch_df, self.keys, self.version_col)
-            else:
-                bdf = batch_df.dropDuplicates(list(self.keys))
-            bdf = bdf.repartition(self.n_partitions, self.partition_key)
+            bdf = dedup(batch_df).repartition(self.n_partitions, self.partition_key)
         bdf = bdf.sortWithinPartitions(*self.order_cols)
-        bdf = bdf.withColumn("_partition_id", F.spark_partition_id())
-        bdf.persist()
-        try:
-            lineage = self._lineage_of(bdf.groupBy("_partition_id"), int(batch_id)) \
-                .withColumnsRenamed({"_partition_id": "partition_id"})
-            self.protocol.publish(
-                int(batch_id),
-                lambda p: self._write_data(bdf.drop("_partition_id"), p),
-                lambda p: lineage.coalesce(1).write.mode("overwrite").parquet(p),
-            )
-        finally:
-            bdf.unpersist()
+        staged = {}
+
+        def write_data(path: str) -> None:
+            self._write_data(bdf, path)
+            staged["data"] = path
+
+        self.protocol.publish(
+            int(batch_id),
+            write_data,
+            lambda p: self._write_lineage(p, staged["data"], int(batch_id), bdf.schema),
+        )
 
     def _write_data(self, df: DataFrame, path: str) -> None:
         w = df.write.mode("overwrite")
@@ -262,15 +262,60 @@ class MergeSink:
             w = w.partitionBy(self.hive_partition_by)
         w.parquet(path)
 
-    def _lineage_of(self, grouped, batch_id: int) -> DataFrame:
-        return grouped.agg(
-            F.max(self.partition_key).alias("max_conv_id"),
-            F.max(self.keys[-1]).alias("max_turn_idx"),
-            F.count(F.lit(1)).alias("n_rows"),
-            # deterministic (epoch-derived): replays of the same batch
-            # produce byte-identical lineage
-            F.timestamp_seconds(F.lit(LINEAGE_TS0 + batch_id)).alias("updated_at"),
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+    def _write_lineage(
+        self, lin_path: str, data_path: str, batch_id: int, schema: StructType
+    ) -> None:
+        """Lineage rows of the data files just staged at ``data_path``,
+        built on the driver with no Spark job: one row per writing
+        task, whose id is the NNNNN of its ``part-NNNNN-…`` files;
+        ``n_rows`` from the footers; max partition_key and max keys[-1]
+        from those two columns, or from the ``col=value`` directory
+        when hive_partition_by moved the column out of the file.
+        Zero-row files are skipped, so an empty epoch commits a
+        zero-row lineage file. ``updated_at`` is epoch-derived, so
+        replays of the same batch produce the same lineage rows."""
+        maxed = {"max_conv_id": self.partition_key, "max_turn_idx": self.keys[-1]}
+        types = {k: to_arrow_type(schema[c].dataType) for k, c in maxed.items()}
+        per_file = {"partition_id": [], **{k: [] for k in maxed}, "n_rows": []}
+        for root, _, files in os.walk(data_path):
+            rel = os.path.relpath(root, data_path).split(os.sep)
+            hive = dict(d.split("=", 1) for d in rel if "=" in d)
+            for name in files:
+                m = _PART_FILE.match(name)
+                if not m:
+                    continue
+                with pq.ParquetFile(os.path.join(root, name)) as f:
+                    n_rows = f.metadata.num_rows
+                    if n_rows == 0:
+                        continue
+                    t = f.read(columns=[c for c in set(maxed.values()) if c not in hive])
+                for k, c in maxed.items():
+                    if c in hive:
+                        v = None if hive[c] == _HIVE_NULL else unquote(hive[c])
+                        v = pa.scalar(v, pa.string())
+                    else:
+                        v = pc.max(t[c])
+                    per_file[k].append(v.cast(types[k]).as_py())
+                per_file["partition_id"].append(int(m.group(1)))
+                per_file["n_rows"].append(n_rows)
+        # one task writes one file per hive directory it touches
+        agg = pa.table(per_file, schema=pa.schema(
+            [("partition_id", pa.int32()), *types.items(), ("n_rows", pa.int64())]
+        )).group_by("partition_id").aggregate(
+            [("max_conv_id", "max"), ("max_turn_idx", "max"), ("n_rows", "sum")]
+        ).sort_by("partition_id")
+        n = agg.num_rows
+        lineage = pa.table(
+            [
+                agg["partition_id"], agg["max_conv_id_max"], agg["max_turn_idx_max"],
+                agg["n_rows_sum"],
+                pa.array([(LINEAGE_TS0 + batch_id) * 1_000_000] * n, pa.timestamp("us", tz="UTC")),
+                pa.array([batch_id] * n, pa.int64()),
+            ],
+            names=["partition_id", *maxed, "n_rows", "updated_at", "batch_id"],
+        )
+        os.makedirs(lin_path)
+        pq.write_table(lineage, os.path.join(lin_path, "part-00000.parquet"))
 
     # -- readers ------------------------------------------------------
     def _empty_table(self, spark: SparkSession) -> DataFrame:
@@ -384,20 +429,11 @@ class MergeSink:
         )
         retire = [b for b in committed if b != base_id]
 
-        def write_lineage(lin_path: str, data_path: str) -> None:
-            lineage = self._lineage_of(
-                spark.read.parquet(data_path).groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                ),
-                int(base_id),
-            )
-            lineage.coalesce(1).write.mode("overwrite").parquet(lin_path)
-
         self.protocol.swap_base(
             int(base_id),
             retire,
             lambda p: self._write_data(snapshot, p),
-            write_lineage,
+            lambda lin, data: self._write_lineage(lin, data, int(base_id), snapshot.schema),
         )
         return int(base_id)
 

@@ -5,7 +5,11 @@ replayed epochs are harmless."""
 
 from __future__ import annotations
 
+import glob
 import os
+
+import pyarrow.parquet as pq
+import pytest
 
 from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
 from dstream_spark.sinks.merge import MergeSink
@@ -54,9 +58,11 @@ def test_replayed_epoch_is_idempotent(spark, tmp_path):
     assert sink.status()["committed_batches"] == 1
 
 
-def test_uncommitted_data_is_invisible(spark, tmp_path):
+def test_uncommitted_data_is_invisible(spark, tmp_path, monkeypatch):
     """Crash AFTER data files, BEFORE the lineage marker: reader must
-    not see the orphaned batch (commit-by-marker protocol)."""
+    not see the orphaned batch (commit-by-marker protocol). Covers a
+    lost lineage dir and a crash inside the file-derived lineage write
+    (data staged, nothing renamed yet)."""
     import shutil
 
     pdf = generate_transcripts(n_convs=2, turns_per_conv=4)
@@ -72,3 +78,30 @@ def test_uncommitted_data_is_invisible(spark, tmp_path):
     # the replayed epoch then commits it for real
     sink.process_batch(sdf.withColumn("turn_idx", sdf.turn_idx + 1000), 1)
     assert sink.read_table(spark).count() == 2 * len(pdf)
+
+    # crash INSIDE the lineage write: the data dir is staged, the
+    # lineage rows are built, writing them raises before any rename
+    epoch2 = sdf.withColumn("turn_idx", sdf.turn_idx + 2000)
+    staged = []
+
+    def crash(table, where, **kw):
+        staged.extend(glob.glob(os.path.join(sink.data_dir, "batch_id=2.tmp-*", "part-*")))
+        raise OSError("crash in write_lineage")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", crash)
+        with pytest.raises(OSError, match="crash in write_lineage"):
+            sink.process_batch(epoch2, 2)
+    assert staged  # the data files were staged when the crash hit
+    assert sink.committed_batches() == {0, 1}
+    for d in (sink.data_dir, sink.lineage_dir):
+        assert "batch_id=2" not in os.listdir(d)
+    out = sink.read_table(spark)
+    assert out.count() == 2 * len(pdf)
+    assert out.filter("turn_idx >= 2000").count() == 0
+    # the replay commits the epoch exactly once
+    sink.process_batch(epoch2, 2)
+    assert sink.committed_batches() == {0, 1, 2}
+    out = sink.read_table(spark)
+    assert out.count() == 3 * len(pdf)
+    assert out.select("conv_id", "turn_idx").distinct().count() == 3 * len(pdf)
