@@ -3,12 +3,16 @@ parameterized over the pattern.
 
 A pattern is a fixed-length sequence of per-turn predicates
 (``Step``), matched against CONSECUTIVE turns of one conversation
-within a time bound. The batch form of each pattern is a lead()-window
-scan (queries_ext.q_cep_user_agent_tool / q_cep_tool_retry); this is
-the STREAMING form — the same match semantics detected across
-micro-batch boundaries with applyInPandasWithState. Per conversation
-the state holds the last k-1 turns plus the cursor high-water mark
-(k = pattern length), so:
+within a time bound. The batch form of each fixed-length pattern is
+``cep_pattern_batch``, which compiles the same ``Step`` tuple into one
+lead()-window scan; the streaming form detects the same matches across
+micro-batch boundaries with applyInPandasWithState. Every streaming
+pattern form (fixed-length, optional, followed-by, not-followed-by,
+plus/star) runs through one state driver (``_state_fn``) and one
+stream wrapper (``_apply``): a form supplies only its scan over the
+turns and its timeout flush. Per conversation the state holds the
+cursor high-water mark plus the form's pending turns (for a
+fixed-length pattern, the last k-1 turns), so:
 
 - a match split across micro-batches is still detected (the pending
   turns bridge the boundary);
@@ -27,9 +31,12 @@ pattern is oracle-checked against its batch lead()-window SQL.
 from __future__ import annotations
 
 import json
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -42,10 +49,11 @@ CEP_OUT_SCHEMA = T.StructType(
     ]
 )
 
-# state = one JSON document: {"c": cursor high-water mark,
-# "p": [[role, tool, epoch_s, turn_idx] × (k-1) pending turns]}.
-# A single string field keeps the schema independent of pattern
-# length, so every pattern shares one state layout.
+# state = one JSON document: {"c": cursor high-water mark, plus the
+# form's pending state, e.g. "p": [[role, tool, epoch_s, turn_idx] ×
+# (k-1) pending turns] for a fixed-length pattern}. A single string
+# field keeps the schema independent of pattern length and form, so
+# every pattern shares one state layout.
 CEP_STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
 
 PATTERN_SPAN_S = 64800  # whole sequence inside 18 h (fixture cadence is hours)
@@ -116,6 +124,104 @@ USER_ALT_TOOL = (
 )  # "user -> (agent reply | tool turn) -> tool call": ALTERNATION step
 
 
+def _state_fn(scan, schema: T.StructType, ttl_s: int | None = None, flush=None):
+    """The applyInPandasWithState body every pattern form shares.
+
+    Per call it decodes the JSON state ({} when absent), drops turns
+    at or below the cursor, sorts and dedups the batch by turn_idx,
+    turns it into ``[role, tool-or-None, epoch_s, turn_idx]`` lists,
+    and hands them to ``scan(conv_id, meta, turns) -> (rows, kept)``:
+    ``rows`` are output tuples in ``schema`` order, ``kept`` the form's
+    own state keys, stored after the cursor. With ``ttl_s`` set the
+    event-time timeout is re-armed at last turn + ttl_s. On timeout the
+    state is removed and ``flush(conv_id, meta)`` (if given) returns
+    the rows the form can now decide."""
+    cols = schema.fieldNames()
+
+    def fn(key, pdfs, state):
+        import pandas as pd
+
+        conv_id = key[0]
+        if getattr(state, "hasTimedOut", False):
+            # watermark passed last turn + ttl: no pattern can complete
+            # from this state — drop it. The cursor is safe to lose
+            # too: any replayed turn is older than the watermark and is
+            # filtered before the operator.
+            meta = json.loads(state.get[0]) if flush and state.exists else None
+            state.remove()
+            out = flush(conv_id, meta) if meta else []
+            if out:
+                yield pd.DataFrame(out, columns=cols)
+            return
+
+        meta = json.loads(state.get[0]) if state.exists else {}
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        batch = batch[batch["turn_idx"] > meta.get("c", -1)]  # cursor: reject replays
+        if not len(batch):
+            return
+        batch = batch.sort_values("turn_idx").drop_duplicates(
+            subset=["turn_idx"], keep="first"
+        )
+        turns = [
+            [r, (tl if isinstance(tl, str) else None), int(t), int(i)]
+            for r, tl, t, i in zip(
+                batch["role"],
+                batch["tool"],
+                batch["ts"].astype("int64") // 10**9,
+                batch["turn_idx"].astype("int64"),
+            )
+        ]
+        out, kept = scan(conv_id, meta, turns)
+        last_t, last_idx = turns[-1][2], turns[-1][3]
+        state.update((json.dumps({"c": last_idx, **kept}),))
+        if ttl_s is not None:
+            # timeout must stay ahead of the current watermark
+            state.setTimeoutTimestamp(
+                max((last_t + ttl_s) * 1000, state.getCurrentWatermarkMs() + 1)
+            )
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return fn
+
+
+def _apply(df: DataFrame, body, schema: T.StructType, ttl_s: int | None,
+           wm_delay_s: int) -> DataFrame:
+    """Run ``body`` per conversation over the feed's five turn columns.
+    With ``ttl_s`` the state times out on event time: the watermark
+    rides a derived ``_evt`` instant column so the at-rest NTZ ``ts`` is
+    never session-timezone-shifted through Arrow. Without it the
+    operator needs no watermark and state never times out."""
+    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
+    timeout = GroupStateTimeout.NoTimeout
+    if ttl_s is not None:
+        from dstream_spark.operators.event_time import to_instant
+
+        cols = cols.withColumn("_evt", to_instant("ts")).withWatermark(
+            "_evt", f"{wm_delay_s} seconds"
+        )
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return cols.groupBy("conv_id").applyInPandasWithState(
+        body,
+        outputStructType=schema,
+        stateStructType=CEP_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def _window_hit(conv_id, window, pattern, span_s):
+    """The CEP_OUT_SCHEMA row for ``window`` (consecutive turns, one
+    per step) if every step matches and first→last <= span_s."""
+    tools = [w[1] for w in window]
+    span = window[-1][2] - window[0][2]
+    if span <= span_s and all(
+        s.matches(w[0], w[1], tools) for s, w in zip(pattern, window)
+    ):
+        return (conv_id, window[0][3], window[-1][1], span)
+    return None
+
+
 def make_cep_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
                 ttl_s: int | None = None):
     """Build the applyInPandasWithState body for ``pattern``: emits
@@ -136,80 +242,17 @@ def make_cep_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
     if k < 2:
         raise ValueError("a CEP pattern needs at least 2 steps")
 
-    def cep_fn(key, pdfs, state):
-        import pandas as pd
-
-        if getattr(state, "hasTimedOut", False):
-            # watermark passed last_pending + ttl: the pattern can
-            # never complete from this state — drop it. The cursor is
-            # safe to lose too: any replayed turn is older than the
-            # watermark and is filtered before the operator.
-            state.remove()
-            return
-
-        conv_id = key[0]
-        cursor, pending = -1, []
-        if state.exists:
-            meta = json.loads(state.get[0])
-            cursor, pending = meta["c"], meta["p"]
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > cursor]  # cursor: reject replays
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-
-        rows = list(pending) + [
-            [r, (tl if isinstance(tl, str) else None), int(t), int(i)]
-            for r, tl, t, i in zip(
-                batch["role"],
-                batch["tool"],
-                batch["ts"].astype("int64") // 10**9,
-                batch["turn_idx"].astype("int64"),
-            )
-        ]
-        n_pending = len(pending)
-        out = []
+    def scan(conv_id, meta, turns):
+        pending = meta.get("p", [])
+        rows = pending + turns
         # a match fires when its LAST step arrives in THIS batch
-        for e in range(max(k - 1, n_pending), len(rows)):
-            window = rows[e - k + 1 : e + 1]
-            window_tools = [w[1] for w in window]
-            if (
-                all(
-                    s.matches(w[0], w[1], window_tools)
-                    for s, w in zip(pattern, window)
-                )
-                and window[-1][2] - window[0][2] <= span_s
-            ):
-                out.append(
-                    (
-                        conv_id,
-                        int(window[0][3]),
-                        window[-1][1],
-                        int(window[-1][2] - window[0][2]),
-                    )
-                )
-
-        state.update(
-            (json.dumps({"c": int(rows[-1][3]), "p": rows[-(k - 1):]}),)
+        hits = (
+            _window_hit(conv_id, rows[e - k + 1 : e + 1], pattern, span_s)
+            for e in range(max(k - 1, len(pending)), len(rows))
         )
-        if ttl_s is not None:
-            # timeout must stay ahead of the current watermark
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(int(rows[-1][2]) * 1000 + ttl_s * 1000, wm_ms + 1)
-            )
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in CEP_OUT_SCHEMA.fields])
+        return [h for h in hits if h], {"p": rows[-(k - 1):]}
 
-    return cep_fn
-
-
-# backward-compatible name: the default-pattern body (unit tests drive
-# it directly with a fake state)
-_cep_fn = make_cep_fn(USER_AGENT_TOOL)
+    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
 
 
 def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
@@ -255,102 +298,38 @@ def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
             "short match only once no in-span upgrade turn can arrive"
         )
     short = tuple(s for i, s in enumerate(pattern) if i != opt_at[0])
-    cols = [f.name for f in CEP_OUT_SCHEMA.fields]
 
-    def opt_fn(key, pdfs, state):
-        import pandas as pd
-
-        conv_id = key[0]
-        if getattr(state, "hasTimedOut", False):
-            # watermark > last turn + ttl_s: the deferred short (if
-            # any) is final — no admissible turn can upgrade it — and
-            # the pending window is span-dead. Emit, then evict.
-            meta = json.loads(state.get[0]) if state.exists else {"d": None}
-            state.remove()
-            d = meta.get("d")
-            if d:
-                yield pd.DataFrame(
-                    [(conv_id, int(d[0]), d[1], int(d[2]))], columns=cols
-                )
-            return
-
-        cursor, pending, deferred = -1, [], None
-        if state.exists:
-            meta = json.loads(state.get[0])
-            cursor, pending, deferred = meta["c"], meta["p"], meta.get("d")
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > cursor]  # cursor: reject replays
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-
-        rows = list(pending) + [
-            [r, (tl if isinstance(tl, str) else None), int(t), int(i)]
-            for r, tl, t, i in zip(
-                batch["role"],
-                batch["tool"],
-                batch["ts"].astype("int64") // 10**9,
-                batch["turn_idx"].astype("int64"),
-            )
-        ]
+    def scan(conv_id, meta, turns):
+        pending, deferred = meta.get("p", []), meta.get("d")
+        rows = pending + turns
         out = []
         for e in range(len(pending), len(rows)):
             # 1. the long window ending at e (start e-k+1 — the SAME
             #    start as any deferral set at row e-1)
             long_hit = None
             if e >= k - 1:
-                win = rows[e - k + 1 : e + 1]
-                if (
-                    all(s.matches(w[0], w[1]) for s, w in zip(pattern, win))
-                    and win[-1][2] - win[0][2] <= span_s
-                ):
-                    long_hit = (
-                        conv_id,
-                        int(win[0][3]),
-                        win[-1][1],
-                        int(win[-1][2] - win[0][2]),
-                    )
+                long_hit = _window_hit(conv_id, rows[e - k + 1 : e + 1], pattern, span_s)
             # 2. greedy resolution: long supersedes the deferred short
             if deferred is not None:
-                out.append(
-                    long_hit
-                    if long_hit
-                    else (conv_id, int(deferred[0]), deferred[1], int(deferred[2]))
-                )
+                out.append(long_hit or (conv_id, *deferred))
                 deferred = None
             elif long_hit:
                 out.append(long_hit)
             # 3. new short candidate ending at e — deferred one turn
             if e >= k - 2:
-                swin = rows[e - k + 2 : e + 1]
-                if (
-                    all(s.matches(w[0], w[1]) for s, w in zip(short, swin))
-                    and swin[-1][2] - swin[0][2] <= span_s
-                ):
-                    deferred = [
-                        int(swin[0][3]),
-                        swin[-1][1],
-                        int(swin[-1][2] - swin[0][2]),
-                    ]
+                short_hit = _window_hit(conv_id, rows[e - k + 2 : e + 1], short, span_s)
+                if short_hit:
+                    deferred = list(short_hit[1:])
+        return out, {"p": rows[-(k - 1):], "d": deferred}
 
-        state.update(
-            (
-                json.dumps(
-                    {"c": int(rows[-1][3]), "p": rows[-(k - 1):], "d": deferred}
-                ),
-            )
-        )
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(int(rows[-1][2]) * 1000 + ttl_s * 1000, wm_ms + 1)
-        )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+    def flush(conv_id, meta):
+        # watermark > last turn + ttl_s: the deferred short (if any) is
+        # final — no admissible turn can upgrade it — and the pending
+        # window is span-dead. Emit, then evict.
+        d = meta.get("d")
+        return [(conv_id, *d)] if d else []
 
-    return opt_fn
+    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s, flush)
 
 
 def cep_optional_stream(
@@ -370,19 +349,8 @@ def cep_optional_stream(
     watermark and are absorbed by the late filter."""
     if ttl_s is None:
         ttl_s = span_s
-    from dstream_spark.operators.event_time import to_instant
-
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    evt = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-        "_evt", f"{wm_delay_s} seconds"
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_optional_fn(pattern, span_s, ttl_s),
-        outputStructType=CEP_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _apply(df, make_optional_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
+                  ttl_s, wm_delay_s)
 
 
 def make_followed_by_fn(a: Step, b: Step, n_turns: int,
@@ -407,61 +375,25 @@ def make_followed_by_fn(a: Step, b: Step, n_turns: int,
         # followed-by form has no such window to index
         raise ValueError("followed-by steps cannot use tool_equals_step")
 
-    def fb_fn(key, pdfs, state):
-        import pandas as pd
-
-        if getattr(state, "hasTimedOut", False):
-            state.remove()
-            return
-
-        conv_id = key[0]
-        cursor, pending_a = -1, []  # pending_a: [turn_idx, epoch_s]
-        if state.exists:
-            meta = json.loads(state.get[0])
-            cursor, pending_a = meta["c"], meta["p"]
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > cursor]
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-
+    def scan(conv_id, meta, turns):
+        pending_a = meta.get("p", [])  # [turn_idx, epoch_s]
         out = []
-        last_idx = cursor
-        for role, tool, t_s, idx in zip(
-            batch["role"],
-            batch["tool"],
-            batch["ts"].astype("int64") // 10**9,
-            batch["turn_idx"].astype("int64"),
-        ):
-            tool = tool if isinstance(tool, str) else None
-            t_s, idx = int(t_s), int(idx)
+        for role, tool, t_s, idx in turns:
             if b.matches(role, tool):
-                matched, keep = [], []
-                for a_idx, a_t in pending_a:
+                keep = []
+                for a_idx, a_t in pending_a:  # first B for each pending A
                     if idx - a_idx <= n_turns and t_s - a_t <= span_s:
-                        matched.append((a_idx, a_t))
+                        out.append((conv_id, a_idx, tool, t_s - a_t))
                     else:
                         keep.append([a_idx, a_t])
-                for a_idx, a_t in matched:  # first B for each pending A
-                    out.append((conv_id, int(a_idx), tool, int(t_s - a_t)))
                 pending_a = keep
             if a.matches(role, tool):
                 pending_a.append([idx, t_s])
             # prune: an A more than n_turns behind can never match
             pending_a = [p for p in pending_a if idx - p[0] < n_turns]
-            last_idx, last_t = idx, t_s
+        return out, {"p": pending_a}
 
-        state.update((json.dumps({"c": int(last_idx), "p": pending_a}),))
-        if ttl_s is not None:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(last_t * 1000 + ttl_s * 1000, wm_ms + 1))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in CEP_OUT_SCHEMA.fields])
-
-    return fb_fn
+    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
 
 
 def followed_by_stream(
@@ -476,27 +408,8 @@ def followed_by_stream(
     """Streaming skip-till-next-match 'A followed by B within N turns'
     (see make_followed_by_fn); same exactly-once/cross-batch contract
     as cep_pattern_stream, same optional TTL eviction."""
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    if ttl_s is None:
-        return cols.groupBy("conv_id").applyInPandasWithState(
-            make_followed_by_fn(a, b, n_turns, span_s),
-            outputStructType=CEP_OUT_SCHEMA,
-            stateStructType=CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    from dstream_spark.operators.event_time import to_instant
-
-    evt = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-        "_evt", f"{wm_delay_s} seconds"
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_followed_by_fn(a, b, n_turns, span_s, ttl_s),
-        outputStructType=CEP_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _apply(df, make_followed_by_fn(a, b, n_turns, span_s, ttl_s),
+                  CEP_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 NOT_FOLLOWED_OUT_SCHEMA = T.StructType(
@@ -566,68 +479,26 @@ def make_one_or_more_fn(a: Step, b: Step, c: Step,
     if ttl_s is not None and ttl_s < span_s:
         raise ValueError("ttl_s must be >= span_s: eviction is exact only "
                          "once no in-span C-turn can arrive")
-    cols = [f.name for f in ONE_OR_MORE_OUT_SCHEMA.fields]
 
-    def oom_fn(key, pdfs, state):
-        import pandas as pd
-
-        if getattr(state, "hasTimedOut", False):
-            # pure eviction — a candidate here can never complete
-            # in-span (see docstring); nothing to emit
-            state.remove()
-            return
-
-        conv_id = key[0]
-        cursor, cand = -1, None  # cand: [a_idx, a_ts, run_len]
-        if state.exists:
-            meta = json.loads(state.get[0])
-            cursor, cand = meta["c"], meta.get("a")
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > cursor]  # cursor: reject replays
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-
+    def scan(conv_id, meta, turns):
+        cand = meta.get("a")  # [a_idx, a_ts, run_len]
         out = []
-        last_idx, last_t = cursor, None
-        for role, tool, t_s, idx in zip(
-            batch["role"],
-            batch["tool"],
-            batch["ts"].astype("int64") // 10**9,
-            batch["turn_idx"].astype("int64"),
-        ):
-            tool = tool if isinstance(tool, str) else None
-            t_s, idx = int(t_s), int(idx)
+        for role, tool, t_s, idx in turns:
             if cand is not None and b.matches(role, tool):
                 cand[2] += 1  # possessive: B consumes first
-            else:
-                if (
-                    cand is not None
-                    and cand[2] >= min_reps
-                    and c.matches(role, tool)
-                    and t_s - cand[1] <= span_s
-                ):
-                    out.append(
-                        (conv_id, int(cand[0]), int(cand[2]), tool,
-                         int(t_s - cand[1]))
-                    )
-                # the run closed (matched or not) — candidate is spent
-                cand = [idx, t_s, 0] if a.matches(role, tool) else None
-            last_idx, last_t = idx, t_s
+                continue
+            if (
+                cand is not None
+                and cand[2] >= min_reps
+                and c.matches(role, tool)
+                and t_s - cand[1] <= span_s
+            ):
+                out.append((conv_id, cand[0], cand[2], tool, t_s - cand[1]))
+            # the run closed (matched or not) — candidate is spent
+            cand = [idx, t_s, 0] if a.matches(role, tool) else None
+        return out, {"a": cand}
 
-        state.update((json.dumps({"c": int(last_idx), "a": cand}),))
-        if ttl_s is not None:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(last_t * 1000 + ttl_s * 1000, wm_ms + 1)
-            )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return oom_fn
+    return _state_fn(scan, ONE_OR_MORE_OUT_SCHEMA, ttl_s)
 
 
 def one_or_more_stream(
@@ -645,47 +516,10 @@ def one_or_more_stream(
     ttl_s the operator needs no watermark at all (emission is purely
     in-data); with it, idle conversations are EventTimeTimeout-evicted
     exactly like the other pattern forms. ``min_reps=0`` is the
-    Kleene-star form (prefer the zero_or_more_stream alias)."""
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    if ttl_s is None:
-        return cols.groupBy("conv_id").applyInPandasWithState(
-            make_one_or_more_fn(a, b, c, span_s, min_reps=min_reps),
-            outputStructType=ONE_OR_MORE_OUT_SCHEMA,
-            stateStructType=CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    from dstream_spark.operators.event_time import to_instant
-
-    evt = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-        "_evt", f"{wm_delay_s} seconds"
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_one_or_more_fn(a, b, c, span_s, ttl_s, min_reps=min_reps),
-        outputStructType=ONE_OR_MORE_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def zero_or_more_stream(
-    df: DataFrame,
-    a: Step,
-    b: Step,
-    c: Step,
-    span_s: int = PATTERN_SPAN_S,
-    ttl_s: int | None = None,
-    wm_delay_s: int = 1800,
-) -> DataFrame:
-    """Streaming possessive 'A B* C' (Kleene STAR / MATCH_RECOGNIZE's
-    zero-or-more quantifier): one_or_more_stream with an empty run
-    admitted — an A-turn directly followed by an in-span C-turn
-    matches with n_reps = 0. Same O(1) candidate state, exactly-once
-    cursor, and purely-in-data emission."""
-    return one_or_more_stream(
-        df, a, b, c, span_s, ttl_s, wm_delay_s, min_reps=0
-    )
+    Kleene-star form ``A B* C``: an A-turn directly followed by an
+    in-span C-turn matches with n_reps = 0."""
+    return _apply(df, make_one_or_more_fn(a, b, c, span_s, ttl_s, min_reps),
+                  ONE_OR_MORE_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
@@ -721,46 +555,10 @@ def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
             "absent once no in-span B can arrive"
         )
 
-    def nf_fn(key, pdfs, state):
-        import pandas as pd
-
-        conv_id = key[0]
-        if getattr(state, "hasTimedOut", False):
-            # watermark > last_turn + ttl_s >= every pending A + span_s:
-            # all pending A-turns are confirmed not-followed — flush
-            # them and drop the state (O(active convs) store)
-            meta = json.loads(state.get[0]) if state.exists else {"p": []}
-            state.remove()
-            if meta["p"]:
-                yield pd.DataFrame(
-                    [(conv_id, int(idx)) for idx, _ in meta["p"]],
-                    columns=["conv_id", "first_turn"],
-                )
-            return
-
-        cursor, pending = -1, []  # pending: [turn_idx, epoch_s]
-        if state.exists:
-            meta = json.loads(state.get[0])
-            cursor, pending = meta["c"], meta["p"]
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > cursor]
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-
+    def scan(conv_id, meta, turns):
+        pending = meta.get("p", [])  # [turn_idx, epoch_s]
         out = []
-        last_idx, last_t = cursor, None
-        for role, tool, t_s, idx in zip(
-            batch["role"],
-            batch["tool"],
-            batch["ts"].astype("int64") // 10**9,
-            batch["turn_idx"].astype("int64"),
-        ):
-            tool = tool if isinstance(tool, str) else None
-            t_s, idx = int(t_s), int(idx)
+        for role, tool, t_s, idx in turns:
             # a B at exactly the turn bound still matches (<=), so
             # match BEFORE confirming on the strict complement (>=)
             if b.matches(role, tool):
@@ -768,26 +566,24 @@ def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
                     p for p in pending
                     if not (idx - p[0] <= n_turns and t_s - p[1] <= span_s)
                 ]
-            confirmed = [
-                p for p in pending if idx - p[0] >= n_turns or t_s - p[1] > span_s
-            ]
-            if confirmed:
-                out.extend((conv_id, int(p[0])) for p in confirmed)
-                pending = [
-                    p for p in pending
-                    if not (idx - p[0] >= n_turns or t_s - p[1] > span_s)
-                ]
+            open_a = []
+            for p in pending:
+                if idx - p[0] >= n_turns or t_s - p[1] > span_s:
+                    out.append((conv_id, p[0]))  # confirmed absent
+                else:
+                    open_a.append(p)
+            pending = open_a
             if a.matches(role, tool):
                 pending.append([idx, t_s])
-            last_idx, last_t = idx, t_s
+        return out, {"p": pending}
 
-        state.update((json.dumps({"c": int(last_idx), "p": pending}),))
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(last_t * 1000 + ttl_s * 1000, wm_ms + 1))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "first_turn"])
+    def flush(conv_id, meta):
+        # watermark > last_turn + ttl_s >= every pending A + span_s:
+        # all pending A-turns are confirmed not-followed — flush them
+        # and drop the state (O(active convs) store)
+        return [(conv_id, idx) for idx, _ in meta["p"]]
 
-    return nf_fn
+    return _state_fn(scan, NOT_FOLLOWED_OUT_SCHEMA, ttl_s, flush)
 
 
 def not_followed_by_stream(
@@ -808,19 +604,8 @@ def not_followed_by_stream(
     never drops a legitimate turn and replays land below it."""
     if ttl_s is None:
         ttl_s = span_s
-    from dstream_spark.operators.event_time import to_instant
-
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    evt = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-        "_evt", f"{wm_delay_s} seconds"
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_not_followed_by_fn(a, b, n_turns, span_s, ttl_s),
-        outputStructType=NOT_FOLLOWED_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _apply(df, make_not_followed_by_fn(a, b, n_turns, span_s, ttl_s),
+                  NOT_FOLLOWED_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 def cep_pattern_stream(
@@ -837,27 +622,53 @@ def cep_pattern_stream(
     ``ttl_s`` bounds state: an idle conversation's pending window is
     evicted once the event-time watermark (``wm_delay_s`` behind the
     stream's max event time) passes its last pending turn + ttl_s —
-    exact for ttl_s >= span_s (see make_cep_fn). The watermark rides a
-    derived ``_evt`` instant column so the at-rest NTZ ``ts`` is never
-    session-timezone-shifted through Arrow."""
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    if ttl_s is None:
-        return cols.groupBy("conv_id").applyInPandasWithState(
-            make_cep_fn(pattern, span_s),
-            outputStructType=CEP_OUT_SCHEMA,
-            stateStructType=CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    from dstream_spark.operators.event_time import to_instant
+    exact for ttl_s >= span_s (see make_cep_fn)."""
+    return _apply(df, make_cep_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
+                  ttl_s, wm_delay_s)
 
-    evt = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-        "_evt", f"{wm_delay_s} seconds"
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_cep_fn(pattern, span_s, ttl_s),
-        outputStructType=CEP_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+
+def cep_pattern_batch(t: DataFrame, pattern: tuple[Step, ...]) -> DataFrame:
+    """Batch twin of make_cep_fn: the matches of a fixed-length
+    ``pattern`` over transcript frame ``t``, as (conv_id, first_turn,
+    tool-of-last-step, span_s), first→last within PATTERN_SPAN_S (the
+    streaming default). One lead()-window scan over
+    (conv_id, turn_idx) — one shuffle on conv_id, no self-joins, which
+    is how pattern matching stays linear at 10^12 turns. Step i reads
+    lead(col, i): ``role`` compiles to ==, ``role_in`` to IN,
+    ``tool_required`` to IS NOT NULL, and ``tool_equals_step`` to SQL
+    equality, which is never true over NULL — as in Step.matches. An
+    ``optional`` step has no fixed-length scan (its twin is a CASE over
+    two windows) and is rejected."""
+    k = len(pattern)
+    if k < 2:
+        raise ValueError("a CEP pattern needs at least 2 steps")
+    if any(s.optional for s in pattern):
+        raise ValueError("cep_pattern_batch compiles fixed-length patterns; "
+                         "an optional step changes the window length")
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    epoch = F.col("ts").cast("timestamp").cast("long")
+    leads = {"_span": F.lead(epoch, k - 1).over(w) - epoch}
+
+    def at(c: str, i: int):
+        # step i's value of column c, selected once as _{c}{i}
+        leads[f"_{c}{i}"] = F.col(c) if i == 0 else F.lead(c, i).over(w)
+        return F.col(f"_{c}{i}")
+
+    conds = [F.col("_span") <= PATTERN_SPAN_S]
+    for i, s in enumerate(pattern):
+        if s.role is not None:
+            conds.append(at("role", i) == s.role)
+        if s.role_in is not None:
+            conds.append(at("role", i).isin(*s.role_in))
+        if s.tool_required:
+            conds.append(at("tool", i).isNotNull())
+        if s.tool_equals_step is not None:
+            conds.append(at("tool", i) == at("tool", s.tool_equals_step))
+    last_tool = at("tool", k - 1)
+    seq = t.select("conv_id", "turn_idx", *(c.alias(n) for n, c in leads.items()))
+    return seq.filter(reduce(operator.and_, conds)).select(
+        "conv_id",
+        F.col("turn_idx").alias("first_turn"),
+        last_tool.alias("tool"),
+        F.col("_span").alias("span_s"),
     )

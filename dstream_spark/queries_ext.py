@@ -568,7 +568,8 @@ def q_stream_tool_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CEP: the user → agent → tool-call triple detected
-    across micro-batch boundaries by applyInPandasWithState — per-conv
+    across micro-batch boundaries by applyInPandasWithState (the state
+    driver every operators/cep pattern form shares) — per-conv
     state is the last TWO turns plus the cursor high-water mark (O(1)
     state at 10^12 turns; a triple split across batches still fires,
     and the replayed batch 0 is rejected by the cursor so every match
@@ -742,113 +743,49 @@ def q_cep_user_agent_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation, detect user → agent → tool-call in three CONSECUTIVE
     turns with the whole sequence inside 18 h (the fixture's turn
     cadence is hours; a production gap would be seconds) — the 'agent
-    acted on a user request with a tool' motif. Expressed as two lead()
-    windows
-    over (conv_id, turn_idx): pattern matching over ordered per-key
-    sequences is a window-function scan (one shuffle on conv_id, no
-    self-joins), which is exactly how it stays linear at 10^12 turns."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    seq = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        epoch.alias("t0"),
-        F.lead("role", 1).over(w).alias("role1"),
-        F.lead("tool", 2).over(w).alias("tool2"),
-        F.lead(epoch, 2).over(w).alias("t2"),
-    )
-    return seq.filter(
-        (F.col("role") == "user")
-        & (F.col("role1") == "agent")
-        & F.col("tool2").isNotNull()
-        & (F.col("t2") - F.col("t0") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("turn_idx").alias("user_turn"),
-        F.col("tool2").alias("tool"),
-        (F.col("t2") - F.col("t0")).alias("span_s"),
-    )
+    acted on a user request with a tool' motif. Compiled by
+    operators/cep.cep_pattern_batch from USER_AGENT_TOOL into one
+    lead()-window scan over (conv_id, turn_idx): pattern matching over
+    ordered per-key sequences is a window-function scan (one shuffle on
+    conv_id, no self-joins), which is exactly how it stays linear at
+    10^12 turns."""
+    from dstream_spark.operators.cep import USER_AGENT_TOOL, cep_pattern_batch
+
+    out = cep_pattern_batch(_transcripts(spark, sf_dir), USER_AGENT_TOOL)
+    # this entry's oracle predates the parameterization: user_turn
+    return out.withColumnRenamed("first_turn", "user_turn")
 
 
 def q_cep_tool_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SECOND shipped CEP pattern through the same machinery:
     tool-error → agent intervention → tool retry in three consecutive
     turns within 18 h (operators/cep.TOOL_AGENT_TOOL). Batch form =
-    one lead()-window scan over (conv_id, turn_idx) — same linear
-    shape as cep_user_agent_tool; the point is that a pattern is now
-    CONFIG (a tuple of Step predicates), not a bespoke operator."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    seq = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        epoch.alias("t0"),
-        F.lead("role", 1).over(w).alias("role1"),
-        F.lead("role", 2).over(w).alias("role2"),
-        F.lead("tool", 2).over(w).alias("tool2"),
-        F.lead(epoch, 2).over(w).alias("t2"),
-    )
-    return seq.filter(
-        (F.col("role") == "tool")
-        & F.col("tool").isNotNull()
-        & (F.col("role1") == "agent")
-        & (F.col("role2") == "tool")
-        & F.col("tool2").isNotNull()
-        & (F.col("t2") - F.col("t0") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        F.col("tool2").alias("tool"),
-        (F.col("t2") - F.col("t0")).alias("span_s"),
-    )
+    cep_pattern_batch's one lead()-window scan over (conv_id,
+    turn_idx) — same linear shape as cep_user_agent_tool; the point is
+    that a pattern is CONFIG (a tuple of Step predicates), not a
+    bespoke operator."""
+    from dstream_spark.operators.cep import TOOL_AGENT_TOOL, cep_pattern_batch
+
+    return cep_pattern_batch(_transcripts(spark, sf_dir), TOOL_AGENT_TOOL)
 
 
 def q_cep_tool_retry_same(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CROSS-STEP-constrained CEP pattern (operators/cep.
     TOOL_RETRY_SAME): tool-error → agent → the SAME tool retried.
     Value constraints between steps are what separate a pattern
-    language from a role filter; batch twin = the lead() scan plus one
-    equality predicate across the captured steps."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    seq = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        epoch.alias("t0"),
-        F.lead("role", 1).over(w).alias("role1"),
-        F.lead("role", 2).over(w).alias("role2"),
-        F.lead("tool", 2).over(w).alias("tool2"),
-        F.lead(epoch, 2).over(w).alias("t2"),
-    )
-    return seq.filter(
-        (F.col("role") == "tool")
-        & F.col("tool").isNotNull()
-        & (F.col("role1") == "agent")
-        & (F.col("role2") == "tool")
-        & F.col("tool2").isNotNull()
-        & (F.col("tool2") == F.col("tool"))
-        & (F.col("t2") - F.col("t0") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        F.col("tool2").alias("tool"),
-        (F.col("t2") - F.col("t0")).alias("span_s"),
-    )
+    language from a role filter; cep_pattern_batch compiles the
+    constraint into one SQL equality across the captured steps of the
+    lead() scan."""
+    from dstream_spark.operators.cep import TOOL_RETRY_SAME, cep_pattern_batch
+
+    return cep_pattern_batch(_transcripts(spark, sf_dir), TOOL_RETRY_SAME)
 
 
 def q_stream_cep_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING form of the tool-retry pattern: the PARAMETERIZED CEP
     operator (cep_pattern_stream with TOOL_AGENT_TOOL) over a
     turn-ordered change feed with a replayed batch — same state
-    machinery as stream_cep_pattern, different Step predicates, so a
+    driver as stream_cep_pattern, different Step predicates, so a
     pattern really is configuration. Oracle: the batch lead()-window
     twin (q_cep_tool_retry's SQL)."""
     from dstream_spark.operators.cep import TOOL_AGENT_TOOL, cep_pattern_stream
@@ -864,32 +801,12 @@ def q_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitting either of two variables, MATCH_RECOGNIZE's alternation):
     user → EITHER an agent reply OR a tool turn → a tool call, three
     consecutive turns within 18 h (operators/cep.USER_ALT_TOOL via
-    Step.role_in). Batch twin: the same single lead()-window scan as
-    every fixed-length pattern, with the middle predicate an IN —
-    alternation costs nothing at the plan level."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    seq = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        epoch.alias("t0"),
-        F.lead("role", 1).over(w).alias("role1"),
-        F.lead("tool", 2).over(w).alias("tool2"),
-        F.lead(epoch, 2).over(w).alias("t2"),
-    )
-    return seq.filter(
-        (F.col("role") == "user")
-        & F.col("role1").isin("agent", "tool")
-        & F.col("tool2").isNotNull()
-        & (F.col("t2") - F.col("t0") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        F.col("tool2").alias("tool"),
-        (F.col("t2") - F.col("t0")).alias("span_s"),
-    )
+    Step.role_in). Batch twin: cep_pattern_batch's single lead()-window
+    scan, as for every fixed-length pattern, with the middle predicate
+    an IN — alternation costs nothing at the plan level."""
+    from dstream_spark.operators.cep import USER_ALT_TOOL, cep_pattern_batch
+
+    return cep_pattern_batch(_transcripts(spark, sf_dir), USER_ALT_TOOL)
 
 
 def q_stream_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1268,21 +1185,22 @@ def q_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING possessive 'A B* C' (operators/cep.zero_or_more_stream):
-    the one_or_more state machine with the empty run admitted —
-    n_reps = 0 matches complete on an adjacent C-turn. Same O(1)
+    """STREAMING possessive 'A B* C' (operators/cep.one_or_more_stream
+    with min_reps=0): the one_or_more state machine with the empty run
+    admitted — n_reps = 0 matches complete on an adjacent C-turn. Same O(1)
     candidate state, cursor exactly-once across a replayed batch,
     purely-in-data emission (no timeout dependence), so the oracle is
     the batch star scan with NO confirmability clause."""
-    from dstream_spark.operators.cep import Step, zero_or_more_stream
+    from dstream_spark.operators.cep import Step, one_or_more_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepzom", split_by_turn=True, replay_batch0=True)
-    out = zero_or_more_stream(
+    out = one_or_more_stream(
         src,
         a=Step(role="user"),
         b=Step(role="agent"),
         c=Step(tool_required=True),
+        min_reps=0,
     )
     return run_stream(out, "append")
 

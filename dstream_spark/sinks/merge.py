@@ -29,7 +29,8 @@ data and lineage are staged to tmp dirs and atomically renamed into
 place; the lineage-dir rename is the commit point. A second publish of
 an already-committed epoch (a split-brain replay past the
 committed_batches() check) discards its staged dirs and leaves the
-committed epoch untouched. It depends on atomic directory rename and
+committed epoch untouched; a write that raises removes its staged
+dirs before the error propagates. It depends on atomic directory rename and
 local ``os`` calls, so it is POSIX-only: an object store would need a
 put-if-absent commit marker instead (the Iceberg snapshot-pointer
 design).
@@ -44,6 +45,7 @@ sort-within-partition, lineage in the same transaction) is unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -69,6 +71,18 @@ LINEAGE_TS0 = 1_700_000_000
 # is the partition id of the frame being written
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+@contextlib.contextmanager
+def _staged(*tmp_dirs: str):
+    """Remove the staged dirs when a write into them raises: the replay
+    stages under fresh names, so nothing else would ever delete them."""
+    try:
+        yield
+    except BaseException:
+        for d in tmp_dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        raise
 
 
 class RenameCommitProtocol:
@@ -98,8 +112,9 @@ class RenameCommitProtocol:
         lineage_path = os.path.join(self.lineage_dir, f"batch_id={batch_id}")
         tmp_data = data_path + f".tmp-{uuid.uuid4().hex[:8]}"
         tmp_lin = lineage_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        write_data(tmp_data)
-        write_lineage(tmp_lin)
+        with _staged(tmp_data, tmp_lin):
+            write_data(tmp_data)
+            write_lineage(tmp_lin)
         if os.path.exists(lineage_path):
             # another writer committed this epoch first: keep its data
             shutil.rmtree(tmp_data, ignore_errors=True)
@@ -140,9 +155,10 @@ class RenameCommitProtocol:
         reader sees a consistent set (the new base is a superset;
         latest-version dedup absorbs the temporary overlap)."""
         tmp_data = os.path.join(self.data_dir, f".compact-{uuid.uuid4().hex[:8]}")
-        write_data(tmp_data)
         tmp_lin = os.path.join(self.lineage_dir, f".compact-{uuid.uuid4().hex[:8]}")
-        write_lineage(tmp_lin, tmp_data)
+        with _staged(tmp_data, tmp_lin):
+            write_data(tmp_data)
+            write_lineage(tmp_lin, tmp_data)
         base_data = os.path.join(self.data_dir, f"batch_id={base_id}")
         aside = base_data + ".old"
         # 1. move old base data aside (data_read serves the aside while

@@ -51,14 +51,6 @@ def observed_row_bytes(path: str, sample_files: int = 16) -> float | None:
     return (tot_bytes / tot_rows) if tot_rows else None
 
 
-def _progress_field(p, name: str):
-    """StreamingQueryProgress attr or plain-dict key (PySpark version
-    differences)."""
-    if isinstance(p, dict):
-        return p.get(name)
-    return getattr(p, name, None)
-
-
 class BatchSizeController:
     """Recommend maxFilesPerTrigger targeting ``target_rows`` input
     rows — or, when ``target_bytes`` is set, a BYTE budget converted
@@ -90,10 +82,8 @@ class BatchSizeController:
         """New files-per-trigger from a segment's batch progress list.
         Batches with zero input (idle ticks) are ignored; with no
         signal the current setting stands."""
-        rows = [
-            int(_progress_field(p, "numInputRows") or 0)
-            for p in progresses
-        ]
+        # a plain dict or a StreamingQueryProgress (a dict subclass)
+        rows = [int(p.get("numInputRows") or 0) for p in progresses]
         rows = [r for r in rows if r > 0]
         if not rows or current_files <= 0:
             return current_files

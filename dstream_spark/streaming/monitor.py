@@ -61,19 +61,13 @@ class Monitor:
                 self._start_errors[name] = e
         return started
 
-    def await_all(self, timeout_s: float | None = None) -> None:
+    def await_all(self) -> None:
         for p in self.pipelines.values():
             if p.query is not None:
-                if timeout_s is None:
-                    try:
-                        p.query.awaitTermination()
-                    except Exception:  # surfaced via status()/crash_monitor
-                        pass
-                else:
-                    try:
-                        p.query.awaitTermination(timeout=timeout_s)
-                    except Exception:
-                        pass
+                try:
+                    p.query.awaitTermination()
+                except Exception:  # surfaced via status()/crash_monitor
+                    pass
 
     def supervise(
         self,

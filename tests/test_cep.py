@@ -33,9 +33,9 @@ def _batch(rows):
 
 
 def _run(state, rows, fn=None):
-    from dstream_spark.operators.cep import _cep_fn
+    from dstream_spark.operators.cep import USER_AGENT_TOOL, make_cep_fn
 
-    fn = fn or _cep_fn
+    fn = fn or make_cep_fn(USER_AGENT_TOOL)
     out = list(fn(("c1",), iter([_batch(rows)]), state))
     return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
@@ -551,3 +551,83 @@ def test_zero_or_more_replay_and_ttl_flush_emit_nothing():
     st.hasTimedOut = True
     assert _run(st, [], fn=_zom(ttl_s=64800)).empty    # flush = eviction only
     assert st.removed and not st.exists
+
+
+def test_batch_compiler_agrees_with_state_fn(spark):
+    """cep_pattern_batch (one lead() scan) finds exactly the matches
+    make_cep_fn (the streaming state driver) emits, for every shipped
+    fixed-length pattern: NULL tools, a NULL-vs-NULL same-tool pair,
+    and spans of exactly PATTERN_SPAN_S and one second more."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from dstream_spark.operators.cep import (
+        PATTERN_SPAN_S as S,
+        TOOL_AGENT_TOOL,
+        TOOL_RETRY_SAME,
+        USER_AGENT_TOOL,
+        USER_ALT_TOOL,
+        USER_OPT_AGENT_TOOL,
+        cep_pattern_batch,
+        make_cep_fn,
+    )
+
+    convs = {  # (role, tool, seconds after T0), in turn order
+        "c1": [
+            ("user", None, 0),
+            ("agent", None, 100),
+            ("tool", "search", S),          # user→agent→tool span == S
+            ("agent", None, S + 100),
+            ("tool", "search", S + 200),    # the SAME tool retried
+            ("agent", None, S + 300),
+            ("tool", "fetch", S + 400),     # a different tool retried
+            ("user", None, 70_000),
+            ("tool", None, 70_100),         # NULL tool as the alternation's middle
+            ("tool", "x", 70_000 + S + 1),  # span S + 1: no match
+        ],
+        "c2": [
+            ("tool", None, 0),
+            ("agent", None, 10),
+            ("tool", None, 20),             # NULL-vs-NULL "same tool"
+            ("user", None, 30),
+            ("tool", None, 40),
+            ("tool", "grep", 50),
+            ("user", None, 100),
+            ("agent", None, 200),
+            ("tool", "grep", 100 + S + 1),  # span S + 1: no match
+        ],
+    }
+    rows = [
+        (cid, i, role, tool, T0 + pd.Timedelta(seconds=sec))
+        for cid, turns in convs.items()
+        for i, (role, tool, sec) in enumerate(turns)
+    ]
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampNTZType()),
+    ])
+    t = spark.createDataFrame([(c, i, r, tl, ts.to_pydatetime()) for c, i, r, tl, ts in rows],
+                              schema)
+
+    for pattern in (USER_AGENT_TOOL, TOOL_AGENT_TOOL, TOOL_RETRY_SAME, USER_ALT_TOOL):
+        batch = {tuple(r) for r in cep_pattern_batch(t, pattern).collect()}
+        fn, stream = make_cep_fn(pattern), set()
+        for cid in convs:
+            conv_rows = [r for r in rows if r[0] == cid]
+            st = FakeState()
+            for chunk in (conv_rows[:4], conv_rows[4:]):  # a batch boundary mid-match
+                for out in fn((cid,), iter([_batch(chunk)]), st):
+                    stream.update(
+                        (r.conv_id, int(r.first_turn), r.tool, int(r.span_s))
+                        for r in out.itertuples()
+                    )
+        assert batch and batch == stream, pattern
+        assert all(span <= S for *_, span in batch)
+    assert ("c1", 0, "search", S) in {
+        tuple(r) for r in cep_pattern_batch(t, USER_AGENT_TOOL).collect()
+    }
+    with pytest.raises(ValueError, match="optional"):
+        cep_pattern_batch(t, USER_OPT_AGENT_TOOL)

@@ -93,6 +93,8 @@ def test_uncommitted_data_is_invisible(spark, tmp_path, monkeypatch):
         with pytest.raises(OSError, match="crash in write_lineage"):
             sink.process_batch(epoch2, 2)
     assert staged  # the data files were staged when the crash hit
+    staged_dirs = os.path.join(str(tmp_path / "table"), "*", "*.tmp-*")
+    assert glob.glob(staged_dirs) == []  # the failed publish removed them
     assert sink.committed_batches() == {0, 1}
     for d in (sink.data_dir, sink.lineage_dir):
         assert "batch_id=2" not in os.listdir(d)
@@ -102,6 +104,7 @@ def test_uncommitted_data_is_invisible(spark, tmp_path, monkeypatch):
     # the replay commits the epoch exactly once
     sink.process_batch(epoch2, 2)
     assert sink.committed_batches() == {0, 1, 2}
+    assert glob.glob(staged_dirs) == []
     out = sink.read_table(spark)
     assert out.count() == 3 * len(pdf)
     assert out.select("conv_id", "turn_idx").distinct().count() == 3 * len(pdf)

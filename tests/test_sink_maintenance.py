@@ -4,6 +4,7 @@ startup, pkg/executor/providers.go:313-405) + lifecycle timeout (K8).
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -67,6 +68,33 @@ def test_compaction_crash_window_still_readable(spark, tmp_path):
     assert sink.committed_batches() == {base}
     assert sink.read_table(spark).count() == total
     assert not os.path.exists(base_data + ".old")
+
+
+def test_failed_compaction_removes_staged_dirs(spark, tmp_path, monkeypatch):
+    """A compact() whose lineage write raises leaves no .compact-* dir
+    behind, the table reads as before, and a second compact() works."""
+    pdf = generate_transcripts(n_convs=3, turns_per_conv=5)
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
+    sdf = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
+    for b in range(3):
+        sink.process_batch(sdf.filter((sdf.turn_idx % 3) == b), b)
+    before = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    def crash(*_a, **_k):
+        raise OSError("crash in write_lineage")
+
+    with monkeypatch.context() as m:
+        m.setattr(sink, "_write_lineage", crash)
+        with pytest.raises(OSError, match="crash in write_lineage"):
+            sink.compact(spark)
+    assert glob.glob(os.path.join(str(tmp_path / "tbl"), "*", ".compact-*")) == []
+    assert sink.committed_batches() == {0, 1, 2}
+    after = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    assert before.equals(after)
+
+    base = sink.compact(spark)
+    assert sink.committed_batches() == {base}
+    assert sink.read_table(spark).count() == len(before)
 
 
 def test_bad_source_type_fails_fast(spark, tmp_path):
