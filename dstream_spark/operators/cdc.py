@@ -14,22 +14,22 @@ cursor, lineage summaries — dstream's core contracts (SURVEY.md §2.3).
 - ``cursor_dedup_stream``: the per-table cursor loop
   (docs/plugins/mssql-ingester.md:64-73) as a stateful streaming
   operator: state per conv_id = max turn_idx seen; each micro-batch
-  emits only unseen turns, in turn order. applyInPandasWithState =
-  grouped, Arrow-batched, state-store-backed — the idiomatic Spark
-  form of "one goroutine per table with a persisted (LSN, Seq) cursor".
+  emits only unseen turns, in turn order. It is the scan-less form of
+  the state driver the CEP patterns share (operators/state.py):
+  applyInPandasWithState = grouped, Arrow-batched, state-store-backed —
+  the idiomatic Spark form of "one goroutine per table with a
+  persisted (LSN, Seq) cursor".
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dstream_spark.fixtures.transcripts import TRANSCRIPT_SCHEMA
+from dstream_spark.operators.state import apply_state, state_fn
 
 
 def apply_changes(
@@ -57,88 +57,11 @@ def lineage_summary(df: DataFrame, key: str = "conv_id") -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- #
-# Stateful cursor operator (streaming)                               #
-# ---------------------------------------------------------------- #
-
-_CURSOR_STATE_SCHEMA = T.StructType([T.StructField("max_turn_idx", T.IntegerType())])
-# TTL form additionally tracks the cursor's event-time high-water mark
-# so the eviction deadline is data-derived, not wall-clock
-_CURSOR_STATE_SCHEMA_TTL = T.StructType(
-    [
-        T.StructField("max_turn_idx", T.IntegerType()),
-        T.StructField("max_ts_s", T.LongType()),
-    ]
-)
-
-
-def make_cursor_fn(ttl_s: int | None = None):
-    """Build the cursor state body. ``ttl_s`` (requires
-    EventTimeTimeout + a watermark): a conversation's cursor is
-    evicted once the watermark passes its newest turn's event time +
-    ttl_s. Safe under the same contract dropDuplicatesWithinWatermark
-    relies on — any replay of an old turn carries an event time below
-    the watermark and is filtered before the operator ever sees it, so
-    a dropped cursor can no longer be regressed. State is O(tables ×
-    ACTIVE conversations), the reference's cursor bound
-    (docs/capability-inventory.md:179-183), instead of O(all
-    conversations ever seen)."""
-
-    def cursor_fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        """Emit only turns beyond the conversation's cursor, in order,
-        and advance the cursor — exactly-once per turn_idx within the
-        stream.
-
-        Mirrors the ingester loop docs/plugins/mssql-ingester.md:64-73:
-        load cursor → filter (seq > cursor) → emit ordered → advance.
-        The 'publish-then-advance' property is supplied by Spark's
-        epoch commit: state updates and sink output commit atomically
-        per batch."""
-        if getattr(state, "hasTimedOut", False):
-            state.remove()  # idle conversation: watermark bounds any replay
-            return
-        if not state.exists:
-            max_seen, max_ts_s = -1, 0
-        elif ttl_s is None:
-            (max_seen,), max_ts_s = state.get, 0
-        else:
-            max_seen, max_ts_s = state.get
-        cols = [f.name for f in TRANSCRIPT_SCHEMA.fields]
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > max_seen]
-        if len(batch):
-            batch = batch.sort_values(["turn_idx"]).drop_duplicates(
-                subset=["turn_idx"], keep="first"
-            )
-            if ttl_s is None:
-                state.update((int(batch["turn_idx"].max()),))
-            else:
-                # ts is NTZ wall time denoting UTC: int64 ns // 1e9 is
-                # the true instant, independent of session timezone
-                max_ts_s = max(
-                    int(max_ts_s), int(batch["ts"].astype("int64").max()) // 10**9
-                )
-                state.update((int(batch["turn_idx"].max()), max_ts_s))
-            yield batch[cols]
-        if ttl_s is not None and state.exists:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ts_s * 1000 + ttl_s * 1000, wm_ms + 1))
-
-    return cursor_fn
-
-
-# backward-compatible name: the NoTimeout body
-_cursor_fn = make_cursor_fn(None)
-
-
 def cursor_dedup_stream(df: DataFrame, ttl_s: int | None = None,
                         wm_delay_s: int = 1800) -> DataFrame:
     """Per-conv_id monotonic cursor dedup over a streaming transcript
-    feed. Input must carry the transcript columns; output is the same
+    feed: the state driver's form with no scan (operators/state.py).
+    Input must carry the transcript columns; output is the same
     schema, each (conv_id, turn_idx) emitted at most once and only in
     increasing turn_idx order.
 
@@ -148,32 +71,13 @@ def cursor_dedup_stream(df: DataFrame, ttl_s: int | None = None,
 
     ``ttl_s`` bounds state to ACTIVE conversations: the cursor is
     evicted once the event-time watermark (``wm_delay_s`` behind max
-    event time) passes the conversation's newest turn + ttl_s — see
-    make_cursor_fn for why that loses no replay protection."""
-    cols = [f.name for f in TRANSCRIPT_SCHEMA.fields]
-    if ttl_s is None:
-        return (
-            df.select(*cols)
-            .groupBy("conv_id")
-            .applyInPandasWithState(
-                _cursor_fn,
-                outputStructType=TRANSCRIPT_SCHEMA,
-                stateStructType=_CURSOR_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    from dstream_spark.operators.event_time import to_instant
-
-    evt = (
-        df.select(*cols)
-        .withColumn("_evt", to_instant("ts"))
-        .withWatermark("_evt", f"{wm_delay_s} seconds")
-    )
-    return evt.groupBy("conv_id").applyInPandasWithState(
-        make_cursor_fn(ttl_s),
-        outputStructType=TRANSCRIPT_SCHEMA,
-        stateStructType=_CURSOR_STATE_SCHEMA_TTL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    event time) passes the conversation's newest turn + ttl_s. Safe
+    under the same contract dropDuplicatesWithinWatermark relies on —
+    any replay of an old turn carries an event time below the
+    watermark and is filtered before the operator ever sees it, so a
+    dropped cursor can no longer be regressed. State is O(tables ×
+    ACTIVE conversations), the reference's cursor bound
+    (docs/capability-inventory.md:179-183), instead of O(all
+    conversations ever seen)."""
+    return apply_state(df, state_fn(None, TRANSCRIPT_SCHEMA, ttl_s), TRANSCRIPT_SCHEMA,
+                       ttl_s, wm_delay_s, cols=TRANSCRIPT_SCHEMA.fieldNames())

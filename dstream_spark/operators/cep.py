@@ -8,11 +8,12 @@ within a time bound. The batch form of each fixed-length pattern is
 lead()-window scan; the streaming form detects the same matches across
 micro-batch boundaries with applyInPandasWithState. Every streaming
 pattern form (fixed-length, optional, followed-by, not-followed-by,
-plus/star) runs through one state driver (``_state_fn``) and one
-stream wrapper (``_apply``): a form supplies only its scan over the
-turns and its timeout flush. Per conversation the state holds the
-cursor high-water mark plus the form's pending turns (for a
-fixed-length pattern, the last k-1 turns), so:
+plus/star) runs on the engine's one state driver
+(operators/state.py: ``state_fn`` + ``apply_state``, shared with the
+cursor dedup): a form supplies only its scan over the turns and its
+timeout flush. Per conversation the state holds the cursor high-water
+mark plus the form's pending turns (for a fixed-length pattern, the
+last k-1 turns), so:
 
 - a match split across micro-batches is still detected (the pending
   turns bridge the boundary);
@@ -30,7 +31,6 @@ pattern is oracle-checked against its batch lead()-window SQL.
 
 from __future__ import annotations
 
-import json
 import operator
 from dataclasses import dataclass
 from functools import reduce
@@ -38,7 +38,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from dstream_spark.operators.state import apply_state, state_fn
 
 CEP_OUT_SCHEMA = T.StructType(
     [
@@ -48,13 +49,6 @@ CEP_OUT_SCHEMA = T.StructType(
         T.StructField("span_s", T.LongType()),
     ]
 )
-
-# state = one JSON document: {"c": cursor high-water mark, plus the
-# form's pending state, e.g. "p": [[role, tool, epoch_s, turn_idx] ×
-# (k-1) pending turns] for a fixed-length pattern}. A single string
-# field keeps the schema independent of pattern length and form, so
-# every pattern shares one state layout.
-CEP_STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
 
 PATTERN_SPAN_S = 64800  # whole sequence inside 18 h (fixture cadence is hours)
 
@@ -124,92 +118,6 @@ USER_ALT_TOOL = (
 )  # "user -> (agent reply | tool turn) -> tool call": ALTERNATION step
 
 
-def _state_fn(scan, schema: T.StructType, ttl_s: int | None = None, flush=None):
-    """The applyInPandasWithState body every pattern form shares.
-
-    Per call it decodes the JSON state ({} when absent), drops turns
-    at or below the cursor, sorts and dedups the batch by turn_idx,
-    turns it into ``[role, tool-or-None, epoch_s, turn_idx]`` lists,
-    and hands them to ``scan(conv_id, meta, turns) -> (rows, kept)``:
-    ``rows`` are output tuples in ``schema`` order, ``kept`` the form's
-    own state keys, stored after the cursor. With ``ttl_s`` set the
-    event-time timeout is re-armed at last turn + ttl_s. On timeout the
-    state is removed and ``flush(conv_id, meta)`` (if given) returns
-    the rows the form can now decide."""
-    cols = schema.fieldNames()
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        conv_id = key[0]
-        if getattr(state, "hasTimedOut", False):
-            # watermark passed last turn + ttl: no pattern can complete
-            # from this state — drop it. The cursor is safe to lose
-            # too: any replayed turn is older than the watermark and is
-            # filtered before the operator.
-            meta = json.loads(state.get[0]) if flush and state.exists else None
-            state.remove()
-            out = flush(conv_id, meta) if meta else []
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-            return
-
-        meta = json.loads(state.get[0]) if state.exists else {}
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch[batch["turn_idx"] > meta.get("c", -1)]  # cursor: reject replays
-        if not len(batch):
-            return
-        batch = batch.sort_values("turn_idx").drop_duplicates(
-            subset=["turn_idx"], keep="first"
-        )
-        turns = [
-            [r, (tl if isinstance(tl, str) else None), int(t), int(i)]
-            for r, tl, t, i in zip(
-                batch["role"],
-                batch["tool"],
-                batch["ts"].astype("int64") // 10**9,
-                batch["turn_idx"].astype("int64"),
-            )
-        ]
-        out, kept = scan(conv_id, meta, turns)
-        last_t, last_idx = turns[-1][2], turns[-1][3]
-        state.update((json.dumps({"c": last_idx, **kept}),))
-        if ttl_s is not None:
-            # timeout must stay ahead of the current watermark
-            state.setTimeoutTimestamp(
-                max((last_t + ttl_s) * 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return fn
-
-
-def _apply(df: DataFrame, body, schema: T.StructType, ttl_s: int | None,
-           wm_delay_s: int) -> DataFrame:
-    """Run ``body`` per conversation over the feed's five turn columns.
-    With ``ttl_s`` the state times out on event time: the watermark
-    rides a derived ``_evt`` instant column so the at-rest NTZ ``ts`` is
-    never session-timezone-shifted through Arrow. Without it the
-    operator needs no watermark and state never times out."""
-    cols = df.select("conv_id", "turn_idx", "role", "tool", "ts")
-    timeout = GroupStateTimeout.NoTimeout
-    if ttl_s is not None:
-        from dstream_spark.operators.event_time import to_instant
-
-        cols = cols.withColumn("_evt", to_instant("ts")).withWatermark(
-            "_evt", f"{wm_delay_s} seconds"
-        )
-        timeout = GroupStateTimeout.EventTimeTimeout
-    return cols.groupBy("conv_id").applyInPandasWithState(
-        body,
-        outputStructType=schema,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
 def _window_hit(conv_id, window, pattern, span_s):
     """The CEP_OUT_SCHEMA row for ``window`` (consecutive turns, one
     per step) if every step matches and first→last <= span_s."""
@@ -252,7 +160,7 @@ def make_cep_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
         )
         return [h for h in hits if h], {"p": rows[-(k - 1):]}
 
-    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
+    return state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
 
 
 def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
@@ -329,7 +237,7 @@ def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
         d = meta.get("d")
         return [(conv_id, *d)] if d else []
 
-    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s, flush)
+    return state_fn(scan, CEP_OUT_SCHEMA, ttl_s, flush)
 
 
 def cep_optional_stream(
@@ -349,8 +257,8 @@ def cep_optional_stream(
     watermark and are absorbed by the late filter."""
     if ttl_s is None:
         ttl_s = span_s
-    return _apply(df, make_optional_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
-                  ttl_s, wm_delay_s)
+    return apply_state(df, make_optional_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
+                       ttl_s, wm_delay_s)
 
 
 def make_followed_by_fn(a: Step, b: Step, n_turns: int,
@@ -393,7 +301,7 @@ def make_followed_by_fn(a: Step, b: Step, n_turns: int,
             pending_a = [p for p in pending_a if idx - p[0] < n_turns]
         return out, {"p": pending_a}
 
-    return _state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
+    return state_fn(scan, CEP_OUT_SCHEMA, ttl_s)
 
 
 def followed_by_stream(
@@ -408,8 +316,8 @@ def followed_by_stream(
     """Streaming skip-till-next-match 'A followed by B within N turns'
     (see make_followed_by_fn); same exactly-once/cross-batch contract
     as cep_pattern_stream, same optional TTL eviction."""
-    return _apply(df, make_followed_by_fn(a, b, n_turns, span_s, ttl_s),
-                  CEP_OUT_SCHEMA, ttl_s, wm_delay_s)
+    return apply_state(df, make_followed_by_fn(a, b, n_turns, span_s, ttl_s),
+                       CEP_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 NOT_FOLLOWED_OUT_SCHEMA = T.StructType(
@@ -498,7 +406,7 @@ def make_one_or_more_fn(a: Step, b: Step, c: Step,
             cand = [idx, t_s, 0] if a.matches(role, tool) else None
         return out, {"a": cand}
 
-    return _state_fn(scan, ONE_OR_MORE_OUT_SCHEMA, ttl_s)
+    return state_fn(scan, ONE_OR_MORE_OUT_SCHEMA, ttl_s)
 
 
 def one_or_more_stream(
@@ -518,8 +426,8 @@ def one_or_more_stream(
     exactly like the other pattern forms. ``min_reps=0`` is the
     Kleene-star form ``A B* C``: an A-turn directly followed by an
     in-span C-turn matches with n_reps = 0."""
-    return _apply(df, make_one_or_more_fn(a, b, c, span_s, ttl_s, min_reps),
-                  ONE_OR_MORE_OUT_SCHEMA, ttl_s, wm_delay_s)
+    return apply_state(df, make_one_or_more_fn(a, b, c, span_s, ttl_s, min_reps),
+                       ONE_OR_MORE_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
@@ -583,7 +491,7 @@ def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
         # and drop the state (O(active convs) store)
         return [(conv_id, idx) for idx, _ in meta["p"]]
 
-    return _state_fn(scan, NOT_FOLLOWED_OUT_SCHEMA, ttl_s, flush)
+    return state_fn(scan, NOT_FOLLOWED_OUT_SCHEMA, ttl_s, flush)
 
 
 def not_followed_by_stream(
@@ -604,8 +512,8 @@ def not_followed_by_stream(
     never drops a legitimate turn and replays land below it."""
     if ttl_s is None:
         ttl_s = span_s
-    return _apply(df, make_not_followed_by_fn(a, b, n_turns, span_s, ttl_s),
-                  NOT_FOLLOWED_OUT_SCHEMA, ttl_s, wm_delay_s)
+    return apply_state(df, make_not_followed_by_fn(a, b, n_turns, span_s, ttl_s),
+                       NOT_FOLLOWED_OUT_SCHEMA, ttl_s, wm_delay_s)
 
 
 def cep_pattern_stream(
@@ -623,8 +531,8 @@ def cep_pattern_stream(
     evicted once the event-time watermark (``wm_delay_s`` behind the
     stream's max event time) passes its last pending turn + ttl_s —
     exact for ttl_s >= span_s (see make_cep_fn)."""
-    return _apply(df, make_cep_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
-                  ttl_s, wm_delay_s)
+    return apply_state(df, make_cep_fn(pattern, span_s, ttl_s), CEP_OUT_SCHEMA,
+                       ttl_s, wm_delay_s)
 
 
 def cep_pattern_batch(t: DataFrame, pattern: tuple[Step, ...]) -> DataFrame:

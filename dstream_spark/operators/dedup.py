@@ -10,8 +10,9 @@ key is (conv_id, turn_idx); the engine provides:
   state bounded by the watermark (state size ∝ in-flight keys, not
   history — the property that survives a 10^12-turn stream);
 - a stateful per-conversation cursor (``cursor_dedup_stream``) in
-  operators/cdc.py reproducing dstream's checkpoint-cursor semantics
-  exactly (emit only unseen turn_idx, in order).
+  operators/cdc.py, the scan-less form of the state driver in
+  operators/state.py, reproducing dstream's checkpoint-cursor
+  semantics exactly (emit only unseen turn_idx, in order).
 
 Scale note: both paths shuffle once on the key. With string payload
 columns, dropDuplicates plans a SORT aggregate (its first() buffers

@@ -16,10 +16,10 @@ Two forms, one oracle:
   key; tie-safe ordering so the result is deterministic under any
   partitioning.
 
-- ``scd2_stream_fn`` (via applyInPandasWithState): the incremental
-  form. State per dimension key = the OPEN version (its identifying
-  event + valid_from). Each micro-batch: drop rows at-or-below the
-  key's cursor (the crash-replay filter — a feed-level replayed batch
+- ``scd2_fn`` (via applyInPandasWithState): the incremental form.
+  State per dimension key = the OPEN version (its identifying event +
+  valid_from). Each micro-batch: drop rows at-or-below the key's
+  cursor (the crash-replay filter — a feed-level replayed batch
   arrives with a fresh batch id, so the sink's commit-marker skip
   cannot absorb it; the cursor can, same contract as
   cursor_dedup_stream), then emit the previous open version CLOSED
@@ -27,7 +27,9 @@ Two forms, one oracle:
   one open. The retroactive close is an UPSERT of an earlier row —
   the merge-on-read sink resolves it because the closing emission
   carries a later epoch version for the same (tool, conv_id,
-  turn_idx) key.
+  turn_idx) key. It keeps its own body, not the per-conversation
+  driver of operators/state.py: it is keyed by tool, not conv_id, and
+  its cursor is the composite (ts_ns, conv_id, turn_idx).
 
 State is O(dimension keys) — NOT evicted by design, unlike the CEP /
 cursor TTL operators: a dimension key's open version stays

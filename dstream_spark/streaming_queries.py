@@ -679,14 +679,12 @@ def stream_cursor_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark) with a crash-replayed batch 0. The replay arrives far
     below the final watermark and is absorbed by the operator's
     late-input filter — the exact contract that makes a TTL-evicted
-    cursor safe (make_cursor_fn) — while conversations whose cursors
+    cursor safe (operators/state.py) — while conversations whose cursors
     were evicted mid-stream (ttl 30 min against a multi-day range)
     still emit every remaining turn exactly once. Output == identity,
     byte-equal to the NoTimeout form's oracle."""
-    from dstream_spark.operators.cdc import cursor_dedup_stream as _cds
-
     src = _feed_source(spark, sf_dir, "cursor_ttl", replay_batch0=True, split_by_time=True)
-    return run_stream(_cds(src, ttl_s=1800, wm_delay_s=600), "append")
+    return run_stream(cursor_dedup_stream(src, ttl_s=1800, wm_delay_s=600), "append")
 
 
 def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -585,3 +585,87 @@ def test_streaming_scd2_fold_equals_batch_lead_any_split(changes, cuts, replay):
                         r.valid_from, vt, r.attr, bool(r.is_current)
                     )
     assert resolved == expected
+
+
+# --- 9. streaming cursor dedup == sequential cursor fold ----------------
+
+
+@settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    turns=st.lists(
+        st.tuples(st.integers(0, 2), _roles, _tools,
+                  st.one_of(st.none(), st.text("ab ", max_size=3)),
+                  st.integers(0, 5)),
+        min_size=1,
+        max_size=24,
+    ),
+    cuts=st.lists(st.integers(1, 23), max_size=4),
+    replays=st.lists(st.tuples(st.integers(0, 4), st.integers(0, 4)), max_size=3),
+    dups=st.lists(st.integers(0, 23), max_size=3),
+    ttl_s=st.sampled_from([None, 600]),
+    rnd=st.randoms(use_true_random=False),
+)
+def test_streaming_cursor_equals_sequential_fold(turns, cuts, replays, dups, ttl_s, rnd):
+    """For ANY interleaving of a few conversations, ANY micro-batch
+    split, earlier batches replayed later, exact duplicate rows inside
+    a batch and any row order within a batch, the cursor body emits
+    what a sequential fold emits — per conversation, the turns above
+    the running max, in turn order — each turn exactly once, and every
+    emitted row equals its input row in all six transcript columns."""
+    import pandas as pd
+
+    from dstream_spark.fixtures.transcripts import TRANSCRIPT_SCHEMA
+    from dstream_spark.operators.state import state_fn
+
+    from tests.test_cep import FakeTtlState, _batch
+
+    # rows as (conv_id, turn_idx, role, tool, ts, text); turn_idx counts
+    # per conversation, event time is non-decreasing across the feed
+    rows, n_seen, t = [], {}, 0
+    for conv, role, tool, text, gap_min in turns:
+        c = f"c{conv}"
+        t += gap_min * 60
+        rows.append((c, n_seen.get(c, 0), role, tool,
+                     pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=t), text))
+        n_seen[c] = n_seen.get(c, 0) + 1
+
+    bounds = sorted({c for c in cuts if c < len(rows)})
+    chunks, start = [], 0
+    for b in bounds + [len(rows)]:
+        chunks.append(rows[start:b])
+        start = b
+    feed = []
+    for p, chunk in enumerate(chunks):
+        batch = chunk + [chunk[d % len(chunk)] for d in dups if d < len(chunk)]
+        feed.append(batch)
+        feed += [chunks[q % (p + 1)] for at, q in replays if at % len(chunks) == p]
+
+    fn = state_fn(None, TRANSCRIPT_SCHEMA, ttl_s)
+    cols = TRANSCRIPT_SCHEMA.fieldNames()
+    states: dict[str, FakeTtlState] = {}
+    cursor: dict[str, int] = {}
+    emitted = []
+    for batch in feed:
+        for c in sorted({r[0] for r in batch}):
+            sub = [r for r in batch if r[0] == c]
+            rnd.shuffle(sub)
+            # the reference fold: turns above the running max, in order
+            want = []
+            for r in sorted(sub, key=lambda r: r[1]):
+                if r[1] > cursor.get(c, -1):
+                    want.append(r)
+                    cursor[c] = r[1]
+            pdf = _batch([r[:5] for r in sub]).assign(text=[r[5] for r in sub])
+            got = []
+            for out in fn((c,), iter([pdf]), states.setdefault(c, FakeTtlState())):
+                assert list(out.columns) == cols
+                got += [(r.conv_id, int(r.turn_idx), r.role, r.tool, r.ts, r.text)
+                        for r in out.itertuples()]
+            assert got == want
+            emitted += got
+
+    assert sorted(emitted, key=lambda r: r[:2]) == sorted(rows, key=lambda r: r[:2])
+    if ttl_s is not None:  # re-armed at the newest turn's event time + ttl
+        last_ts = {r[0]: r[4] for r in rows}
+        for c, st_ in states.items():
+            assert st_.timeout_ms == (int(last_ts[c].timestamp()) + ttl_s) * 1000
