@@ -66,7 +66,7 @@ class Monitor:
             if p.query is not None:
                 try:
                     p.query.awaitTermination()
-                except Exception:  # surfaced via status()/crash_monitor
+                except Exception:  # surfaced via status()["failures"]
                     pass
 
     def supervise(
@@ -146,17 +146,12 @@ class Monitor:
                 q = p.query
                 if q is None or q.isActive:
                     continue
-                err = None
-                try:
-                    q.awaitTermination(timeout=1)
-                except Exception as e:  # noqa: BLE001 — the query's terminal exception
-                    err = e
+                err = q.exception()  # the dead query's terminal exception, or None
+                p.stop(owner=owner)  # release lock/heartbeat (before any retry)
                 if err is None:
                     report[name]["ok"] = True
-                    p.stop(owner=owner)
                     done.add(name)
                 else:
-                    p.stop(owner=owner)  # release lock/heartbeat before the retry
                     self._record_failure(name, p, err, report, retry_at, done,
                                          max_retries, base_backoff_s)
             time.sleep(poll_s)

@@ -18,7 +18,7 @@ Verb semantics (SURVEY.md §3, entry point 2):
 - run: build source → transforms → sink, start the StreamingQuery.
 - init: sink DDL (create dirs/tables) — EnsureDestinationExists (K5).
 - plan: dry-run diff of what init would create.
-- status: query lastProgress + sink commit state (C4 metrics analog).
+- status: query lastProgress + failures + sink state (C4 metrics analog).
 - destroy: drop sink tables + checkpoint.
 
 Single-writer lock (D5): Spark already guarantees one query per
@@ -233,7 +233,6 @@ class Pipeline:
         self._hb_stop: threading.Event | None = None
         self._hb_thread: threading.Thread | None = None
         self.lock_lost: str | None = None  # set by the heartbeat on lease loss
-        self.crash_monitor = None  # FailureCaptureListener when enabled
 
     def _start_heartbeat(self, owner: str) -> None:
         """Renew the lease while the query runs — the reference holds an
@@ -287,13 +286,6 @@ class Pipeline:
             self.lock.acquire(owner)
             self._start_heartbeat(owner)
         try:
-            # opt-in: the listener is session-global and fires per
-            # progress event, so benches keep it off the hot loop
-            if self.conf.get("surface_failures") and self.crash_monitor is None:
-                from dstream_spark.streaming.metrics import FailureCaptureListener
-
-                self.crash_monitor = FailureCaptureListener()
-                self.spark.streams.addListener(self.crash_monitor)
             df = self.build()
             sink_conf = dict(self.conf["sink"])
             writer = get_sink(sink_conf.pop("type"))(df, sink_conf)
@@ -307,14 +299,9 @@ class Pipeline:
             # daemon would renew the lock forever and a self-healing
             # stale lock becomes a permanent lock-out
             self._stop_heartbeat()
-            if self.crash_monitor is not None:
-                self.spark.streams.removeListener(self.crash_monitor)
-                self.crash_monitor = None
             if self.lock:
                 self.lock.release(owner)
             raise
-        if self.crash_monitor is not None:
-            self.crash_monitor.watch(str(self.query.id))
         if await_termination:
             self.query.awaitTermination()
         return self.query
@@ -373,9 +360,6 @@ class Pipeline:
             while self.query.isActive and time.time() < deadline:
                 time.sleep(0.05)
         self._stop_heartbeat()
-        if self.crash_monitor is not None:
-            self.spark.streams.removeListener(self.crash_monitor)
-            self.crash_monitor = None
         if self.lock:
             self.lock.release(owner)
 
@@ -404,10 +388,16 @@ class Pipeline:
 
     def status(self) -> dict:
         out: dict = {"name": self.name, "active": bool(self.query and self.query.isActive)}
-        if self.query is not None:
-            out["last_progress"] = self.query.lastProgress
-        if self.crash_monitor is not None:
-            out["failures"] = list(self.crash_monitor.failures)
+        q = self.query
+        if q is not None:
+            out["last_progress"] = q.lastProgress
+            # C2 crash detection: the handle keeps this query's terminal
+            # exception and its last progress (the batch it died after),
+            # also after stop()
+            err = q.exception()
+            out["failures"] = [] if err is None else [
+                {"id": str(q.id), "exception": str(err), "last_progress": out["last_progress"]}
+            ]
         if self.lock_lost:
             out["lock_lost"] = self.lock_lost
         sink = self.conf.get("sink", {}).get("sink")

@@ -77,9 +77,9 @@ def _write_feed(
     elif split_by_time:
         # batch b = the b-th equal-width event-time RANGE (scalar
         # min/max bounds only — no global Window.orderBy, which plans a
-        # SinglePartition sort, the exact shape PLANS.md bans). Ranges
-        # are disjoint and ordered, so arrival is still strictly
-        # time-ordered across batches and fully deterministic.
+        # SinglePartition sort, the shape tests/test_plan_audit.py
+        # bans). Ranges are disjoint and ordered, so arrival is still
+        # strictly time-ordered across batches and fully deterministic.
         # TIMESTAMP_NTZ → epoch seconds via an intermediate TIMESTAMP
         # cast (NTZ has no direct numeric cast); lo and the per-row
         # value use the same session-tz interpretation, so the slice

@@ -38,23 +38,23 @@ def test_poisoned_batch_surfaces_actionable_error(spark, tmp_path):
             "sink": {"type": "merge", "sink": sink},
             "checkpoint_dir": str(tmp_path / "ckpt"),
             "trigger": {"availableNow": True},
-            "surface_failures": True,
         },
     )
     pipe.init()
     q = pipe.run()
     with pytest.raises(Exception):
         q.awaitTermination()
-    failure = pipe.crash_monitor.wait_for_failure(timeout_s=15)
-    assert failure is not None, "mid-stream death was not surfaced"
+    # no polling: the handle holds the failure once awaitTermination raised
+    failures = pipe.status()["failures"]
+    assert failures, "mid-stream death was not surfaced"
+    failure = failures[0]
+    assert failure["id"] == str(q.id)
     assert failure["exception"], "exception context missing"
     # the good first batch was processed before the crash
     assert failure["last_progress"] is not None
     assert failure["last_progress"]["numInputRows"] > 0
-    status = pipe.status()
-    assert status["failures"], "status() must carry the failure"
     pipe.stop()
-    assert pipe.crash_monitor is None  # listener detached
+    assert pipe.status()["failures"] == failures  # survives stop()
 
 
 def test_clean_run_records_no_failures(spark, tmp_path):
@@ -70,12 +70,11 @@ def test_clean_run_records_no_failures(spark, tmp_path):
             "sink": {"type": "merge", "sink": sink},
             "checkpoint_dir": str(tmp_path / "ckpt"),
             "trigger": {"availableNow": True},
-            "surface_failures": True,
         },
     )
     pipe.init()
     q = pipe.run()
     q.awaitTermination()
-    assert pipe.crash_monitor.failures == []
+    assert pipe.status()["failures"] == []
     assert sink.read_table(spark).count() == len(pdf.drop_duplicates(["conv_id", "turn_idx"]))
     pipe.stop()

@@ -1,6 +1,7 @@
 """Physical-plan audit: assert the plans we want at 100 TB, not just
-the ones that pass. Writes PLANS.md with the formatted plan per
-headline query plus PASS/FAIL checks:
+the ones that pass. Each headline query is collected once, so AQE
+finalizes its own plan (codegen ids and the actual join strategies
+only appear on the final plan), and its formatted plan must show:
 
 - filtered parquet scans carry PushedFilters (predicate pushdown)
 - projected scans read only needed columns (ReadSchema pruning)
@@ -9,18 +10,21 @@ headline query plus PASS/FAIL checks:
   exchange — map-side combine)
 - hot paths run inside WholeStageCodegen
 
-Usage: python tools/explain_audit.py [sf_dir]
+A needle ``"!Foo"`` bans ``Foo`` (a scale anti-pattern); a tuple
+needle passes when none of its banned names and any of its other
+names are in the plan.
+
+Run alone: ``python -m pytest tests/test_plan_audit.py -q``.
 """
 
 from __future__ import annotations
 
-import os
-import sys
+import contextlib
+import io
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
 
-from dstream_spark.queries import QUERIES  # noqa: E402
-from dstream_spark.session import get_spark  # noqa: E402
+from dstream_spark.queries import QUERIES
 
 # query → (must-contain substrings, explanation)
 CHECKS: dict[str, list[tuple[str, str]]] = {
@@ -284,57 +288,22 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
 }
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    failures = []
-    out = ["# PLANS — physical-plan audit\n"]
-    out.append(
-        "Generated by `python tools/explain_audit.py` — asserts the plan\n"
-        "properties that matter at 100 TB (pushdown, pruning, broadcast,\n"
-        "partial agg, codegen) for each headline query.\n"
+def _check(plan: str, needle) -> bool:
+    alts = needle if isinstance(needle, tuple) else (needle,)
+    negated = [n[1:] for n in alts if n.startswith("!")]
+    positive = [n for n in alts if not n.startswith("!")]
+    return all(n not in plan for n in negated) and (
+        not positive or any(n in plan for n in positive)
     )
-    for name, checks in CHECKS.items():
-        df = QUERIES[name].fn(spark, sf_dir)
-        # execute THIS df once so AQE finalizes its own plan (codegen
-        # ids + actual join strategies only appear on the final plan;
-        # a noop write executes a copy and leaves df's plan unfinal)
-        df.collect()
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted") \
-            if hasattr(df, "_jdf") else ""
-        if not plan:
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        out.append(f"\n## {name}\n")
-        for needle, why in checks:
-            alts = needle if isinstance(needle, tuple) else (needle,)
-            # "!Foo" = plan must NOT contain Foo (scale anti-patterns);
-            # negated and positive needles evaluate independently, so a
-            # mixed tuple means "none of the banned AND any of the rest"
-            negated = [n[1:] for n in alts if n.startswith("!")]
-            positive = [n for n in alts if not n.startswith("!")]
-            ok = all(n not in plan for n in negated) and (
-                not positive or any(n in plan for n in positive)
-            )
-            needle = alts[0]
-            out.append(f"- {'PASS' if ok else 'FAIL'}: {why} (`{needle[:60]}...`)" if len(needle) > 60
-                       else f"- {'PASS' if ok else 'FAIL'}: {why} (`{needle}`)")
-            if not ok:
-                failures.append((name, needle))
-        out.append("\n```\n" + plan.strip()[:4000] + "\n```")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"{'FAIL' if failures else 'PASS'}: {len(failures)} failed checks")
-    for name, needle in failures:
-        print(f"  {name}: missing {needle!r}")
-    return 1 if failures else 0
 
 
-if __name__ == "__main__":
-    raise SystemExit(main())
+@pytest.mark.parametrize("name", list(CHECKS))
+def test_plan_audit(spark, sf_dir, name):
+    df = QUERIES[name].fn(spark, sf_dir)
+    df.collect()  # executes THIS df, so its own plan is the final one
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    failed = [f"{why} ({needle!r})" for needle, why in CHECKS[name] if not _check(plan, needle)]
+    assert not failed, f"{name}: " + "; ".join(failed) + "\n" + plan

@@ -1,9 +1,11 @@
-"""EventTimeTimeout state eviction for the two applyInPandasWithState
-operators (operators/cep.py, operators/cdc.py): an idle conversation's
-state must be REMOVED once the watermark passes its last event + TTL —
-the bound that keeps the state store O(active conversations) instead
-of growing forever over an unbounded conv_id universe — while live
-conversations keep matching/deduping exactly as before."""
+"""EventTimeTimeout state eviction for the per-conversation stateful
+operators, the CEP patterns and the cursor dedup, which both run on
+the one applyInPandasWithState driver (operators/state.py): an idle
+conversation's state must be REMOVED once the watermark passes its
+last event + TTL — the bound that keeps the state store O(active
+conversations) instead of growing forever over an unbounded conv_id
+universe — while live conversations keep matching/deduping exactly as
+before."""
 
 from __future__ import annotations
 
