@@ -171,6 +171,9 @@ def generate_transcripts(
             rows.append((f"c{c}", i, role, f"turn {i} of c{c}: {role} says {int(rng.integers(0, 10**6))}", tool, t))
     df = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     df["turn_idx"] = df["turn_idx"].astype("int32")
+    # Spark timestamps are whole microseconds: a finer ts fails Arrow's
+    # safe cast and sends every feed write down the non-Arrow path
+    df["ts"] = df["ts"].dt.floor("us")
 
     if late_fraction > 0:
         k = max(1, int(len(df) * late_fraction))

@@ -3,10 +3,13 @@ parameterized over the pattern.
 
 A pattern is a fixed-length sequence of per-turn predicates
 (``Step``), matched against CONSECUTIVE turns of one conversation
-within a time bound. The batch form of each fixed-length pattern is
-``cep_pattern_batch``, which compiles the same ``Step`` tuple into one
-lead()-window scan; the streaming form detects the same matches across
-micro-batch boundaries with applyInPandasWithState. Every streaming
+within a time bound. Each pattern form has a batch twin compiled
+here from the same ``Step`` arguments as its stream factory, into one
+window scan over (conv_id, turn_idx): ``cep_pattern_batch`` (fixed
+length, or with one optional step), ``followed_by_batch``,
+``not_followed_by_batch`` and ``one_or_more_batch``. The streaming form
+detects the same matches across micro-batch boundaries with
+applyInPandasWithState. Every streaming
 pattern form (fixed-length, optional, followed-by, not-followed-by,
 plus/star) runs on the engine's one state driver
 (operators/state.py: ``state_fn`` + ``apply_state``, shared with the
@@ -65,7 +68,7 @@ class Step:
     tool_required: bool = False
     tool_equals_step: int | None = None
     # greedy zero-or-one step (regex '?' / MATCH_RECOGNIZE B?):
-    # only make_optional_fn interprets this flag
+    # make_optional_fn and cep_pattern_batch interpret this flag
     optional: bool = False
     # ALTERNATION (regex '(x|y)' / MATCH_RECOGNIZE pattern variables
     # sharing a position): role must be one of these. Orthogonal to
@@ -90,7 +93,7 @@ class Step:
         return True
 
 
-# the shipped patterns (each has a batch lead()-window twin + oracle)
+# the shipped patterns (each has a batch twin + oracle)
 USER_AGENT_TOOL = (
     Step(role="user"),
     Step(role="agent"),
@@ -116,6 +119,17 @@ USER_ALT_TOOL = (
     Step(role_in=("agent", "tool")),
     Step(tool_required=True),
 )  # "user -> (agent reply | tool turn) -> tool call": ALTERNATION step
+# the Step arguments of the followed-by and Kleene twin pairs
+USER_THEN_TOOL = (
+    Step(role="user"),
+    Step(role="tool", tool_required=True),
+)  # (a, b): "a user turn (not) followed by a tool invocation"
+USER_AGENTS_TOOL = (
+    Step(role="user"),
+    Step(role="agent"),
+    Step(tool_required=True),
+)  # (a, b, c): "user -> a run of agent turns -> a tool call"
+FOLLOWED_BY_N_TURNS = 6  # 'A followed by B' search window (turns)
 
 
 def _window_hit(conv_id, window, pattern, span_s):
@@ -128,6 +142,46 @@ def _window_hit(conv_id, window, pattern, span_s):
     ):
         return (conv_id, window[0][3], window[-1][1], span)
     return None
+
+
+# Step checks shared by each stream factory and its batch twin
+def _check_fixed(pattern: tuple[Step, ...]) -> None:
+    if len(pattern) < 2:
+        raise ValueError("a CEP pattern needs at least 2 steps")
+
+
+def _optional_at(pattern: tuple[Step, ...]) -> int:
+    """The index of the one ``Step.optional`` of an optional pattern."""
+    opt_at = [i for i, s in enumerate(pattern) if s.optional]
+    if len(opt_at) != 1:
+        raise ValueError("optional patterns need exactly one Step.optional")
+    if any(s.tool_equals_step is not None for s in pattern):
+        # cross-step capture indexes into a fixed window; with an
+        # optional step the indices shift between the two forms
+        raise ValueError("optional patterns cannot use tool_equals_step")
+    if len(pattern) < 3:
+        raise ValueError("an optional pattern needs at least 3 steps")
+    return opt_at[0]
+
+
+def _check_pair(a: Step, b: Step) -> None:
+    if a.tool_equals_step is not None or b.tool_equals_step is not None:
+        # cross-step capture indexes into a consecutive window; the
+        # followed-by forms have no such window to index
+        raise ValueError("followed-by steps cannot use tool_equals_step")
+
+
+def _check_kleene(a: Step, b: Step, c: Step, min_reps: int) -> None:
+    if b.role is None or b.tool_required or b.tool_equals_step is not None:
+        raise ValueError("the repeated step must be role-only (b.role set, "
+                         "no tool constraints)")
+    if a.role is None or a.role == b.role:
+        raise ValueError("a.role must be set and distinct from b.role "
+                         "(possessive == greedy only for disjoint A/B)")
+    if c.tool_equals_step is not None:
+        raise ValueError("one-or-more steps cannot use tool_equals_step")
+    if min_reps not in (0, 1):
+        raise ValueError("min_reps must be 0 (Kleene star) or 1 (plus)")
 
 
 def make_cep_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
@@ -146,9 +200,8 @@ def make_cep_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
     (NoTimeout), per-conversation state lives forever — the unbounded
     conv_id universe at 10^12 turns grows the state store
     monotonically (the r4 review's scale-killer)."""
+    _check_fixed(pattern)
     k = len(pattern)
-    if k < 2:
-        raise ValueError("a CEP pattern needs at least 2 steps")
 
     def scan(conv_id, meta, turns):
         pending = meta.get("p", [])
@@ -190,22 +243,14 @@ def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
     State per conversation: cursor + last k-1 turns + at most ONE
     deferred candidate (each row resolves the previous row's deferral
     before creating its own) — still O(k), flush-evicted."""
+    opt = _optional_at(pattern)
     k = len(pattern)
-    opt_at = [i for i, s in enumerate(pattern) if s.optional]
-    if len(opt_at) != 1:
-        raise ValueError("optional patterns need exactly one Step.optional")
-    if any(s.tool_equals_step is not None for s in pattern):
-        # cross-step capture indexes into a fixed window; with an
-        # optional step the indices shift between the two forms
-        raise ValueError("optional patterns cannot use tool_equals_step")
-    if k < 3:
-        raise ValueError("an optional pattern needs at least 3 steps")
     if ttl_s < span_s:
         raise ValueError(
             "ttl_s must be >= span_s: the flush finalizes a deferred "
             "short match only once no in-span upgrade turn can arrive"
         )
-    short = tuple(s for i, s in enumerate(pattern) if i != opt_at[0])
+    short = pattern[:opt] + pattern[opt + 1:]
 
     def scan(conv_id, meta, turns):
         pending, deferred = meta.get("p", []), meta.get("d")
@@ -242,7 +287,7 @@ def make_optional_fn(pattern: tuple[Step, ...], span_s: int = PATTERN_SPAN_S,
 
 def cep_optional_stream(
     df: DataFrame,
-    pattern: tuple[Step, ...] = USER_OPT_AGENT_TOOL,
+    pattern: tuple[Step, ...],
     span_s: int = PATTERN_SPAN_S,
     ttl_s: int | None = None,
     wm_delay_s: int = 1800,
@@ -278,10 +323,7 @@ def make_followed_by_fn(a: Step, b: Step, n_turns: int,
     span_s = B.ts - A.ts). ``ttl_s`` as in make_cep_fn: with the
     span_s time bound, state older than last_turn + span_s is dead and
     EventTimeTimeout-evictable."""
-    if a.tool_equals_step is not None or b.tool_equals_step is not None:
-        # cross-step capture indexes into a consecutive window; the
-        # followed-by form has no such window to index
-        raise ValueError("followed-by steps cannot use tool_equals_step")
+    _check_pair(a, b)
 
     def scan(conv_id, meta, turns):
         pending_a = meta.get("p", [])  # [turn_idx, epoch_s]
@@ -374,16 +416,7 @@ def make_one_or_more_fn(a: Step, b: Step, c: Step,
     pure state HYGIENE (EventTimeTimeout eviction of idle
     conversations, exact for ttl_s >= span_s: any later admissible
     C-turn would exceed span_s anyway); the flush emits nothing."""
-    if b.role is None or b.tool_required or b.tool_equals_step is not None:
-        raise ValueError("the repeated step must be role-only (b.role set, "
-                         "no tool constraints)")
-    if a.role is None or a.role == b.role:
-        raise ValueError("a.role must be set and distinct from b.role "
-                         "(possessive == greedy only for disjoint A/B)")
-    if c.tool_equals_step is not None:
-        raise ValueError("one-or-more steps cannot use tool_equals_step")
-    if min_reps not in (0, 1):
-        raise ValueError("min_reps must be 0 (Kleene star) or 1 (plus)")
+    _check_kleene(a, b, c, min_reps)
     if ttl_s is not None and ttl_s < span_s:
         raise ValueError("ttl_s must be >= span_s: eviction is exact only "
                          "once no in-span C-turn can arrive")
@@ -455,8 +488,7 @@ def make_not_followed_by_fn(a: Step, b: Step, n_turns: int,
     self-pruning via confirmation — O(n_turns), and removed entirely
     at the timeout flush.
     """
-    if a.tool_equals_step is not None or b.tool_equals_step is not None:
-        raise ValueError("followed-by steps cannot use tool_equals_step")
+    _check_pair(a, b)
     if ttl_s < span_s:
         raise ValueError(
             "ttl_s must be >= span_s: a pending A is only confirmable "
@@ -535,48 +567,157 @@ def cep_pattern_stream(
                        ttl_s, wm_delay_s)
 
 
+def _epoch():
+    """Epoch seconds of the NTZ ``ts`` as wall-clock arithmetic, like
+    the stream body and the oracle: a cast through ``timestamp`` would
+    read ``ts`` in the session time zone and skip or repeat DST hours."""
+    return F.timestamp_diff(
+        "SECOND", F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"), F.col("ts")
+    )
+
+
+def _step_cond(s: Step, at, i: int = 0):
+    """Step.matches as a Column for step ``i``, where ``at(c, j)`` is
+    step j's value of column c: ``role`` compiles to ==, ``role_in`` to
+    IN, ``tool_required`` to IS NOT NULL and ``tool_equals_step`` to SQL
+    equality, which is never true over NULL. A NULL comparison leaves
+    the Column NULL, which a filter reads as no match."""
+    conds = [F.lit(True)]
+    if s.role is not None:
+        conds.append(at("role", i) == s.role)
+    if s.role_in is not None:
+        conds.append(at("role", i).isin(*s.role_in))
+    if s.tool_required:
+        conds.append(at("tool", i).isNotNull())
+    if s.tool_equals_step is not None:
+        conds.append(at("tool", i) == at("tool", s.tool_equals_step))
+    return reduce(operator.and_, conds)
+
+
+def _this_turn(c: str, i: int = 0):
+    # the at() of a single-step predicate: the turn's own column
+    return F.col(c)
+
+
 def cep_pattern_batch(t: DataFrame, pattern: tuple[Step, ...]) -> DataFrame:
-    """Batch twin of make_cep_fn: the matches of a fixed-length
-    ``pattern`` over transcript frame ``t``, as (conv_id, first_turn,
-    tool-of-last-step, span_s), first→last within PATTERN_SPAN_S (the
-    streaming default). One lead()-window scan over
-    (conv_id, turn_idx) — one shuffle on conv_id, no self-joins, which
+    """Batch twin of make_cep_fn, or of make_optional_fn when one step
+    is ``optional``: the matches of ``pattern`` over transcript frame
+    ``t``, as (conv_id, first_turn, tool-of-last-step, span_s),
+    first→last within PATTERN_SPAN_S. One lead()-window scan over
+    (conv_id, turn_idx): one shuffle on conv_id, no self-joins, which
     is how pattern matching stays linear at 10^12 turns. Step i reads
-    lead(col, i): ``role`` compiles to ==, ``role_in`` to IN,
-    ``tool_required`` to IS NOT NULL, and ``tool_equals_step`` to SQL
-    equality, which is never true over NULL — as in Step.matches. An
-    ``optional`` step has no fixed-length scan (its twin is a CASE over
-    two windows) and is rejected."""
-    k = len(pattern)
-    if k < 2:
-        raise ValueError("a CEP pattern needs at least 2 steps")
-    if any(s.optional for s in pattern):
-        raise ValueError("cep_pattern_batch compiles fixed-length patterns; "
-                         "an optional step changes the window length")
+    lead(col, i). With an optional step both the long window (every
+    step) and the short one (the optional step dropped) come from the
+    same leads, and a CASE prefers the long one per start turn."""
+    opt = _optional_at(pattern) if any(s.optional for s in pattern) else None
+    if opt is None:
+        _check_fixed(pattern)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    leads = {"_span": F.lead(epoch, k - 1).over(w) - epoch}
+    cols = {"role": F.col("role"), "tool": F.col("tool"), "t": _epoch()}
+    leads = {}
 
     def at(c: str, i: int):
         # step i's value of column c, selected once as _{c}{i}
-        leads[f"_{c}{i}"] = F.col(c) if i == 0 else F.lead(c, i).over(w)
+        leads[f"_{c}{i}"] = cols[c] if i == 0 else F.lead(cols[c], i).over(w)
         return F.col(f"_{c}{i}")
 
-    conds = [F.col("_span") <= PATTERN_SPAN_S]
-    for i, s in enumerate(pattern):
-        if s.role is not None:
-            conds.append(at("role", i) == s.role)
-        if s.role_in is not None:
-            conds.append(at("role", i).isin(*s.role_in))
-        if s.tool_required:
-            conds.append(at("tool", i).isNotNull())
-        if s.tool_equals_step is not None:
-            conds.append(at("tool", i) == at("tool", s.tool_equals_step))
-    last_tool = at("tool", k - 1)
+    def match(steps):
+        n = len(steps) - 1
+        span = at("t", n) - at("t", 0)
+        conds = [_step_cond(s, at, i) for i, s in enumerate(steps)]
+        return reduce(operator.and_, conds, span <= PATTERN_SPAN_S), at("tool", n), span
+
+    hit, tool, span = match(pattern)
+    if opt is not None:  # greedy: the short window stands only where the long fails
+        short_hit, short_tool, short_span = match(pattern[:opt] + pattern[opt + 1:])
+        tool = F.when(hit, tool).otherwise(short_tool)
+        span = F.when(hit, span).otherwise(short_span)
+        hit = hit | short_hit
     seq = t.select("conv_id", "turn_idx", *(c.alias(n) for n, c in leads.items()))
-    return seq.filter(reduce(operator.and_, conds)).select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        last_tool.alias("tool"),
-        F.col("_span").alias("span_s"),
+    return seq.filter(hit).select(
+        "conv_id", F.col("turn_idx").alias("first_turn"), tool.alias("tool"),
+        span.alias("span_s"),
+    )
+
+
+def _first_b(t: DataFrame, a: Step, b: Step, n_turns: int) -> DataFrame:
+    """The A-turns of ``t`` (conv_id, turn_idx, t0) with ``hit``, the
+    first later B-turn within ``n_turns`` turns and PATTERN_SPAN_S
+    (NULL when none): the next n_turns turns arrive as lead() structs
+    in one array, ``filter`` keeps the qualifying ones and
+    try_element_at takes the first (plain element_at raises on the
+    empty array under ANSI mode). One shuffle on conv_id, no
+    self-join."""
+    _check_pair(a, b)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    fields = {"role": F.col("role"), "tool": F.col("tool"), "t": _epoch(),
+              "turn_idx": F.col("turn_idx")}
+    nxt = F.array(*[
+        F.struct(*(F.lead(c, k).over(w).alias(n) for n, c in fields.items()))
+        for k in range(1, n_turns + 1)
+    ])
+
+    def qualifies(s):
+        # the bound is TURN-INDEX distance, as in the stream body and
+        # the oracle, not the lead() row offset
+        return (
+            _step_cond(b, lambda c, i: s.getField(c))
+            & (s.getField("t") - F.col("t0") <= PATTERN_SPAN_S)
+            & (s.getField("turn_idx") - F.col("turn_idx") <= n_turns)
+        )
+
+    seq = t.select("conv_id", "turn_idx", _epoch().alias("t0"), nxt.alias("nxt"),
+                   _step_cond(a, _this_turn).alias("_a")).filter("_a")
+    return seq.withColumn("hit", F.try_element_at(F.filter("nxt", qualifies), F.lit(1)))
+
+
+def followed_by_batch(t: DataFrame, a: Step, b: Step, n_turns: int) -> DataFrame:
+    """Batch twin of make_followed_by_fn: each A-turn with its first
+    B-turn within n_turns turns and PATTERN_SPAN_S, as
+    (conv_id, first_turn, tool of the B-turn, span_s)."""
+    hits = _first_b(t, a, b, n_turns).filter(F.col("hit").isNotNull())
+    return hits.select(
+        "conv_id", F.col("turn_idx").alias("first_turn"), F.col("hit.tool").alias("tool"),
+        (F.col("hit.t") - F.col("t0")).alias("span_s"),
+    )
+
+
+def not_followed_by_batch(t: DataFrame, a: Step, b: Step, n_turns: int) -> DataFrame:
+    """Batch twin of make_not_followed_by_fn: each A-turn with no
+    qualifying B-turn, as (conv_id, first_turn). The scan sees the
+    whole conversation, so tail A-turns are included, as the stream
+    form's timeout flush emits them."""
+    misses = _first_b(t, a, b, n_turns).filter(F.col("hit").isNull())
+    return misses.select("conv_id", F.col("turn_idx").alias("first_turn"))
+
+
+def one_or_more_batch(t: DataFrame, a: Step, b: Step, c: Step,
+                      min_reps: int = 1) -> DataFrame:
+    """Batch twin of make_one_or_more_fn: ``A B+ C`` (``A B* C`` with
+    min_reps=0) as (conv_id, first_turn, n_reps, tool, span_s). A
+    running count of B-turns plus one lag() over the non-B turns:
+    consecutive non-B turns bracket each B-run, so (previous non-B
+    turn, this turn) and the count delta are the candidate. No
+    self-join and no repeat cap, for runs of any length. Non-B is
+    ``NOT coalesce(B, false)``: Step.matches reads a NULL role as
+    non-B, so such a turn closes the run."""
+    _check_kleene(a, b, c, min_reps)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    is_b = F.coalesce(_step_cond(b, _this_turn), F.lit(False))
+    cum = t.select(
+        "conv_id", "turn_idx", "tool", _epoch().alias("t0"), (~is_b).alias("non_b"),
+        _step_cond(a, _this_turn).alias("is_a"), _step_cond(c, _this_turn).alias("is_c"),
+        F.sum(is_b.cast("int")).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cb"),
+    )
+    seq = cum.filter("non_b").select(
+        "conv_id", "tool", "t0", "cb", "is_c",
+        *(F.lag(x).over(w).alias(f"u_{x}") for x in ("is_a", "turn_idx", "t0", "cb")),
+    )
+    reps = F.col("cb") - F.col("u_cb")
+    span = F.col("t0") - F.col("u_t0")
+    return seq.filter(
+        F.col("u_is_a") & F.col("is_c") & (reps >= min_reps) & (span <= PATTERN_SPAN_S)
+    ).select(
+        "conv_id", F.col("u_turn_idx").alias("first_turn"),
+        reps.cast("int").alias("n_reps"), "tool", span.alias("span_s"),
     )

@@ -9,6 +9,25 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import register_tables
+from dstream_spark.operators.cep import (
+    FOLLOWED_BY_N_TURNS,
+    TOOL_AGENT_TOOL,
+    TOOL_RETRY_SAME,
+    USER_AGENT_TOOL,
+    USER_AGENTS_TOOL,
+    USER_ALT_TOOL,
+    USER_OPT_AGENT_TOOL,
+    USER_THEN_TOOL,
+    cep_optional_stream,
+    cep_pattern_batch,
+    cep_pattern_stream,
+    followed_by_batch,
+    followed_by_stream,
+    not_followed_by_batch,
+    not_followed_by_stream,
+    one_or_more_batch,
+    one_or_more_stream,
+)
 from dstream_spark.queries_base import (
     IDENTITY_SQL,
     Query,
@@ -575,7 +594,6 @@ def q_stream_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the replayed batch 0 is rejected by the cursor so every match
     emits exactly once). Oracle: the batch lead()-window CEP SQL —
     the streaming engine and a window scan must agree row-for-row."""
-    from dstream_spark.operators.cep import cep_pattern_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cep", split_by_turn=True, replay_batch0=True)
@@ -749,8 +767,6 @@ def q_cep_user_agent_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered per-key sequences is a window-function scan (one shuffle on
     conv_id, no self-joins), which is exactly how it stays linear at
     10^12 turns."""
-    from dstream_spark.operators.cep import USER_AGENT_TOOL, cep_pattern_batch
-
     out = cep_pattern_batch(_transcripts(spark, sf_dir), USER_AGENT_TOOL)
     # this entry's oracle predates the parameterization: user_turn
     return out.withColumnRenamed("first_turn", "user_turn")
@@ -764,8 +780,6 @@ def q_cep_tool_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn_idx) — same linear shape as cep_user_agent_tool; the point is
     that a pattern is CONFIG (a tuple of Step predicates), not a
     bespoke operator."""
-    from dstream_spark.operators.cep import TOOL_AGENT_TOOL, cep_pattern_batch
-
     return cep_pattern_batch(_transcripts(spark, sf_dir), TOOL_AGENT_TOOL)
 
 
@@ -776,8 +790,6 @@ def q_cep_tool_retry_same(spark: SparkSession, sf_dir: str) -> DataFrame:
     language from a role filter; cep_pattern_batch compiles the
     constraint into one SQL equality across the captured steps of the
     lead() scan."""
-    from dstream_spark.operators.cep import TOOL_RETRY_SAME, cep_pattern_batch
-
     return cep_pattern_batch(_transcripts(spark, sf_dir), TOOL_RETRY_SAME)
 
 
@@ -788,7 +800,6 @@ def q_stream_cep_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver as stream_cep_pattern, different Step predicates, so a
     pattern really is configuration. Oracle: the batch lead()-window
     twin (q_cep_tool_retry's SQL)."""
-    from dstream_spark.operators.cep import TOOL_AGENT_TOOL, cep_pattern_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepretry", split_by_turn=True, replay_batch0=True)
@@ -804,8 +815,6 @@ def q_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Step.role_in). Batch twin: cep_pattern_batch's single lead()-window
     scan, as for every fixed-length pattern, with the middle predicate
     an IN — alternation costs nothing at the plan level."""
-    from dstream_spark.operators.cep import USER_ALT_TOOL, cep_pattern_batch
-
     return cep_pattern_batch(_transcripts(spark, sf_dir), USER_ALT_TOOL)
 
 
@@ -814,7 +823,6 @@ def q_stream_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Step.role_in rides the unchanged state machinery (every pattern
     form tests predicates through Step.matches), so alternation in
     streaming is pure configuration too. Oracle: the batch IN-scan."""
-    from dstream_spark.operators.cep import USER_ALT_TOOL, cep_pattern_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepalt", split_by_turn=True, replay_batch0=True)
@@ -867,6 +875,25 @@ def _tool_version_dim(spark: SparkSession, sf_dir: str):
     return dim
 
 
+def _tool_versions(spark: SparkSession, sf_dir: str, t: DataFrame) -> DataFrame:
+    """The tool turns of ``t`` joined to the _tool_version_dim version
+    valid at their event time (valid_from <= e < valid_to): one
+    range-predicated broadcast join, for the batch and stream twins."""
+    dim = _tool_version_dim(spark, sf_dir)
+    facts = t.filter(F.col("tool").isNotNull()).select(
+        "conv_id", "turn_idx", "tool",
+        F.col("ts").cast("timestamp").cast("long").alias("e"),
+    )
+    return facts.join(
+        F.broadcast(dim),
+        (facts.tool == dim.tool)
+        & (F.col("e") >= F.col("valid_from"))
+        & (F.col("e") < F.col("valid_to")),
+    ).select(
+        "conv_id", "turn_idx", facts.tool.alias("tool"), "version", "cum_uses"
+    )
+
+
 def q_tool_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TEMPORAL (point-in-time / SCD-2) JOIN: each tool invocation is
     enriched with the dimension VERSION valid at its event time —
@@ -877,19 +904,7 @@ def q_tool_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe is map-side at any fact size; Flink calls this a
     temporal table join, Spark expresses it as a range-predicated
     broadcast join with no custom operator."""
-    t = _transcripts(spark, sf_dir).filter(F.col("tool").isNotNull())
-    dim = _tool_version_dim(spark, sf_dir)
-    e = F.col("ts").cast("timestamp").cast("long")
-    facts = t.select("conv_id", "turn_idx", "tool", e.alias("e"))
-    j = facts.join(
-        F.broadcast(dim),
-        (facts.tool == dim.tool)
-        & (F.col("e") >= F.col("valid_from"))
-        & (F.col("e") < F.col("valid_to")),
-    )
-    return j.select(
-        "conv_id", "turn_idx", facts.tool.alias("tool"), "version", "cum_uses"
-    )
+    return _tool_versions(spark, sf_dir, _transcripts(spark, sf_dir))
 
 
 def q_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,23 +919,7 @@ def q_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "temporal")
-    dim = _tool_version_dim(spark, sf_dir)
-    facts = src.filter(F.col("tool").isNotNull()).select(
-        "conv_id", "turn_idx", "tool",
-        F.col("ts").cast("timestamp").cast("long").alias("e"),
-    )
-    j = facts.join(
-        F.broadcast(dim),
-        (facts.tool == dim.tool)
-        & (F.col("e") >= F.col("valid_from"))
-        & (F.col("e") < F.col("valid_to")),
-    ).select(
-        "conv_id", "turn_idx", facts.tool.alias("tool"), "version", "cum_uses"
-    )
-    return run_stream(j, "append")
-
-
-FOLLOWED_BY_N_TURNS = 6  # 'A followed by B' search window (turns)
+    return run_stream(_tool_versions(spark, sf_dir, src), "append")
 
 
 def q_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -929,53 +928,12 @@ def q_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY a tool invocation within FOLLOWED_BY_N_TURNS turns and 18 h —
     intermediate non-matching turns are skipped, and each user turn
     pairs with its FIRST qualifying tool turn only. Batch form stays a
-    windowed scan (no self-join): the next N turns arrive as N lead()
-    structs in an array, F.filter picks the qualifying ones, and
-    element_at(1) takes the first — one shuffle on conv_id, linear at
-    10^12 turns, same shape as the consecutive patterns."""
-    n = FOLLOWED_BY_N_TURNS
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    nxt = F.array(
-        *[
-            F.struct(
-                F.lead("role", k).over(w).alias("r"),
-                F.lead("tool", k).over(w).alias("tl"),
-                F.lead(epoch, k).over(w).alias("t"),
-                F.lead("turn_idx", k).over(w).alias("i"),
-            )
-            for k in range(1, n + 1)
-        ]
-    )
-    seq = t.select(
-        "conv_id", "turn_idx", "role", epoch.alias("t0"), nxt.alias("nxt")
-    ).filter(F.col("role") == "user")
-
-    def qualifies(s):
-        # the window bound is TURN-INDEX distance, matching the oracle
-        # and the streaming twin exactly — lead() row offsets alone
-        # would over-match if turn_idx ever had gaps (contiguous in
-        # the fixture by construction, but the three forms must agree
-        # on the semantics, not the data)
-        return (
-            (s.getField("r") == "tool")
-            & s.getField("tl").isNotNull()
-            & (s.getField("t") - F.col("t0") <= 64800)
-            & (s.getField("i") - F.col("turn_idx") <= n)
-        )
-
-    # try_element_at: the filtered array is empty when no B qualifies
-    # (plain element_at raises under ANSI mode)
-    hits = seq.withColumn("hit", F.try_element_at(F.filter("nxt", qualifies), F.lit(1))).filter(
-        F.col("hit").isNotNull()
-    )
-    return hits.select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        F.col("hit.tl").alias("tool"),
-        (F.col("hit.t") - F.col("t0")).alias("span_s"),
-    )
+    windowed scan (no self-join): operators/cep.followed_by_batch takes
+    the next N turns as N lead() structs in an array, filters the
+    qualifying ones and takes the first — one shuffle on conv_id,
+    linear at 10^12 turns, same shape as the consecutive patterns."""
+    return followed_by_batch(_transcripts(spark, sf_dir), *USER_THEN_TOOL,
+                             FOLLOWED_BY_N_TURNS)
 
 
 def q_stream_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,58 +943,24 @@ def q_stream_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundaries (state O(n_turns) per conversation), replays are
     cursor-rejected, and the output must equal the batch windowed-scan
     twin row-for-row."""
-    from dstream_spark.operators.cep import Step, followed_by_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepfb", split_by_turn=True, replay_batch0=True)
-    out = followed_by_stream(
-        src,
-        a=Step(role="user"),
-        b=Step(role="tool", tool_required=True),
-        n_turns=FOLLOWED_BY_N_TURNS,
-    )
+    out = followed_by_stream(src, *USER_THEN_TOOL, FOLLOWED_BY_N_TURNS)
     return run_stream(out, "append")
 
 
 def q_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEGATION CEP (Flink CEP notFollowedBy / MATCH_RECOGNIZE
     absence): user turns with NO tool invocation within
-    FOLLOWED_BY_N_TURNS turns and 18 h. Batch form inverts the
+    FOLLOWED_BY_N_TURNS turns and 18 h. Batch form
+    (operators/cep.not_followed_by_batch) inverts the
     skip-till-next-match scan: the same lead-array window, emitting
     rows whose qualifying-B array is EMPTY — conversation tails
     included, because the batch scan sees the whole conversation. One
     shuffle on conv_id, linear at 10^12 turns, no self-join."""
-    n = FOLLOWED_BY_N_TURNS
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    nxt = F.array(
-        *[
-            F.struct(
-                F.lead("role", k).over(w).alias("r"),
-                F.lead("tool", k).over(w).alias("tl"),
-                F.lead(epoch, k).over(w).alias("t"),
-                F.lead("turn_idx", k).over(w).alias("i"),
-            )
-            for k in range(1, n + 1)
-        ]
-    )
-    seq = t.select(
-        "conv_id", "turn_idx", "role", epoch.alias("t0"), nxt.alias("nxt")
-    ).filter(F.col("role") == "user")
-
-    def qualifies(s):
-        return (
-            (s.getField("r") == "tool")
-            & s.getField("tl").isNotNull()
-            & (s.getField("t") - F.col("t0") <= 64800)
-            & (s.getField("i") - F.col("turn_idx") <= n)
-        )
-
-    misses = seq.withColumn(
-        "hit", F.try_element_at(F.filter("nxt", qualifies), F.lit(1))
-    ).filter(F.col("hit").isNull())
-    return misses.select("conv_id", F.col("turn_idx").alias("first_turn"))
+    return not_followed_by_batch(_transcripts(spark, sf_dir), *USER_THEN_TOOL,
+                                 FOLLOWED_BY_N_TURNS)
 
 
 def q_stream_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1051,17 +975,10 @@ def q_stream_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, same treatment as the LEFT OUTER join's null rows. The
     replayed batch lands below the final watermark and is absorbed by
     the late filter, so it cannot re-emit flushed A-turns."""
-    from dstream_spark.operators.cep import Step, not_followed_by_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepnfb", split_by_time=True, replay_batch0=True)
-    out = not_followed_by_stream(
-        src,
-        a=Step(role="user"),
-        b=Step(role="tool", tool_required=True),
-        n_turns=FOLLOWED_BY_N_TURNS,
-        wm_delay_s=600,
-    )
+    out = not_followed_by_stream(src, *USER_THEN_TOOL, FOLLOWED_BY_N_TURNS, wm_delay_s=600)
     return run_stream(out, "append")
 
 
@@ -1069,50 +986,15 @@ def q_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLEENE-PLUS CEP (regex ``A B+ C`` / MATCH_RECOGNIZE one-or-
     more): user → one-or-more consecutive agent turns → a tool call,
     whole sequence within 18 h, run length UNBOUNDED (no max-repeat
-    cap). Batch form: a running count of agent turns plus one lag()
-    over the NON-agent turns — consecutive non-agent rows bracket each
-    agent run, so the pair (previous non-agent turn, this turn) plus
-    the count delta IS the match candidate. Two window functions over
-    the same (conv_id, turn_idx) ordering = ONE shuffle, no self-join,
-    no bounded lead-array — linear at 10^12 turns even for
-    arbitrarily long runs."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    cum = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        epoch.alias("t0"),
-        F.sum(F.when(F.col("role") == "agent", 1).otherwise(0))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("cb"),
-    )
-    nb = cum.filter(F.col("role") != "agent")
-    seq = nb.select(
-        "conv_id",
-        "turn_idx",
-        "tool",
-        "t0",
-        "cb",
-        F.lag("role").over(w).alias("u_role"),
-        F.lag("turn_idx").over(w).alias("u_idx"),
-        F.lag("t0").over(w).alias("u_t"),
-        F.lag("cb").over(w).alias("u_cb"),
-    )
-    return seq.filter(
-        (F.col("u_role") == "user")
-        & (F.col("cb") - F.col("u_cb") >= 1)
-        & F.col("tool").isNotNull()
-        & (F.col("t0") - F.col("u_t") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("u_idx").alias("first_turn"),
-        (F.col("cb") - F.col("u_cb")).cast("int").alias("n_reps"),
-        "tool",
-        (F.col("t0") - F.col("u_t")).alias("span_s"),
-    )
+    cap). Batch form (operators/cep.one_or_more_batch): a running count
+    of agent turns plus one lag() over the NON-agent turns —
+    consecutive non-agent rows bracket each agent run, so the pair
+    (previous non-agent turn, this turn) plus the count delta IS the
+    match candidate. Two window functions over the same (conv_id,
+    turn_idx) ordering = ONE shuffle, no self-join, no bounded
+    lead-array — linear at 10^12 turns even for arbitrarily long
+    runs."""
+    return one_or_more_batch(_transcripts(spark, sf_dir), *USER_AGENTS_TOOL)
 
 
 def q_stream_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,64 +1006,20 @@ def q_stream_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout (a match completes on its C-turn's arrival; a run left
     open at the stream's tail has no C row in the batch twin either),
     so the oracle is the batch scan with NO confirmability clause."""
-    from dstream_spark.operators.cep import Step, one_or_more_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepoom", split_by_turn=True, replay_batch0=True)
-    out = one_or_more_stream(
-        src,
-        a=Step(role="user"),
-        b=Step(role="agent"),
-        c=Step(tool_required=True),
-    )
+    out = one_or_more_stream(src, *USER_AGENTS_TOOL)
     return run_stream(out, "append")
 
 
 def q_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLEENE-STAR CEP (regex ``A B* C`` / MATCH_RECOGNIZE zero-or-
     more): user → ZERO or more consecutive agent turns → a tool call
-    within 18 h. Identical scan shape to q_cep_one_or_more (running
-    agent count + one lag() over the non-agent turns = one shuffle,
-    no self-join, no repeat cap); the only change is the run-length
-    predicate relaxing to >= 0, which admits the adjacent
+    within 18 h. The q_cep_one_or_more scan with min_reps=0: the
+    run-length predicate relaxes to >= 0, which admits the adjacent
     user→tool pair as an empty run (n_reps = 0)."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    cum = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        epoch.alias("t0"),
-        F.sum(F.when(F.col("role") == "agent", 1).otherwise(0))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("cb"),
-    )
-    nb = cum.filter(F.col("role") != "agent")
-    seq = nb.select(
-        "conv_id",
-        "turn_idx",
-        "tool",
-        "t0",
-        "cb",
-        F.lag("role").over(w).alias("u_role"),
-        F.lag("turn_idx").over(w).alias("u_idx"),
-        F.lag("t0").over(w).alias("u_t"),
-        F.lag("cb").over(w).alias("u_cb"),
-    )
-    return seq.filter(
-        (F.col("u_role") == "user")
-        & (F.col("cb") - F.col("u_cb") >= 0)
-        & F.col("tool").isNotNull()
-        & (F.col("t0") - F.col("u_t") <= 64800)
-    ).select(
-        "conv_id",
-        F.col("u_idx").alias("first_turn"),
-        (F.col("cb") - F.col("u_cb")).cast("int").alias("n_reps"),
-        "tool",
-        (F.col("t0") - F.col("u_t")).alias("span_s"),
-    )
+    return one_or_more_batch(_transcripts(spark, sf_dir), *USER_AGENTS_TOOL, min_reps=0)
 
 
 def q_stream_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1191,63 +1029,24 @@ def q_stream_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate state, cursor exactly-once across a replayed batch,
     purely-in-data emission (no timeout dependence), so the oracle is
     the batch star scan with NO confirmability clause."""
-    from dstream_spark.operators.cep import Step, one_or_more_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepzom", split_by_turn=True, replay_batch0=True)
-    out = one_or_more_stream(
-        src,
-        a=Step(role="user"),
-        b=Step(role="agent"),
-        c=Step(tool_required=True),
-        min_reps=0,
-    )
+    out = one_or_more_stream(src, *USER_AGENTS_TOOL, min_reps=0)
     return run_stream(out, "append")
 
 
 def q_cep_optional_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIONAL-STEP CEP (regex ``A B? C`` / MATCH_RECOGNIZE's
     zero-or-one quantifier), GREEDY: user → optional agent turn → tool
-    call over consecutive turns within 18 h. Per starting user turn,
-    emit the 3-turn form if it matches (user, agent, any-role tool
-    call), else the 2-turn form (user, any-role tool call) — never
-    both. Batch form stays ONE lead()-window scan: both windows come
-    from the same two leads and a CASE picks greedily — one shuffle on
-    conv_id, linear at 10^12 turns, same shape as the required-step
-    patterns."""
-    t = _transcripts(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    seq = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        epoch.alias("t0"),
-        F.lead("role", 1).over(w).alias("role1"),
-        F.lead("tool", 1).over(w).alias("tool1"),
-        F.lead(epoch, 1).over(w).alias("t1"),
-        F.lead("tool", 2).over(w).alias("tool2"),
-        F.lead(epoch, 2).over(w).alias("t2"),
-    )
-    long_m = (
-        (F.col("role") == "user")
-        & (F.col("role1") == "agent")
-        & F.col("tool2").isNotNull()
-        & (F.col("t2") - F.col("t0") <= 64800)
-    )
-    short_m = (
-        (F.col("role") == "user")
-        & F.col("tool1").isNotNull()
-        & (F.col("t1") - F.col("t0") <= 64800)
-    )
-    return seq.filter(long_m | short_m).select(
-        "conv_id",
-        F.col("turn_idx").alias("first_turn"),
-        F.when(long_m, F.col("tool2")).otherwise(F.col("tool1")).alias("tool"),
-        F.when(long_m, F.col("t2") - F.col("t0"))
-        .otherwise(F.col("t1") - F.col("t0"))
-        .alias("span_s"),
-    )
+    call over consecutive turns within 18 h (operators/cep.
+    USER_OPT_AGENT_TOOL). Per starting user turn, emit the 3-turn form
+    if it matches (user, agent, any-role tool call), else the 2-turn
+    form (user, any-role tool call) — never both. cep_pattern_batch
+    compiles it into ONE lead()-window scan: both windows come from the
+    same two leads and a CASE picks greedily — one shuffle on conv_id,
+    linear at 10^12 turns, same shape as the required-step patterns."""
+    return cep_pattern_batch(_transcripts(spark, sf_dir), USER_OPT_AGENT_TOOL)
 
 
 def q_stream_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1263,11 +1062,10 @@ def q_stream_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conversation; long matches and in-data-resolved shorts are
     unconditional. The replayed batch lands below the final watermark
     and is absorbed by the late filter."""
-    from dstream_spark.operators.cep import cep_optional_stream
     from dstream_spark.streaming_queries import _feed_source
 
     src = _feed_source(spark, sf_dir, "cepopt", split_by_time=True, replay_batch0=True)
-    out = cep_optional_stream(src, wm_delay_s=600)
+    out = cep_optional_stream(src, USER_OPT_AGENT_TOOL, wm_delay_s=600)
     return run_stream(out, "append")
 
 

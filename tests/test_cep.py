@@ -553,25 +553,61 @@ def test_zero_or_more_replay_and_ttl_flush_emit_nothing():
     assert st.removed and not st.exists
 
 
+def _stream_matches(fn, rows):
+    """Every row the state fn ``fn`` emits over ``rows``, per
+    conversation in two micro-batches split at turn 4 and then one
+    event-time timeout: the batch scan sees whole conversations, so a
+    timeout form must close each one to be comparable."""
+    out = set()
+    for cid in dict.fromkeys(r[0] for r in rows):
+        conv_rows = [r for r in rows if r[0] == cid]
+        st = FakeTtlState()
+        for k, chunk in enumerate((conv_rows[:4], conv_rows[4:], [])):
+            st.hasTimedOut = k == 2
+            for df in fn((cid,), iter([_batch(chunk)]), st):
+                out.update(
+                    tuple(v.item() if hasattr(v, "item") else v for v in r)
+                    for r in df.itertuples(index=False)
+                )
+    return out
+
+
 def test_batch_compiler_agrees_with_state_fn(spark):
-    """cep_pattern_batch (one lead() scan) finds exactly the matches
-    make_cep_fn (the streaming state driver) emits, for every shipped
-    fixed-length pattern: NULL tools, a NULL-vs-NULL same-tool pair,
-    and spans of exactly PATTERN_SPAN_S and one second more."""
-    import pytest
+    """Each batch compiler finds exactly the matches its streaming
+    state fn emits, for every shipped pattern form, with the stream
+    twins' Step arguments: B-turns at exactly n_turns and n_turns + 1,
+    spans of exactly PATTERN_SPAN_S and one second more, NULL tools, a
+    NULL-vs-NULL same-tool pair, a B-run across the batch boundary, a
+    NULL-role turn closing a Kleene run, tail A-turns and a tail short
+    optional match (decided by the timeout flush). The DST-straddling
+    conversation must give wall-clock spans under a non-UTC session
+    too."""
+    from functools import partial
+
     from pyspark.sql import types as T
 
     from dstream_spark.operators.cep import (
+        FOLLOWED_BY_N_TURNS as N,
         PATTERN_SPAN_S as S,
         TOOL_AGENT_TOOL,
         TOOL_RETRY_SAME,
         USER_AGENT_TOOL,
+        USER_AGENTS_TOOL,
         USER_ALT_TOOL,
         USER_OPT_AGENT_TOOL,
+        USER_THEN_TOOL,
         cep_pattern_batch,
+        followed_by_batch,
         make_cep_fn,
+        make_followed_by_fn,
+        make_not_followed_by_fn,
+        make_one_or_more_fn,
+        make_optional_fn,
+        not_followed_by_batch,
+        one_or_more_batch,
     )
 
+    dst = (pd.Timestamp("2024-03-10 01:30:00") - T0).total_seconds()
     convs = {  # (role, tool, seconds after T0), in turn order
         "c1": [
             ("user", None, 0),
@@ -596,6 +632,33 @@ def test_batch_compiler_agrees_with_state_fn(spark):
             ("agent", None, 200),
             ("tool", "grep", 100 + S + 1),  # span S + 1: no match
         ],
+        "c3": [
+            ("user", None, 0),
+            *(("agent", None, 10 * i) for i in range(1, 6)),  # run crosses turn 4
+            ("tool", "search", 60),         # B at exactly n_turns after turn 0
+            ("user", None, 70),
+            *(("agent", None, 70 + 10 * i) for i in range(1, 7)),
+            ("tool", "fetch", 140),         # B at n_turns + 1 after turn 7
+            ("user", None, 150),            # tail A-turn
+        ],
+        "c4": [
+            ("user", None, 0),
+            ("tool", None, 10),             # NULL tool: not a B, fails C
+            ("tool", "x", S),               # B at span == S
+            ("user", None, S + 10),
+            ("tool", "y", 2 * S + 11),      # B at span S + 1
+            ("user", None, 2 * S + 20),
+            ("agent", None, 2 * S + 30),
+            (None, "t", 2 * S + 40),        # NULL role closes the agent run
+            ("user", None, 2 * S + 50),     # tail A-turn
+        ],
+        "c5": [  # America/New_York springs forward at 02:00 on this day
+            ("user", None, dst),
+            ("agent", None, dst + 600),
+            ("tool", "dst", dst + 7200),    # 01:30 → 03:30: 7200 s on the wall clock
+            ("user", None, dst + 7800),
+            ("tool", "z", dst + 8400),      # tail short optional match
+        ],
     }
     rows = [
         (cid, i, role, tool, T0 + pd.Timedelta(seconds=sec))
@@ -612,22 +675,41 @@ def test_batch_compiler_agrees_with_state_fn(spark):
     t = spark.createDataFrame([(c, i, r, tl, ts.to_pydatetime()) for c, i, r, tl, ts in rows],
                               schema)
 
-    for pattern in (USER_AGENT_TOOL, TOOL_AGENT_TOOL, TOOL_RETRY_SAME, USER_ALT_TOOL):
-        batch = {tuple(r) for r in cep_pattern_batch(t, pattern).collect()}
-        fn, stream = make_cep_fn(pattern), set()
-        for cid in convs:
-            conv_rows = [r for r in rows if r[0] == cid]
-            st = FakeState()
-            for chunk in (conv_rows[:4], conv_rows[4:]):  # a batch boundary mid-match
-                for out in fn((cid,), iter([_batch(chunk)]), st):
-                    stream.update(
-                        (r.conv_id, int(r.first_turn), r.tool, int(r.span_s))
-                        for r in out.itertuples()
-                    )
-        assert batch and batch == stream, pattern
-        assert all(span <= S for *_, span in batch)
-    assert ("c1", 0, "search", S) in {
-        tuple(r) for r in cep_pattern_batch(t, USER_AGENT_TOOL).collect()
+    forms = {  # name: (batch compiler over t, stream state fn)
+        **{p: (partial(cep_pattern_batch, pattern=p), make_cep_fn(p))
+           for p in (USER_AGENT_TOOL, TOOL_AGENT_TOOL, TOOL_RETRY_SAME, USER_ALT_TOOL)},
+        "optional": (partial(cep_pattern_batch, pattern=USER_OPT_AGENT_TOOL),
+                     make_optional_fn(USER_OPT_AGENT_TOOL)),
+        "followed_by": (lambda df: followed_by_batch(df, *USER_THEN_TOOL, N),
+                        make_followed_by_fn(*USER_THEN_TOOL, N)),
+        "not_followed_by": (lambda df: not_followed_by_batch(df, *USER_THEN_TOOL, N),
+                            make_not_followed_by_fn(*USER_THEN_TOOL, N)),
+        "plus": (lambda df: one_or_more_batch(df, *USER_AGENTS_TOOL),
+                 make_one_or_more_fn(*USER_AGENTS_TOOL)),
+        "star": (lambda df: one_or_more_batch(df, *USER_AGENTS_TOOL, min_reps=0),
+                 make_one_or_more_fn(*USER_AGENTS_TOOL, min_reps=0)),
     }
-    with pytest.raises(ValueError, match="optional"):
-        cep_pattern_batch(t, USER_OPT_AGENT_TOOL)
+    stream = {name: _stream_matches(fn, rows) for name, (_, fn) in forms.items()}
+    assert all(stream.values())  # every form finds something
+    # the cases above are really exercised
+    assert ("c1", 0, "search", S) in stream[USER_AGENT_TOOL]
+    assert ("c5", 0, "dst", 7200) in stream[USER_AGENT_TOOL]
+    assert ("c5", 3, "z", 600) in stream["optional"]
+    assert {("c3", 0, "search", 60), ("c4", 0, "x", S)} <= stream["followed_by"]
+    assert {("c3", 7), ("c3", 15), ("c4", 3), ("c4", 8)} <= stream["not_followed_by"]
+    assert {("c3", 0, 5, "search", 60), ("c4", 5, 1, "t", 20)} <= stream["plus"]
+    assert stream["star"] > stream["plus"]
+    assert all(span <= S for name, out in stream.items() for *_, span in out
+               if name != "not_followed_by")
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            # a frame binds the session time zone when it is analyzed,
+            # so each compiler runs after the zone is set
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            for name, (compile_batch, _) in forms.items():
+                batch = {tuple(r) for r in compile_batch(t).collect()}
+                assert batch == stream[name], (tz, name)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

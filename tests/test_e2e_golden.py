@@ -87,3 +87,22 @@ def test_land_file_replays_in_batch_order(spark, tmp_path):
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     run_stream(src, "append", foreach_batch=record)
     assert seen == [[], [1] * 5, [2] * 5]
+
+
+def test_feed_lands_on_the_arrow_path(spark, tmp_path):
+    """Generated ``ts`` values are whole microseconds, so the feed
+    writer's createDataFrame takes Arrow's safe cast and raises no
+    fallback warning, and the landed rows keep their exact ``ts``."""
+    import warnings
+
+    pdf = generate_transcripts(n_convs=3, turns_per_conv=5, seed=3)
+    assert (pdf["ts"].dt.nanosecond == 0).all()
+    feed = str(tmp_path / "feed")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        write_changefeed_batches(spark, pdf, feed, n_batches=2)
+    got = {(r.conv_id, r.turn_idx, r.ts) for r in spark.read.parquet(feed).collect()}
+    assert got == {
+        (c, int(i), ts.to_pydatetime())
+        for c, i, ts in zip(pdf["conv_id"], pdf["turn_idx"], pdf["ts"])
+    }
