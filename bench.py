@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -88,9 +90,19 @@ def main() -> None:
         "DSTREAM_BENCH_FEED", f"/tmp/dstream_bench_feed_{sf}_r{replicas}"
     )
     build_feed(spark, sf_dir, feed_dir, replicas=replicas, n_slices=16)
+
+    def drain(fn, tag: str) -> dict:
+        # a fresh work dir per run, removed after it; only the feed is
+        # reused across runs (a run's table and checkpoint are ~100 MB)
+        work_dir = tempfile.mkdtemp(prefix=f"dstream_bench_{tag}_")
+        try:
+            return fn(spark, feed_dir, work_dir, n_partitions=cores)
+        finally:
+            shutil.rmtree(work_dir, ignore_errors=True)
+
     # steady-state protocol (BENCH/NOTES.md): first streaming run in a
     # JVM pays JIT/codegen/state-store init — warm once, then measure
-    run_dedup_sink(spark, feed_dir, f"/tmp/dstream_bench_warm_{cores}", n_partitions=cores)
+    drain(run_dedup_sink, "warm")
 
     def best_of(fn, tag: str, n: int = 2) -> dict:
         # best-of-n with the MEDIAN alongside: the host shows 5%+ steal
@@ -99,10 +111,7 @@ def main() -> None:
         # verdict asked for
         import statistics
 
-        runs = [
-            fn(spark, feed_dir, f"/tmp/dstream_bench_{tag}_{cores}_{i}", n_partitions=cores)
-            for i in range(n)
-        ]
+        runs = [drain(fn, tag) for _ in range(n)]
         best = max(runs, key=lambda r: r["events_per_sec"])
         best["all_events_per_sec"] = [r["events_per_sec"] for r in runs]
         best["median_events_per_sec"] = round(

@@ -142,6 +142,14 @@ def transform_stage(df):
     )
 
 
+TRACK_ROWS = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+
+
+def _state_sum(progress: list[dict], metric: str) -> int:
+    """``metric`` summed over every state operator of every batch."""
+    return sum(op[metric] for p in progress for op in p["stateOperators"])
+
+
 def run_dedup_sink(
     spark: SparkSession,
     feed_dir: str,
@@ -151,10 +159,18 @@ def run_dedup_sink(
 ) -> dict:
     """change-capture → text transforms → stateful dedup →
     exactly-once sink; returns {events, seconds, events_per_sec,
-    out_rows}.
+    out_rows, state_rows, rows_dropped_by_watermark}.
 
     State partitions = n_partitions (measured: 2× cores oversizes
     state-store overhead for micro-batches; see BENCH/BASELINE.md).
+
+    The drain's own query runs with RocksDB row tracking off: with it
+    on, every put and every eviction repeats the get the dedup has just
+    made. The session's value is restored after the drain. The query's
+    ``numRowsTotal`` then reads 0, but every put of a key dedup is a new
+    key, so ``state_rows`` = Σ numRowsUpdated − Σ numRowsRemoved is the
+    exact live count at the end of the drain (of one that fits in
+    ``recentProgress``: 100 batches by default).
     """
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     shutil.rmtree(work_dir, ignore_errors=True)
@@ -171,11 +187,19 @@ def run_dedup_sink(
     # 44M-event proxy: 461k -> 580k events/s median-of-3, interleaved).
     deduped = transform_stage(dedup_stream(src, watermark="30 minutes"))
     n_input = spark.read.parquet(feed_dir).count()
+    tracked = spark.conf.get(TRACK_ROWS, None)
+    spark.conf.set(TRACK_ROWS, "false")
     t0 = time.time()
-    run_stream(
-        deduped, "append", foreach_batch=sink.process_batch,
-        checkpoint=os.path.join(work_dir, "ckpt"),
-    )
+    try:
+        progress = run_stream(
+            deduped, "append", foreach_batch=sink.process_batch,
+            checkpoint=os.path.join(work_dir, "ckpt"),
+        )
+    finally:
+        if tracked is None:
+            spark.conf.unset(TRACK_ROWS)
+        else:
+            spark.conf.set(TRACK_ROWS, tracked)
     dt = time.time() - t0
     out_rows = sink.read_table(spark).count()
     return {
@@ -183,6 +207,9 @@ def run_dedup_sink(
         "seconds": round(dt, 2),
         "events_per_sec": round(n_input / dt, 1),
         "out_rows": out_rows,
+        "state_rows": _state_sum(progress, "numRowsUpdated")
+        - _state_sum(progress, "numRowsRemoved"),
+        "rows_dropped_by_watermark": _state_sum(progress, "numRowsDroppedByWatermark"),
     }
 
 
@@ -194,7 +221,9 @@ def run_window_sink(
     files_per_trigger: int = 4,
 ) -> dict:
     """change-capture → windowed state (update mode) → keyed
-    exactly-once sink (latest version per window key)."""
+    exactly-once sink (latest version per window key); returns
+    {events, seconds, events_per_sec, out_rows,
+    rows_dropped_by_watermark}."""
     from dstream_spark.operators.event_time import with_event_time
 
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
@@ -217,7 +246,7 @@ def run_window_sink(
     )
     n_input = spark.read.parquet(feed_dir).count()
     t0 = time.time()
-    run_stream(
+    progress = run_stream(
         agg, "update", foreach_batch=sink.process_batch,
         checkpoint=os.path.join(work_dir, "ckpt"),
     )
@@ -228,4 +257,5 @@ def run_window_sink(
         "seconds": round(dt, 2),
         "events_per_sec": round(n_input / dt, 1),
         "out_rows": out_rows,
+        "rows_dropped_by_watermark": _state_sum(progress, "numRowsDroppedByWatermark"),
     }

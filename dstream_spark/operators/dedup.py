@@ -4,8 +4,9 @@ The reference prevents cross- and within-transaction duplicates with an
 (LSN, seqval) pair (docs/capability-inventory.md:133). Here the dual
 key is (conv_id, turn_idx); the engine provides:
 
-- batch dedup (``dedup_keys``) — used in the foreachBatch MERGE sink
-  and the oracle-checked batch queries;
+- batch dedup (``dedup_keys``) — used by the oracle-checked batch
+  queries (MergeSink writes each epoch as delivered and resolves keys
+  on read);
 - streaming dedup (``dedup_stream``) — dropDuplicatesWithinWatermark,
   state bounded by the watermark (state size ∝ in-flight keys, not
   history — the property that survives a 10^12-turn stream);
@@ -18,10 +19,8 @@ Scale note: both paths shuffle once on the key. With string payload
 columns, dropDuplicates plans a SORT aggregate (its first() buffers
 are not fixed-width, so no hash aggregate), partial (map-side) before
 the exchange and final after it: duplicate-heavy streams shrink before
-they shuffle, at the price of a sort on each side. Where the input is
-already clustered on a key subset (MergeSink repartitions on
-partition_key first) the aggregate adds no exchange and its one sort
-also serves a later sort on the keys.
+they shuffle, at the price of a sort on each side. Neither runs a
+second time in the sink: a deduped stream's epochs are unique already.
 """
 
 from __future__ import annotations

@@ -121,10 +121,11 @@ class IncrementalLshDedup:
     def _index_raw(self, spark: SparkSession, buckets=None) -> DataFrame:
         """Committed index rows WITHOUT read_table's cross-batch key
         dedup: the index is append-only with unique (doc_id, band) by
-        construction (each epoch's writer dedups its own batch; replays
-        are marker-skipped), so the per-epoch latest-version shuffle
-        over the WHOLE accumulated index — O(corpus) per micro-batch,
-        quadratic cumulative — is pure waste here.
+        construction (process_batch dedups each batch's bands before it
+        lands them; replays are marker-skipped), so the per-epoch
+        latest-version shuffle over the WHOLE accumulated index —
+        O(corpus) per micro-batch, quadratic cumulative — is pure waste
+        here.
 
         ``buckets``: restrict the read to these hive bucket
         partitions. The filter lands as a PartitionFilter on the scan
@@ -186,7 +187,10 @@ class IncrementalLshDedup:
             # the same pre-batch index state, so both commits are
             # deterministic (see module docstring)
             self.dups.process_batch(collisions, batch_id)
-            self.index.process_batch(bands, batch_id)
+            # the sink lands an epoch as delivered, and _index_raw
+            # relies on unique (doc_id, band): a document repeated in
+            # the batch is indexed once
+            self.index.process_batch(bands.dropDuplicates(list(self.index.keys)), batch_id)
         finally:
             bands.unpersist()
 

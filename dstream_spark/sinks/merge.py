@@ -9,12 +9,15 @@ plus one rename commit protocol:
    replays of the same epoch.
 2. If this batch_id already has a committed ``_lineage/batch_id=N``
    dir → replay → skip entirely (idempotent).
-3. Batch rows are hash-partitioned on conv_id, deduped on
-   (conv_id, turn_idx) and sorted within partitions by
-   (conv_id, turn_idx) — one exchange, one Spark job per epoch. This
-   is the ordered-delivery contract (reference relay order,
-   pkg/executor/providers.go:234-261) restated for a parallel engine:
-   stable order WITHIN each conversation.
+3. Batch rows are written as delivered: hash-partitioned on conv_id
+   and sorted within partitions by (conv_id, turn_idx) — one exchange,
+   one Spark job per epoch, no dedup. This is the ordered-delivery
+   contract (reference relay order, pkg/executor/providers.go:234-261)
+   restated for a parallel engine: stable order WITHIN each
+   conversation. Keys are deduped once upstream (the stream's state
+   store, like the reference ingester's (LSN, seqval) key) and
+   resolved on read; a raw epoch holds a repeated key or a superseded
+   version exactly when its input does.
 4. Data files are staged first. The per-partition lineage
    (partition_id, max_conv_id, max_turn_idx, n_rows, updated_at,
    batch_id — the cdc_offsets shape,
@@ -61,7 +64,6 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from dstream_spark.operators.cdc import apply_changes
-from dstream_spark.operators.dedup import dedup_latest
 
 # lineage updated_at = this epoch + batch_id: deterministic, so a
 # replayed epoch produces byte-identical lineage (current_timestamp
@@ -236,30 +238,13 @@ class MergeSink:
             batch_df = batch_df.withColumn(
                 self.version_col, F.lit(int(batch_id)).cast("long")
             )
-        # ONE exchange per epoch: when partition_key ∈ keys, repartition
-        # on it FIRST. HashPartitioning(partition_key) satisfies the
-        # dedup's clustering on the full key set, so the dedup
-        # (dropDuplicates' sort aggregate, dedup_latest's window) adds
-        # no exchange, and its sort on the keys also serves
-        # sortWithinPartitions(*order_cols) when order_cols is a key
-        # prefix. The micro-batch arrives as a ``Scan ExistingRDD``
-        # with no known partitioning, so dedup-first planned partial
-        # aggregate → exchange on the keys → final aggregate → a second
-        # exchange on partition_key → sort: every surviving row, text
-        # included, shuffled twice. partition_key ∉ keys (the
-        # bucket-laid-out incremental-dedup index) keeps dedup-first:
-        # repartition-first would re-shuffle on the keys and lose the
-        # bucket co-location.
-        def dedup(df: DataFrame) -> DataFrame:
-            if self.version_col:
-                return dedup_latest(df, self.keys, self.version_col)
-            return df.dropDuplicates(list(self.keys))
-
-        if self.partition_key in self.keys:
-            bdf = dedup(batch_df.repartition(self.n_partitions, self.partition_key))
-        else:
-            bdf = dedup(batch_df).repartition(self.n_partitions, self.partition_key)
-        bdf = bdf.sortWithinPartitions(*self.order_cols)
+        # the epoch is written as delivered, one exchange and one sort:
+        # every reader (_read_epochs: read_table, read_changes, compact)
+        # resolves keys within and across epochs, and a deduped stream
+        # delivers unique keys, so a write-side dedup only repeats work
+        bdf = batch_df.repartition(self.n_partitions, self.partition_key).sortWithinPartitions(
+            *self.order_cols
+        )
         staged = {}
 
         def write_data(path: str) -> None:

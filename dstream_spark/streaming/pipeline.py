@@ -56,21 +56,24 @@ def run_stream(
     *,
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     checkpoint: str | None = None,
-) -> DataFrame | None:
+) -> DataFrame | list[dict]:
     """Drain ``df`` once: start an ``availableNow`` query in output
     ``mode`` and wait for it; a failed query raises here.
 
     With no ``foreach_batch`` the rows land in a memory sink under a
     fresh query name and come back as ``spark.table(name)``. With one,
-    every micro-batch goes to that body and nothing is returned.
-    ``checkpoint`` is the query's checkpointLocation (Spark picks a
-    temporary one when it is None)."""
+    every micro-batch goes to that body and the finished query's
+    ``recentProgress`` comes back: one dict per micro-batch, the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100) of
+    them. ``checkpoint`` is the query's checkpointLocation (Spark picks
+    a temporary one when it is None)."""
     writer = df.writeStream.outputMode(mode).trigger(availableNow=True)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
     if foreach_batch is not None:
-        writer.foreachBatch(foreach_batch).start().awaitTermination()
-        return None
+        q = writer.foreachBatch(foreach_batch).start()
+        q.awaitTermination()
+        return q.recentProgress
     name = f"drain_{uuid.uuid4().hex[:8]}"
     writer.format("memory").queryName(name).start().awaitTermination()
     return df.sparkSession.table(name)

@@ -225,3 +225,25 @@ def test_index_bucket_pruning_reads_only_touched_buckets(spark, tmp_path):
     d.process_batch(_df(spark, [(100, many[3][1])]), 1)
     dups = {r["doc_id"]: r["dup_of"] for r in d.read_dups(spark).collect()}
     assert dups == {100: 3}
+
+
+def test_document_repeated_in_a_batch_is_indexed_once(spark, tmp_path):
+    """The index sink lands epochs as delivered, so the operator dedups
+    its bands: a batch holding one document twice leaves the raw index
+    unique on (doc_id, band), and the dup log is unchanged."""
+    def run(name, batch1):
+        d = IncrementalLshDedup(str(tmp_path / name / "idx"), str(tmp_path / name / "dups"),
+                                n_partitions=2)
+        d.init()
+        d.process_batch(_df(spark, DOCS0), 0)
+        d.process_batch(_df(spark, batch1), 1)
+        return d
+
+    once = run("once", DOCS1)
+    twice = run("twice", DOCS1 + DOCS1[:2])
+    raw = twice._index_raw(spark)
+    assert raw.groupBy("doc_id", "band").count().filter(F.col("count") > 1).count() == 0
+    assert raw.count() == once._index_raw(spark).count()
+    assert sorted(map(tuple, twice.read_dups(spark).collect())) == sorted(
+        map(tuple, once.read_dups(spark).collect())
+    )

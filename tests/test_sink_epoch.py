@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import generate_transcripts, write_changefeed_batches
@@ -19,18 +20,9 @@ from dstream_spark.streaming.pipeline import run_stream
 COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-def test_dedup_sink_epoch_is_one_job_with_one_exchange(spark, tmp_path, monkeypatch):
-    """The bench pipeline's shape: changefeed → watermark dedup →
-    MergeSink. A stateful query runs its foreachBatch body without
-    AQE, so each Spark job of the epoch is a real job, not an AQE
-    map stage. Every epoch (the data epoch and the no-data watermark
-    epoch) is ONE job of 3 stages: the feed scan up to the state
-    store's exchange, the state store up to the sink's one exchange,
-    and the write. The sink's plan has one exchange and no cache."""
-    pdf = generate_transcripts(n_convs=6, turns_per_conv=5)
-    feed = str(tmp_path / "feed")
-    write_changefeed_batches(spark, pdf, feed, n_batches=1)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
+@pytest.fixture
+def written_plans(monkeypatch):
+    """The executed plan of every frame MergeSink writes as data."""
     plans = []
     write_data = MergeSink._write_data
 
@@ -39,6 +31,30 @@ def test_dedup_sink_epoch_is_one_job_with_one_exchange(spark, tmp_path, monkeypa
         write_data(self, df, path)
 
     monkeypatch.setattr(MergeSink, "_write_data", recording_write_data)
+    return plans
+
+
+def _assert_one_write_path(plan):
+    """Written as delivered: one exchange, one sort, no dedup."""
+    assert plan.count("Exchange ") == 1, plan
+    assert plan.count("Sort [") == 1, plan
+    for node in ("SortAggregate", "HashAggregate", "Window", "InMemory"):
+        assert node not in plan, plan
+
+
+def test_dedup_sink_epoch_is_one_job_with_one_exchange(spark, tmp_path, written_plans):
+    """The bench pipeline's shape: changefeed → watermark dedup →
+    MergeSink. A stateful query runs its foreachBatch body without
+    AQE, so each Spark job of the epoch is a real job, not an AQE
+    map stage. Every epoch (the data epoch and the no-data watermark
+    epoch) is ONE job of 3 stages: the feed scan up to the state
+    store's exchange, the state store up to the sink's one exchange,
+    and the write. The sink's plan has one exchange, one sort, no
+    aggregate and no cache: the stream dedups, the sink does not."""
+    pdf = generate_transcripts(n_convs=6, turns_per_conv=5)
+    feed = str(tmp_path / "feed")
+    write_changefeed_batches(spark, pdf, feed, n_batches=1)
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     sc = spark.sparkContext
     prefix = f"sink-epoch-{uuid.uuid4().hex[:8]}"
     groups = []
@@ -56,14 +72,32 @@ def test_dedup_sink_epoch_is_one_job_with_one_exchange(spark, tmp_path, monkeypa
     run_stream(src, "append", foreach_batch=epoch, checkpoint=str(tmp_path / "ckpt"))
 
     assert sink.read_table(spark).count() == len(pdf)
-    assert groups and len(plans) == len(groups)
+    assert groups and len(written_plans) == len(groups)
     tracker = sc.statusTracker()
-    for group, plan in zip(groups, plans):
+    for group, plan in zip(groups, written_plans):
         jobs = tracker.getJobIdsForGroup(group)
         assert len(jobs) == 1, (group, jobs)
         assert len(tracker.getJobInfo(jobs[0]).stageIds) == 3
-        assert plan.count("Exchange ") == 1, plan
-        assert "InMemory" not in plan, plan
+        _assert_one_write_path(plan)
+
+
+def test_window_sink_epoch_sorts_once(spark, tmp_path, written_plans):
+    """A version-keyed sink shaped like ``run_window_sink``'s: the
+    epoch literal stamped as ``_v`` costs no window, and the one sort
+    is the ``order_cols`` sort."""
+    sink = MergeSink(
+        str(tmp_path / "tbl"),
+        keys=("w_start", "conv_id"),
+        partition_key="conv_id",
+        order_cols=("conv_id", "w_start"),
+        version_col="_v",
+        n_partitions=2,
+    )
+    rows = [(f"c{i % 3}", i, i + 1) for i in range(9)]
+    sink.process_batch(spark.createDataFrame(rows, "conv_id string, w_start int, n_turns long"), 0)
+    assert len(written_plans) == 1
+    _assert_one_write_path(written_plans[0])
+    assert sink.read_table(spark).count() == len(rows)
 
 
 def _lineage_rows(spark, sink):
@@ -132,3 +166,49 @@ def test_lineage_of_hive_layout_index(spark, tmp_path):
 
     index.compact(spark)
     assert _lineage_rows(spark, index) == _reference_rows(spark, index)
+
+
+def _one_row_per_key(spark, sink, expected):
+    """read_table, read_changes and read_table after compact() each
+    resolve the raw epochs to ``expected``: one row per key."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*expected.columns).collect())
+
+    want = sorted(tuple(r) for r in expected.collect())
+    assert rows(sink.read_table(spark)) == want
+    assert rows(sink.read_changes(spark, since_batch=-1)) == want
+    sink.compact(spark)
+    assert rows(sink.read_table(spark)) == want
+
+
+def test_plain_sink_resolves_a_key_repeated_in_its_epoch(spark, tmp_path):
+    """A replayed row inside one epoch is landed as delivered and
+    resolved on read; lineage counts the rows the files hold."""
+    pdf = generate_transcripts(n_convs=3, turns_per_conv=4)
+    sdf = spark.createDataFrame(pdf[COLS])
+    later = sdf.withColumn("turn_idx", sdf.turn_idx + 100)
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
+    sink.process_batch(sdf.unionAll(sdf.limit(2)), 0)
+    sink.process_batch(later, 1)
+    raw = sink.protocol.data_read(spark, sink.committed_batches())
+    assert raw.count() == 2 * len(pdf) + 2
+    lineage = _lineage_rows(spark, sink)
+    assert lineage == _reference_rows(spark, sink)
+    assert sum(r[-1] for r in lineage) == 2 * len(pdf) + 2
+    _one_row_per_key(spark, sink, sdf.unionAll(later))
+
+
+def test_version_sink_resolves_two_versions_in_one_epoch(spark, tmp_path):
+    """An epoch that carries two versions of one key: every reader
+    returns the later one."""
+    schema = "conv_id string, turn_idx int, text string, v long"
+    sink = MergeSink(str(tmp_path / "tbl"), version_col="v", n_partitions=2)
+    sink.process_batch(spark.createDataFrame(
+        [("a", 0, "old", 1), ("a", 0, "new", 2), ("a", 1, "x", 1), ("b", 0, "y", 1)], schema
+    ), 0)
+    sink.process_batch(spark.createDataFrame([("b", 0, "z", 3), ("b", 0, "w", 0)], schema), 1)
+    assert sink.protocol.data_read(spark, sink.committed_batches()).count() == 6
+    assert _lineage_rows(spark, sink) == _reference_rows(spark, sink)
+    _one_row_per_key(spark, sink, spark.createDataFrame(
+        [("a", 0, "new", 2), ("a", 1, "x", 1), ("b", 0, "z", 3)], schema
+    ))
