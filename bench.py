@@ -69,11 +69,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(8, cores * 3 // 2)}g")
     spark = get_spark(app_name="dstream_bench", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
-    # session-default shuffle partitions, captured BEFORE any sink
-    # runner pins spark.sql.shuffle.partitions=cores (the warm-up call
-    # below already pins it — capturing later restores the pinned
-    # value and leaks bench conf into the batch per-query timings)
-    shuffle_default = spark.conf.get("spark.sql.shuffle.partitions")
 
     # north-star streaming pipelines (events/sec) — measured FIRST:
     # the heavy similarity headline queries leave the heap fragmented
@@ -126,10 +121,6 @@ def main() -> None:
         "dedup_sink": best_of(run_dedup_sink, "dedup", n=5),
         "window_sink": best_of(run_window_sink, "window", n=3),
     }
-    # the sink runners pin shuffle.partitions = cores for micro-batch
-    # state; restore the pre-pin session default so the batch queries
-    # run under the same conditions as earlier rounds' per-query numbers
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle_default)
 
     # warm the JVM/file cache so per-query numbers measure the engine
     QUERIES["relay_identity"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -26,12 +26,14 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import transcripts_from_events
 from dstream_spark.operators.dedup import dedup_stream
+from dstream_spark.operators.event_time import epoch_s, with_event_time
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
 from dstream_spark.streaming.pipeline import run_stream
@@ -82,8 +84,8 @@ def build_feed(
     dups = feed.sample(fraction=dup_fraction, seed=42)
     feed = feed.unionAll(dups)
     bounds = feed.agg(
-        F.min("ts").cast("timestamp").cast("long").alias("lo"),
-        F.max("ts").cast("timestamp").cast("long").alias("hi"),
+        epoch_s(F.min("ts")).alias("lo"),
+        epoch_s(F.max("ts")).alias("hi"),
     ).first()
     span = max(1, bounds.hi - bounds.lo + 1)
     feed = (
@@ -91,7 +93,7 @@ def build_feed(
             "_slice",
             F.least(
                 F.lit(n_slices - 1),
-                ((F.col("ts").cast("timestamp").cast("long") - F.lit(bounds.lo)) * n_slices / span).cast("int"),
+                ((epoch_s("ts") - F.lit(bounds.lo)) * n_slices / span).cast("int"),
             ),
         )
         .withColumn("_change_type", F.lit("insert"))
@@ -145,6 +147,24 @@ def transform_stage(df):
 TRACK_ROWS = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
 
+@contextmanager
+def _session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the block, then give each key
+    back its previous value (unset one that was absent), so a drain
+    leaves the caller's session as it found it."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _state_sum(progress: list[dict], metric: str) -> int:
     """``metric`` summed over every state operator of every batch."""
     return sum(op[metric] for p in progress for op in p["stateOperators"])
@@ -166,13 +186,12 @@ def run_dedup_sink(
 
     The drain's own query runs with RocksDB row tracking off: with it
     on, every put and every eviction repeats the get the dedup has just
-    made. The session's value is restored after the drain. The query's
-    ``numRowsTotal`` then reads 0, but every put of a key dedup is a new
-    key, so ``state_rows`` = Σ numRowsUpdated − Σ numRowsRemoved is the
+    made. Both drains give the session its confs back when they return.
+    The query's ``numRowsTotal`` then reads 0, but every put of a key
+    dedup is a new key, so ``state_rows`` = Σ numRowsUpdated − Σ numRowsRemoved is the
     exact live count at the end of the drain (of one that fits in
     ``recentProgress``: 100 batches by default).
     """
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     shutil.rmtree(work_dir, ignore_errors=True)
     sink = MergeSink(os.path.join(work_dir, "table"), n_partitions=n_partitions)
     src = changefeed(spark, {"path": feed_dir, "max_files_per_trigger": files_per_trigger})
@@ -186,22 +205,16 @@ def run_dedup_sink(
     # derived values; out_rows and content are identical (A/B'd at the
     # 44M-event proxy: 461k -> 580k events/s median-of-3, interleaved).
     deduped = transform_stage(dedup_stream(src, watermark="30 minutes"))
-    n_input = spark.read.parquet(feed_dir).count()
-    tracked = spark.conf.get(TRACK_ROWS, None)
-    spark.conf.set(TRACK_ROWS, "false")
-    t0 = time.time()
-    try:
+    conf = {"spark.sql.shuffle.partitions": str(n_partitions), TRACK_ROWS: "false"}
+    with _session_conf(spark, conf):
+        n_input = spark.read.parquet(feed_dir).count()
+        t0 = time.time()
         progress = run_stream(
             deduped, "append", foreach_batch=sink.process_batch,
             checkpoint=os.path.join(work_dir, "ckpt"),
         )
-    finally:
-        if tracked is None:
-            spark.conf.unset(TRACK_ROWS)
-        else:
-            spark.conf.set(TRACK_ROWS, tracked)
-    dt = time.time() - t0
-    out_rows = sink.read_table(spark).count()
+        dt = time.time() - t0
+        out_rows = sink.read_table(spark).count()
     return {
         "events": n_input,
         "seconds": round(dt, 2),
@@ -224,9 +237,6 @@ def run_window_sink(
     exactly-once sink (latest version per window key); returns
     {events, seconds, events_per_sec, out_rows,
     rows_dropped_by_watermark}."""
-    from dstream_spark.operators.event_time import with_event_time
-
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     shutil.rmtree(work_dir, ignore_errors=True)
     sink = MergeSink(
         os.path.join(work_dir, "table"),
@@ -244,14 +254,15 @@ def run_window_sink(
         .agg(F.count(F.lit(1)).alias("n_turns"))
         .select(F.col("w.start").alias("w_start"), "conv_id", "n_turns")
     )
-    n_input = spark.read.parquet(feed_dir).count()
-    t0 = time.time()
-    progress = run_stream(
-        agg, "update", foreach_batch=sink.process_batch,
-        checkpoint=os.path.join(work_dir, "ckpt"),
-    )
-    dt = time.time() - t0
-    out_rows = sink.read_table(spark).count()
+    with _session_conf(spark, {"spark.sql.shuffle.partitions": str(n_partitions)}):
+        n_input = spark.read.parquet(feed_dir).count()
+        t0 = time.time()
+        progress = run_stream(
+            agg, "update", foreach_batch=sink.process_batch,
+            checkpoint=os.path.join(work_dir, "ckpt"),
+        )
+        dt = time.time() - t0
+        out_rows = sink.read_table(spark).count()
     return {
         "events": n_input,
         "seconds": round(dt, 2),

@@ -1,5 +1,8 @@
 """Embedding similarity search: brute-force cosine top-k (exact
-baseline) and IVF-style centroid-bucketed ANN (the scale path).
+baseline) and IVF-style centroid-bucketed ANN (the scale path). The
+ANN entries share its blocks: one cosine ranker (``cosine_rank``), one
+seed-centroid table and one exact-integer centroid fold
+(``centroid_means``, ``means_to_vectors``).
 
 Dot products are left-fold `F.aggregate(zip_with(...))` — JVM-side,
 deterministic accumulation order (so the DuckDB oracle's sequential
@@ -13,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -147,6 +150,38 @@ def cosine_with_norms(
     return F.round((dot_fold if fold else dot)(a, b) / (norm_a * norm_b), 6)
 
 
+def cosine_rank(queries: DataFrame, corpus: DataFrame, k: int, same_cell: bool = False) -> DataFrame:
+    """Top-k neighbours per query by cosine, ranked on (rounded sim
+    DESC, neighbour id ASC) so results are deterministic across engines
+    and partitionings. ``queries`` carries (q_id, q_vec, _qn) and
+    ``corpus`` (n_id, n_vec, _nn), each norm stored with its vector;
+    with ``same_cell`` a pair must also share its IVF cell (q_c = n_c).
+    The query side is broadcast (it is the small side by construction).
+    Output: (q_id, n_id, sim, rank).
+
+    Scores with the JVM fold: the join fans every corpus row out
+    query-ways, and per-pair Arrow traffic would be the bottleneck
+    (see cosine_with_norms)."""
+    on = F.col("q_id") != F.col("n_id")
+    if same_cell:
+        on = (F.col("q_c") == F.col("n_c")) & on
+    scored = (
+        corpus.join(F.broadcast(queries), on)
+        .withColumn(
+            "sim",
+            cosine_with_norms(
+                F.col("q_vec"), F.col("n_vec"), F.col("_qn"), F.col("_nn"), fold=True
+            ),
+        )
+        .select("q_id", "n_id", "sim")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -154,12 +189,8 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k neighbors per query by cosine. The query side is
-    broadcast (it is the small side by construction); ranking tiebreak
-    is (rounded sim desc, neighbor id asc) so results are deterministic
-    across engines and partitionings."""
-    from pyspark.sql import Window
-
+    """Exact top-k neighbors per query by cosine (cosine_rank over
+    every corpus vector)."""
     # norms are materialized BEFORE the join: inlining l2_norm in the
     # post-join cosine recomputes each corpus row's norm once per
     # QUERY (Q-fold duplicate work); pre-join it's once per row — the
@@ -172,22 +203,39 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
     ).withColumn("_nn", l2_norm(F.col("n_vec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "sim",
-            # fold: Q-way pair fan-out makes per-pair Arrow traffic the
-            # bottleneck (see cosine_with_norms)
-            cosine_with_norms(
-                F.col("q_vec"), F.col("n_vec"), F.col("_qn"), F.col("_nn"), fold=True
-            ),
-        )
-        .select("q_id", "n_id", "sim")
+    return cosine_rank(q, c, k)
+
+
+def seed_centroids(vectors: DataFrame) -> DataFrame:
+    """The IVF / k-means seed centroid table (c_id, c_vec): the first
+    eight vectors (vec_id < 8), the oracles' deterministic seeds."""
+    return vectors.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+
+
+def centroid_means(assigned: DataFrame) -> DataFrame:
+    """Per-dimension cluster means (c_id, pos, mean) of the assigned
+    vectors (c_id, embedding). Exact-integer: each value is quantized
+    to 1e-6 as a BIGINT before the sum, with one final division, so the
+    float accumulation order (partitioning, engine) cannot move a
+    mean. The shuffle is (c_id, pos) keyed and partially aggregated."""
+    dims = assigned.select(
+        "c_id", F.posexplode(F.col("embedding")).alias("pos", "val")
+    ).withColumn("q", F.floor(F.col("val").cast("double") * 1000000 + 0.5).cast("long"))
+    return dims.groupBy("c_id", "pos").agg(
+        (F.sum("q").cast("double") / (F.count(F.lit(1)).cast("double") * 1000000.0)).alias("mean")
+    )
+
+
+def means_to_vectors(means: DataFrame) -> DataFrame:
+    """centroid_means rows back to one centroid vector per cluster:
+    (c_id, c_vec), dimensions in pos order."""
+    return means.groupBy("c_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "mean"))),
+            lambda s: s.getField("mean"),
+        ).alias("c_vec")
     )
 
 
@@ -303,8 +351,6 @@ def ivf_assign(
     """Assign each vector to its max-cosine centroid (IVF coarse
     quantizer). Centroids are broadcast; ties break to the lower
     centroid id. Output: (vec_id, c_id, sim)."""
-    from pyspark.sql import Window
-
     scored = (
         vectors.select(id_col, vec_col)
         .withColumn("_vn", l2_norm(F.col(vec_col)))  # once per vector, not per centroid

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dstream_spark.operators.event_time import epoch_s
 from dstream_spark.operators.state import apply_state, state_fn
 
 CEP_OUT_SCHEMA = T.StructType(
@@ -567,15 +568,6 @@ def cep_pattern_stream(
                        ttl_s, wm_delay_s)
 
 
-def _epoch():
-    """Epoch seconds of the NTZ ``ts`` as wall-clock arithmetic, like
-    the stream body and the oracle: a cast through ``timestamp`` would
-    read ``ts`` in the session time zone and skip or repeat DST hours."""
-    return F.timestamp_diff(
-        "SECOND", F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"), F.col("ts")
-    )
-
-
 def _step_cond(s: Step, at, i: int = 0):
     """Step.matches as a Column for step ``i``, where ``at(c, j)`` is
     step j's value of column c: ``role`` compiles to ==, ``role_in`` to
@@ -613,7 +605,7 @@ def cep_pattern_batch(t: DataFrame, pattern: tuple[Step, ...]) -> DataFrame:
     if opt is None:
         _check_fixed(pattern)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    cols = {"role": F.col("role"), "tool": F.col("tool"), "t": _epoch()}
+    cols = {"role": F.col("role"), "tool": F.col("tool"), "t": epoch_s()}
     leads = {}
 
     def at(c: str, i: int):
@@ -650,7 +642,7 @@ def _first_b(t: DataFrame, a: Step, b: Step, n_turns: int) -> DataFrame:
     self-join."""
     _check_pair(a, b)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    fields = {"role": F.col("role"), "tool": F.col("tool"), "t": _epoch(),
+    fields = {"role": F.col("role"), "tool": F.col("tool"), "t": epoch_s(),
               "turn_idx": F.col("turn_idx")}
     nxt = F.array(*[
         F.struct(*(F.lead(c, k).over(w).alias(n) for n, c in fields.items()))
@@ -666,7 +658,7 @@ def _first_b(t: DataFrame, a: Step, b: Step, n_turns: int) -> DataFrame:
             & (s.getField("turn_idx") - F.col("turn_idx") <= n_turns)
         )
 
-    seq = t.select("conv_id", "turn_idx", _epoch().alias("t0"), nxt.alias("nxt"),
+    seq = t.select("conv_id", "turn_idx", epoch_s().alias("t0"), nxt.alias("nxt"),
                    _step_cond(a, _this_turn).alias("_a")).filter("_a")
     return seq.withColumn("hit", F.try_element_at(F.filter("nxt", qualifies), F.lit(1)))
 
@@ -705,7 +697,7 @@ def one_or_more_batch(t: DataFrame, a: Step, b: Step, c: Step,
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     is_b = F.coalesce(_step_cond(b, _this_turn), F.lit(False))
     cum = t.select(
-        "conv_id", "turn_idx", "tool", _epoch().alias("t0"), (~is_b).alias("non_b"),
+        "conv_id", "turn_idx", "tool", epoch_s().alias("t0"), (~is_b).alias("non_b"),
         _step_cond(a, _this_turn).alias("is_a"), _step_cond(c, _this_turn).alias("is_c"),
         F.sum(is_b.cast("int")).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cb"),
     )

@@ -27,8 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 DUAL_KEY = ("conv_id", "turn_idx")
 
@@ -38,23 +37,6 @@ def dedup_keys(df: DataFrame, keys: Sequence[str] = DUAL_KEY) -> DataFrame:
     the CDC replay scenario, so dropDuplicates is sufficient and cheaper
     than a row_number sort)."""
     return df.dropDuplicates(list(keys))
-
-
-def dedup_latest(
-    df: DataFrame,
-    keys: Sequence[str] = DUAL_KEY,
-    order_col: str = "_commit_version",
-) -> DataFrame:
-    """Keep the newest version per key (insert/update capture — the
-    OperationType=update apply path). Deterministic: ties on
-    ``order_col`` are broken by the full key ordering upstream, so
-    callers must pass a monotonic version column (the LSN analog)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def dedup_stream(

@@ -13,6 +13,9 @@ any session, regardless of what timezone the hosting driver picked:
 
 (Within the session's DST fall-back hour the wall→instant cast is
 ambiguous; pin the session to UTC — session.py does — to avoid it.)
+
+Epoch seconds of an NTZ wall time (``epoch_s``) are wall-clock
+arithmetic, so they need no session time zone at all.
 """
 
 from __future__ import annotations
@@ -33,6 +36,15 @@ def to_ntz(col: str | Column) -> Column:
     """TIMESTAMP instant → NTZ wall time at UTC."""
     c = F.col(col) if isinstance(col, str) else col
     return F.convert_timezone(F.expr("current_timezone()"), F.lit("UTC"), c.cast("timestamp_ntz"))
+
+
+def epoch_s(col: str | Column = "ts") -> Column:
+    """Whole epoch seconds (BIGINT) of an NTZ wall time (denoting UTC),
+    like the stream bodies and the oracles' ``epoch``. A cast
+    through TIMESTAMP would read the wall time in the session time zone
+    and skip or repeat its DST hours."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.timestamp_diff("SECOND", F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"), c)
 
 
 def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:

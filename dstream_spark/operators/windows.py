@@ -25,10 +25,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dstream_spark.operators.event_time import epoch_s, restore_ntz, with_event_time
+
 
 def _flatten_window(out: DataFrame) -> DataFrame:
-    from dstream_spark.operators.event_time import restore_ntz
-
     rest = [c for c in out.columns if c != "w"]
     flat = out.select(
         F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"), *rest
@@ -40,8 +40,6 @@ def _flatten_window(out: DataFrame) -> DataFrame:
 
 def _watermarked(df: DataFrame, ts_col: str, watermark: str | None) -> DataFrame:
     if watermark and df.isStreaming:
-        from dstream_spark.operators.event_time import with_event_time
-
         return with_event_time(df, ts_col).withWatermark(ts_col, watermark)
     return df
 
@@ -112,11 +110,8 @@ def sessionize_batch(
     groupBy (same partitioning, Catalyst reuses the exchange).
     """
     w = Window.partitionBy(key).orderBy(ts_col)
-    # cast via TIMESTAMP (session tz is pinned UTC) so TIMESTAMP_NTZ
-    # inputs work; ->long floors to seconds, matching the oracle's
-    # FLOOR(epoch(ts))
-    epoch_s = F.col(ts_col).cast("timestamp").cast("long")
-    gap = epoch_s - F.lag(epoch_s).over(w)
+    epoch = epoch_s(ts_col)
+    gap = epoch - F.lag(epoch).over(w)
     new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
     sessed = df.withColumn("_new", new_sess).withColumn(
         "session_idx", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))

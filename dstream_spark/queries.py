@@ -25,6 +25,7 @@ from dstream_spark import streaming_queries as sq
 from dstream_spark.fixtures.transcripts import register_tables
 from dstream_spark.functions import dedup_text, similarity, text as textfn
 from dstream_spark.operators import cdc, dedup, joins, skew, windows
+from dstream_spark.operators.event_time import epoch_s
 from dstream_spark.queries_base import (  # noqa: F401  (re-exported)
     ALL_TABLES,
     SHINGLES_SQL,
@@ -249,13 +250,13 @@ def q_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstream_spark.operators.scd import scd2_build
 
     t = _transcripts(spark, sf_dir)
-    epoch = F.col("ts").cast("timestamp").cast("long")
+    epoch = epoch_s("ts")
     bounds = t.agg(
         F.floor((F.min(epoch) + F.max(epoch)) / 2).cast("long").alias("t_as_of")
     )
     h = scd2_build(t)
-    vf = F.col("valid_from").cast("timestamp").cast("long")
-    vt = F.col("valid_to").cast("timestamp").cast("long")
+    vf = epoch_s("valid_from")
+    vt = epoch_s("valid_to")
     return (
         h.crossJoin(F.broadcast(bounds))
         .filter((vf <= F.col("t_as_of")) & (F.col("valid_to").isNull() | (vt > F.col("t_as_of"))))
@@ -771,10 +772,7 @@ def q_emb_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     is heavy (shingle md5s, simhash votes, corpus-side cosine top-k)."""
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    return similarity.ivf_assign(e, cents)
+    return similarity.ivf_assign(e, similarity.seed_centroids(e))
 
 
 # ================================================================= #

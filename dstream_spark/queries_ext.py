@@ -5,10 +5,23 @@ Spark program has a portable DuckDB oracle."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import register_tables
+from dstream_spark.functions.similarity import (
+    centroid_means,
+    cosine_rank,
+    cosine_with_norms,
+    dot,
+    ivf_assign,
+    ivf_assign_vec,
+    l2_norm,
+    l2_norm_fold,
+    means_to_vectors,
+    rp_lsh_assign,
+    seed_centroids,
+)
 from dstream_spark.operators.cep import (
     FOLLOWED_BY_N_TURNS,
     TOOL_AGENT_TOOL,
@@ -28,6 +41,7 @@ from dstream_spark.operators.cep import (
     one_or_more_batch,
     one_or_more_stream,
 )
+from dstream_spark.operators.event_time import epoch_s
 from dstream_spark.queries_base import (
     IDENTITY_SQL,
     Query,
@@ -76,11 +90,10 @@ def q_turn_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag + ntile window functions: per-turn gap to the previous turn
     in the conversation (seconds, NULL for the first turn) and the
     turn's quartile within the conversation. Epochs floor to whole
-    seconds on both engines (the shared-CTE convention); the diff of
-    two same-session epochs is timezone-invariant."""
+    seconds on both engines (the shared-CTE convention)."""
     t = _transcripts(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch = F.col("ts").cast("timestamp").cast("long")
+    epoch = epoch_s("ts")
     return t.select(
         "conv_id",
         "turn_idx",
@@ -476,7 +489,7 @@ def q_conv_gap_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _transcripts(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    e = F.col("ts").cast("timestamp").cast("long")
+    e = epoch_s("ts")
     g = t.select("conv_id", (e - F.lag(e).over(w)).alias("gap_s")).filter(
         F.col("gap_s").isNotNull()
     )
@@ -840,7 +853,7 @@ def _tool_version_dim(spark: SparkSession, sf_dir: str):
     included), small enough to broadcast at any corpus size because
     its row count is |tools| × versions, not |turns|."""
     t = _transcripts(spark, sf_dir).filter(F.col("tool").isNotNull())
-    epoch = F.col("ts").cast("timestamp").cast("long")
+    epoch = epoch_s("ts")
     lo, hi = t.agg(F.min(epoch), F.max(epoch)).first()
     span = int(hi) - int(lo) + 1
     sliced = t.select(
@@ -882,7 +895,7 @@ def _tool_versions(spark: SparkSession, sf_dir: str, t: DataFrame) -> DataFrame:
     dim = _tool_version_dim(spark, sf_dir)
     facts = t.filter(F.col("tool").isNotNull()).select(
         "conv_id", "turn_idx", "tool",
-        F.col("ts").cast("timestamp").cast("long").alias("e"),
+        epoch_s("ts").alias("e"),
     )
     return facts.join(
         F.broadcast(dim),
@@ -1072,6 +1085,25 @@ def q_stream_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_DUP_MAX_ROWS = 100_000  # O(n²) verifier refuses full corpora
 
 
+def _near_dup_pairs(a: DataFrame, b: DataFrame, on: Column) -> DataFrame:
+    """The pairs of ``a`` = (ia, va, _na) and ``b`` = (ib, vb, _nb)
+    joined on ``on`` whose cosine is at least 0.4 (both near-dup
+    oracles' threshold): (ia, ib, cos). fold=True: pair-fan-out
+    scorer — per-pair Arrow traffic would dominate the Arrow-UDF dot
+    (see cosine_with_norms)."""
+    return (
+        a.join(b, on)
+        .withColumn(
+            "cos",
+            cosine_with_norms(
+                F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), fold=True
+            ),
+        )
+        .filter(F.col("cos") >= 0.4)
+        .select("ia", "ib", "cos")
+    )
+
+
 def q_emb_near_dup_pairs(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> DataFrame:
@@ -1081,8 +1113,6 @@ def q_emb_near_dup_pairs(
     (emb_lsh_pairs / emb_ivf_topk) on a SAMPLE. It refuses corpora
     above NEAR_DUP_MAX_ROWS unless force=True: at full-corpus scale
     use the banded paths, never this."""
-    from dstream_spark.functions.similarity import cosine_with_norms, l2_norm
-
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
     if not force:
@@ -1102,19 +1132,37 @@ def q_emb_near_dup_pairs(
     b = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb")).withColumn(
         "_nb", l2_norm(F.col("vb"))
     )
-    return (
-        a.join(b, F.col("ia") < F.col("ib"))
-        .withColumn(
-            # fold=True: pair-fan-out scorer — per-pair Arrow traffic
-            # would dominate the Arrow-UDF dot (see cosine_with_norms)
-            "cos",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), fold=True
-            ),
+    return _near_dup_pairs(a, b, F.col("ia") < F.col("ib"))
+
+
+def _cell_lists(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """The IVF cell-list build: every vector with its nearest centroid,
+    its vector and its norm, (vec_id, c_id, embedding, _n).
+
+    r6 (guide §2.4): the assignment carries the vector through
+    (ivf_assign_vec — aggregate argmax, map-side partial agg) instead
+    of window-pick + join-back against the embedding table; identical
+    labels, two exchanges and three sorts fewer (plans/r06). The
+    search over the cells is pair-fan-out, so the norm is the JVM fold
+    like every scorer there — see ivf_assign_vec's measured rationale
+    (guide §4.1)."""
+    return ivf_assign_vec(fan_out(e), cents).withColumn("_n", l2_norm_fold(F.col("embedding")))
+
+
+def _cell_topk(vecs: DataFrame, probes: DataFrame | None = None) -> DataFrame:
+    """Top-3 cosine per query over the cell lists ``vecs`` sharing a
+    probed cell. probes = (q_id, q_c, q_vec, _qn), one row per probe;
+    by default each query (vec_id < 20) probes its own cell."""
+    if probes is None:
+        probes = vecs.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("q_id"), F.col("c_id").alias("q_c"),
+            F.col("embedding").alias("q_vec"), F.col("_n").alias("_qn"),
         )
-        .filter(F.col("cos") >= 0.4)
-        .select("ia", "ib", "cos")
+    c = vecs.select(
+        F.col("vec_id").alias("n_id"), F.col("c_id").alias("n_c"),
+        F.col("embedding").alias("n_vec"), F.col("_n").alias("_nn"),
     )
+    return cosine_rank(probes, c, 3, same_cell=True)
 
 
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,50 +1170,10 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest centroid (vec_id < 8, broadcast), then search top-3 only
     WITHIN the query's bucket. At 100 TB this turns an O(N·Q) scan
     into O(N·K + Q·N/K): candidate generation shuffles only
-    (centroid_id) buckets, never the full corpus per query.
-
-    r6 (guide §2.4): the assignment carries the vector through
-    (ivf_assign_vec — aggregate argmax, map-side partial agg) instead
-    of window-pick + join-back against the embedding table; identical
-    labels, two exchanges and three sorts fewer (plans/r06). The
-    whole query is pair-fan-out, so every scorer is the JVM fold —
-    see ivf_assign_vec's measured rationale (guide §4.1)."""
-    from dstream_spark.functions.similarity import (
-        cosine_with_norms,
-        ivf_assign_vec,
-        l2_norm_fold,
-    )
-
+    (centroid_id) buckets, never the full corpus per query."""
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    vecs = ivf_assign_vec(fan_out(e), cents).withColumn(
-        "_n", l2_norm_fold(F.col("embedding"))
-    )
-    q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("c_id").alias("q_c"),
-        F.col("embedding").alias("q_vec"), F.col("_n").alias("_qn"),
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("n_id"), F.col("c_id").alias("n_c"),
-        F.col("embedding").alias("n_vec"), F.col("_n").alias("_nn"),
-    )
-    from pyspark.sql import Window
-
-    scored = (
-        c.join(F.broadcast(q), (F.col("q_c") == F.col("n_c")) & (F.col("q_id") != F.col("n_id")))
-        .withColumn(
-            "sim",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("n_vec"), F.col("_qn"), F.col("_nn"), fold=True
-            ),
-        )
-        .select("q_id", "n_id", "sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= 3)
+    return _cell_topk(_cell_lists(e, seed_centroids(e)))
 
 
 PQ_SUBSPACES = 16
@@ -1181,8 +1189,6 @@ def _pq_d2q(a, b):
     """Squared-L2 subspace distance via the dot identity, quantized to
     a 1e-6-scaled BIGINT BEFORE any aggregation — integer ranking, no
     float-accumulation hazard (the emb_kmeans exact-integer trick)."""
-    from dstream_spark.functions.similarity import dot
-
     d2 = dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b)
     return F.floor(d2 * 1000000 + F.lit(0.5)).cast("long")
 
@@ -1236,6 +1242,28 @@ def _pq_build(spark: SparkSession, corp_base: DataFrame, carry: tuple = ()):
     return codes, dtable
 
 
+
+
+def _adc_top3(lookups: DataFrame) -> DataFrame:
+    """Asymmetric Distance Computation ranking: the ADC distance per
+    (query, candidate) is the SUM of the candidate's per-subspace
+    table lookups ``lookups`` = (q_id, vec_id, dq), an exact-integer
+    sum of 1e-6-scaled BIGINTs; top-3 on (adq ASC, n_id ASC). Output:
+    (q_id, n_id, adist, rank)."""
+    adc = lookups.groupBy("q_id", F.col("vec_id").alias("n_id")).agg(F.sum("dq").alias("adq"))
+    w = Window.partitionBy("q_id").orderBy(F.col("adq").asc(), F.col("n_id").asc())
+    return (
+        adc.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= 3)
+        .select(
+            "q_id",
+            "n_id",
+            (F.col("adq").cast("double") / 1000000.0).alias("adist"),
+            "rank",
+        )
+    )
+
+
 def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT-QUANTIZATION ANN — the memory-compression path of the
     ANN family (next to brute force = exact, IVF = candidate pruning,
@@ -1263,22 +1291,9 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
     codes, dtable = _pq_build(spark, fan_out(e))
-    adc = (
+    return _adc_top3(
         codes.join(F.broadcast(dtable), ["s", "code"])
         .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dq").alias("adq"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adq").asc(), F.col("n_id").asc())
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "q_id",
-            "n_id",
-            (F.col("adq").cast("double") / 1000000.0).alias("adist"),
-            "rank",
-        )
     )
 
 
@@ -1289,31 +1304,14 @@ def q_emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension as the cluster mean. Emitted as (c_id, pos, mean) rows —
     the shuffle is (c_id, pos) keyed, so a 10^9-vector update is one
     partial-aggregated exchange, no driver involvement. Means use the
-    exact-integer trick (quantize to 1e-6, BIGINT sum, one final
-    division) so float accumulation order cannot diverge the result.
+    exact-integer trick (centroid_means) so float accumulation order
+    cannot diverge the result.
 
     r6: assignment carries the vector (ivf_assign_vec) — the
     assign→join-back sort-merge join is gone (guide §2.4)."""
-    from dstream_spark.functions.similarity import ivf_assign_vec
-
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    vecs = ivf_assign_vec(fan_out(e), cents)
-    dims = vecs.select(
-        "c_id", F.posexplode(F.col("embedding")).alias("pos", "val")
-    ).withColumn("q", F.floor(F.col("val").cast("double") * 1000000 + 0.5).cast("long"))
-    return (
-        dims.groupBy("c_id", F.col("pos").cast("int").alias("pos"))
-        .agg(F.sum("q").alias("sq"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "c_id",
-            "pos",
-            (F.col("sq").cast("double") / (F.col("n").cast("double") * 1000000.0)).alias("mean"),
-        )
-    )
+    return centroid_means(ivf_assign_vec(fan_out(e), seed_centroids(e)))
 
 
 KMEANS_ROUNDS_CAP = 10  # must match the `p.it + 1 <= 10` cap in the oracle
@@ -1334,36 +1332,14 @@ def q_emb_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive CTE that re-derives centroids from the packed
     previous assignment each step and stops on no-change or the cap.
     Output: final (vec_id, c_id) + n_rounds (rounds that changed)."""
-    from dstream_spark.functions.similarity import ivf_assign
-
     register_tables(spark, sf_dir, ("embeddings",))
     e = _materialize(
         fan_out(spark.table("embeddings")).select("vec_id", "embedding"), "km_e"
     )
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    assigned = _materialize(ivf_assign(e, cents).select("vec_id", "c_id"), "km_a0")
+    assigned = _materialize(ivf_assign(e, seed_centroids(e)).select("vec_id", "c_id"), "km_a0")
     rounds = 0
     for _ in range(KMEANS_ROUNDS_CAP):
-        dims = (
-            assigned.join(e, "vec_id")
-            .select("c_id", F.posexplode(F.col("embedding")).alias("pos", "val"))
-            .withColumn(
-                "q", F.floor(F.col("val").cast("double") * 1000000 + 0.5).cast("long")
-            )
-        )
-        means = dims.groupBy("c_id", "pos").agg(
-            (
-                F.sum("q").cast("double") / (F.count(F.lit(1)).cast("double") * 1000000.0)
-            ).alias("mean")
-        )
-        new_cents = means.groupBy("c_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mean"))),
-                lambda s: s.getField("mean"),
-            ).alias("c_vec")
-        )
+        new_cents = means_to_vectors(centroid_means(assigned.join(e, "vec_id")))
         # land the round ONCE with the previous label alongside, then
         # read the convergence scalar from the landed table — one
         # execution per round, not two (the docs_dup_clusters
@@ -1389,59 +1365,10 @@ def _ivf_trained_cells(spark: SparkSession, sf_dir: str):
     broadcast assignment against those centroids (the cell-list
     build). Returns (trained_centroids, vecs) where vecs = (vec_id,
     c_id, embedding, _n norm)."""
-    from dstream_spark.functions.similarity import ivf_assign_vec, l2_norm_fold
-
     assigned = q_emb_kmeans_converged(spark, sf_dir).select("vec_id", "c_id")
     e = spark.table("embeddings")
-    dims = (
-        assigned.join(e, "vec_id")
-        .select("c_id", F.posexplode(F.col("embedding")).alias("pos", "val"))
-        .withColumn("q", F.floor(F.col("val").cast("double") * 1000000 + 0.5).cast("long"))
-    )
-    means = dims.groupBy("c_id", "pos").agg(
-        (F.sum("q").cast("double") / (F.count(F.lit(1)).cast("double") * 1000000.0)).alias("mean")
-    )
-    trained = means.groupBy("c_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean"))),
-            lambda s: s.getField("mean"),
-        ).alias("c_vec")
-    )
-    # r6: the cell-list build carries the vector (ivf_assign_vec) —
-    # no join-back against the embedding table (guide §2.4); fold
-    # norms, matching the pair-fan-out scorer (see ivf_assign_vec)
-    vecs = ivf_assign_vec(fan_out(e), trained).withColumn(
-        "_n", l2_norm_fold(F.col("embedding"))
-    )
-    return trained, vecs
-
-
-def _cell_topk(q, vecs, k: int = 3) -> DataFrame:
-    """Top-k cosine per query over candidates sharing the query's
-    probed cell(s). q = (q_id, q_c, q_vec, _qn) — one row per probe."""
-    from pyspark.sql import Window
-
-    from dstream_spark.functions.similarity import cosine_with_norms
-
-    c = vecs.select(
-        F.col("vec_id").alias("n_id"), F.col("c_id").alias("n_c"),
-        F.col("embedding").alias("n_vec"), F.col("_n").alias("_nn"),
-    )
-    scored = (
-        c.join(F.broadcast(q), (F.col("q_c") == F.col("n_c")) & (F.col("q_id") != F.col("n_id")))
-        .withColumn(
-            "sim",
-            # fold: pair-fan-out scorer (see ivf_assign_vec, guide §4.1)
-            cosine_with_norms(
-                F.col("q_vec"), F.col("n_vec"), F.col("_qn"), F.col("_nn"), fold=True
-            ),
-        )
-        .select("q_id", "n_id", "sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
-        F.col("rank") <= k
-    )
+    trained = means_to_vectors(centroid_means(assigned.join(e, "vec_id")))
+    return trained, _cell_lists(e, trained)
 
 
 def q_emb_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1451,12 +1378,7 @@ def q_emb_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine within the query's own cell. Same scale shape as
     emb_ivf_topk: centroids broadcast, candidate generation shuffles
     only cell ids, never the corpus per query."""
-    _, vecs = _ivf_trained_cells(spark, sf_dir)
-    q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("c_id").alias("q_c"),
-        F.col("embedding").alias("q_vec"), F.col("_n").alias("_qn"),
-    )
-    return _cell_topk(q, vecs)
+    return _cell_topk(_ivf_trained_cells(spark, sf_dir)[1])
 
 
 def q_emb_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1467,10 +1389,6 @@ def q_emb_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query table. Candidate sets of the two probes are disjoint (every
     corpus vector lives in exactly one cell), so no dedup pass is
     needed. Measured recall@3 vs brute force: see BENCH/NOTES.md."""
-    from pyspark.sql import Window
-
-    from dstream_spark.functions.similarity import cosine_with_norms, l2_norm
-
     trained, vecs = _ivf_trained_cells(spark, sf_dir)
     e = spark.table("embeddings")
     qv = e.filter(F.col("vec_id") < 20).select(
@@ -1487,7 +1405,7 @@ def q_emb_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 2)
         .select("q_id", F.col("c_id").alias("q_c"), "q_vec", "_qn")
     )
-    return _cell_topk(probes, vecs)
+    return _cell_topk(vecs, probes)
 
 
 def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1522,22 +1440,7 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q_cells),
         (F.col("cell") == F.col("q_c")) & (F.col("vec_id") != F.col("q_id")),
     )
-    adc = (
-        cand_codes.join(F.broadcast(dtable), ["q_id", "s", "code"])
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dq").alias("adq"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adq").asc(), F.col("n_id").asc())
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "q_id",
-            "n_id",
-            (F.col("adq").cast("double") / 1000000.0).alias("adist"),
-            "rank",
-        )
-    )
+    return _adc_top3(cand_codes.join(F.broadcast(dtable), ["q_id", "s", "code"]))
 
 
 def q_cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1592,8 +1495,6 @@ def q_emb_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH-bucketed ANN alternative to the IVF path. Planes = the
     first 6 corpus vectors (deterministic stand-in for seeded Gaussian
     planes; 64 buckets)."""
-    from dstream_spark.functions.similarity import rp_lsh_assign
-
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
     planes = e.filter(F.col("vec_id") < 6).select(
@@ -1607,9 +1508,6 @@ def q_emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine ≥ 0.4. The bucket equi-join is the scale path (shuffle
     on lsh_bucket only); emb_near_dup_pairs is its brute-force recall
     verifier."""
-    from dstream_spark.functions.similarity import cosine_with_norms, l2_norm
-    from dstream_spark.queries_base import _materialize
-
     register_tables(spark, sf_dir, ("embeddings",))
     e = spark.table("embeddings")
     b = _materialize(
@@ -1626,19 +1524,7 @@ def q_emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("ib"), F.col("lsh_bucket").alias("bk_r"),
         F.col("embedding").alias("vb"), F.col("_n").alias("_nb"),
     )
-    return (
-        l.join(r, (F.col("bk") == F.col("bk_r")) & (F.col("ia") < F.col("ib")))
-        .withColumn(
-            # fold=True: pair-fan-out scorer — per-pair Arrow traffic
-            # would dominate the Arrow-UDF dot (see cosine_with_norms)
-            "cos",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), fold=True
-            ),
-        )
-        .filter(F.col("cos") >= 0.4)
-        .select("ia", "ib", "cos")
-    )
+    return _near_dup_pairs(l, r, (F.col("bk") == F.col("bk_r")) & (F.col("ia") < F.col("ib")))
 
 
 def q_tool_correlation_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

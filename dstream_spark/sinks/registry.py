@@ -27,12 +27,9 @@ def _memory(df: DataFrame, conf: dict) -> DataStreamWriter:
 
 
 def _merge(df: DataFrame, conf: dict) -> DataStreamWriter:
-    sink = conf.get("sink") or MergeSink(
-        conf["table_dir"],
-        keys=tuple(conf.get("keys", ("conv_id", "turn_idx"))),
-        version_col=conf.get("version_col"),
-        n_partitions=int(conf.get("n_partitions", 8)),
-    )
+    """``conf["sink"]`` is the MergeSink the epochs commit into, the
+    one ``Pipeline.init/plan/status/destroy`` manage."""
+    sink = conf["sink"]
     every = int(conf.get("compact_every", 0))
     if every > 0:
         # K1 maintenance inside the stream: fold committed batches into

@@ -17,7 +17,6 @@ maps source names → readStream builders over Spark-native sources:
   change fails the micro-batch loudly. The pinned schema is the
   contract — downstream shape never drifts silently.
 - ``rate``: the counter test source (readme.md:44-49 S5).
-- ``memory_batches``: deterministic list-of-pandas batches for tests.
 """
 
 from __future__ import annotations

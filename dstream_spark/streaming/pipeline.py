@@ -9,7 +9,7 @@ analog — docs/capability-inventory.md:69):
       "name": "transcripts",
       "source": {"type": "changefeed", "path": ...},
       "transforms": [callable(DataFrame) -> DataFrame, ...],
-      "sink": {"type": "merge", "table_dir": ..., "sink": MergeSink},
+      "sink": {"type": "merge", "sink": MergeSink(table_dir, ...)},
       "checkpoint_dir": ...,
       "trigger": {"availableNow": True} | {"processingTime": "1 second"},
     }

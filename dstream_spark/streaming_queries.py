@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import land_file, transcripts_from_events
 from dstream_spark.operators.cdc import cursor_dedup_stream
+from dstream_spark.operators.event_time import epoch_s
 from dstream_spark.queries_base import _scratch
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
@@ -80,11 +81,7 @@ def _write_feed(
         # SinglePartition sort, the shape tests/test_plan_audit.py
         # bans). Ranges are disjoint and ordered, so arrival is still
         # strictly time-ordered across batches and fully deterministic.
-        # TIMESTAMP_NTZ → epoch seconds via an intermediate TIMESTAMP
-        # cast (NTZ has no direct numeric cast); lo and the per-row
-        # value use the same session-tz interpretation, so the slice
-        # assignment is tz-independent
-        epoch = F.col("ts").cast("timestamp").cast("long")
+        epoch = epoch_s("ts")
         lo, hi = t.agg(F.min(epoch), F.max(epoch)).first()
         if lo is None:
             raise ValueError(f"empty transcripts source under {sf_dir}: nothing to feed")

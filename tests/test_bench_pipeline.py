@@ -22,18 +22,19 @@ def test_drains_report_state_rows_and_watermark_drops(spark, tmp_path):
     write_changefeed_batches(spark, pdf, feed, n_batches=4)
     write_changefeed_batches(spark, shuffled, late_feed, n_batches=4)
     n_keys = len(pdf[["conv_id", "turn_idx"]].drop_duplicates())
-    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    tracked = spark.conf.get(TRACK_ROWS, None)
-    try:
-        res = run_dedup_sink(spark, feed, str(tmp_path / "dedup"), n_partitions=2,
-                             files_per_trigger=1)
-        assert spark.conf.get(TRACK_ROWS, None) == tracked
-        win = run_window_sink(spark, feed, str(tmp_path / "window"), n_partitions=2,
-                              files_per_trigger=1)
-        late = run_dedup_sink(spark, late_feed, str(tmp_path / "late"), n_partitions=2,
-                              files_per_trigger=1)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    confs = ("spark.sql.shuffle.partitions", TRACK_ROWS)
+    before = [spark.conf.get(k, None) for k in confs]
+    assert before[0] != "2"
+    # each drain gives the session back its confs, set or unset
+    res = run_dedup_sink(spark, feed, str(tmp_path / "dedup"), n_partitions=2,
+                         files_per_trigger=1)
+    assert [spark.conf.get(k, None) for k in confs] == before
+    win = run_window_sink(spark, feed, str(tmp_path / "window"), n_partitions=2,
+                          files_per_trigger=1)
+    assert [spark.conf.get(k, None) for k in confs] == before
+    late = run_dedup_sink(spark, late_feed, str(tmp_path / "late"), n_partitions=2,
+                          files_per_trigger=1)
+    assert [spark.conf.get(k, None) for k in confs] == before
     assert res["events"] == len(pdf) and res["out_rows"] == n_keys
     assert res["rows_dropped_by_watermark"] == 0
     assert win["rows_dropped_by_watermark"] == 0

@@ -282,6 +282,25 @@ def test_cosine_topk_self_similarity(spark):
     assert out[0].n_id == 29 and abs(out[0].sim - 1.0) < 1e-6
 
 
+def test_one_cell_ivf_ranker_equals_cosine_topk(spark, sf_dir):
+    """With one IVF cell (a single centroid) every vector is a
+    candidate of every query, so the IVF cell search (fold norms) must
+    return exactly cosine_topk's top 3 (Arrow norms): both rank through
+    the one cosine_rank."""
+    from dstream_spark.fixtures.transcripts import register_tables
+    from dstream_spark.queries_ext import _cell_lists, _cell_topk
+
+    register_tables(spark, sf_dir, ("embeddings",))
+    e = spark.table("embeddings")
+    one_cell = e.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    )
+    ivf = [tuple(r) for r in _cell_topk(_cell_lists(e, one_cell)).collect()]
+    exact = [tuple(r) for r in cosine_topk(e.filter(F.col("vec_id") < 20), e, k=3).collect()]
+    assert len(exact) == 60
+    assert sorted(ivf) == sorted(exact)
+
+
 def test_multimodal_feature_extraction(spark):
     rows = [
         (0, "image", bytearray(b"\x89PNG fake"), {"w": "4", "h": "4"}),

@@ -5,7 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dstream_spark.fixtures.transcripts import generate_transcripts
-from dstream_spark.operators.dedup import dedup_keys, dedup_latest
+from dstream_spark.operators.cdc import apply_changes
+from dstream_spark.operators.dedup import dedup_keys
 from dstream_spark.operators.skew import salted_agg
 
 
@@ -55,14 +56,17 @@ def test_dedup_keys_removes_replays(spark):
     assert out.select("conv_id", "turn_idx").distinct().count() == 4 * 10
 
 
-def test_dedup_latest_prefers_higher_version(spark):
+def test_apply_changes_prefers_higher_version(spark):
+    """An insert/update feed (no _change_type column): the latest
+    version per key wins and nothing is dropped as a delete."""
     pdf = generate_transcripts(n_convs=2, turns_per_conv=4)
     df = spark.createDataFrame(pdf)
     v1 = df.withColumn("_commit_version", F.lit(1))
     v2 = df.withColumn("_commit_version", F.lit(2)).withColumn(
         "text", F.concat(F.col("text"), F.lit(" v2"))
     )
-    out = dedup_latest(v1.unionAll(v2))
+    assert "_change_type" not in v1.columns
+    out = apply_changes(v1.unionAll(v2))
     assert out.count() == 8
     assert out.filter(~F.col("text").endswith(" v2")).count() == 0
 

@@ -22,6 +22,29 @@ def test_session_gap_golden(spark):
     assert list(out["session_idx"]) == [1, 2, 3]
 
 
+def test_sessions_split_across_a_dst_change(spark):
+    """NTZ event time denotes UTC, so its epoch seconds do not depend on
+    the session zone: 01:30 -> 03:30 on New York's spring-forward day is
+    7200 s (a cast through the session zone reads 3600 s), and a 3600 s
+    gap splits the pair."""
+    from dstream_spark.operators.event_time import epoch_s
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.sql(
+            "SELECT 'c0' AS conv_id, * FROM VALUES "
+            "(0, TIMESTAMP_NTZ '2024-03-10 01:30:00'), "
+            "(1, TIMESTAMP_NTZ '2024-03-10 03:30:00') AS t(turn_idx, ts)"
+        )
+        span = df.select(F.max(epoch_s("ts")) - F.min(epoch_s("ts"))).first()[0]
+        sessions = sessionize_batch(df, gap_seconds=3600).orderBy("session_idx").collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert span == 7200
+    assert [r.n_turns for r in sessions] == [1, 1]
+
+
 def test_builtin_session_window_matches_batch_sessionize(spark):
     pdf = generate_transcripts(
         n_convs=6, turns_per_conv=20, session_gap_every=5, session_gap_s=7200.0
